@@ -327,16 +327,6 @@ object EncodePipeline {
 
   private def runGuarded(spark: SparkSession, tokens0: DataFrame, cfg: Config,
       runId: String, t0: Long): RunSummary = {
-    // phase timing behind -Dgraft.pipeline.verbose: stderr-only, and the
-    // one behavior change (an extra materializing count on the encoded
-    // cache, to split encode cost from write cost) happens only when on
-    val verbose = sys.props.get("graft.pipeline.verbose").nonEmpty
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (verbose) {
-      val now = System.nanoTime()
-      System.err.println(f"[graft] pipeline phase=$name secs=${(now - tPhase) / 1e9}%.2f")
-      tPhase = now
-    }
     // F6 batch reorg guard: docs within `reorgBuffer` of the input head
     // (max doc_id) are excluded from this run's plan and counted as
     // deferred — the batch analog of the reference's
@@ -362,7 +352,6 @@ object EncodePipeline {
         }
       }
 
-    phase("reorg_guard")
     // part_keys are positional (source, salt, bin) coordinates: every run
     // against this sink must use the same geometry or identical docs land
     // under fresh keys and resume sees nothing to skip (silent dupes).
@@ -410,160 +399,198 @@ object EncodePipeline {
         (s, b)
     }
 
-    phase("salt_resolve")
-    // CURRENT view (latest run per part_key): on an append-only sink this
-    // is the committed manifest verbatim; after an overwrite it is the
-    // supersession view, so the drift guard below compares against the
-    // winning run's doc counts, not a double-counting sum over history
-    val committedMan = ManifestSink.currentManifest(spark, cfg.outDir)
-    val committedKeysDf = committedMan.select("part_key").distinct()
-    val nCommitted = committedKeysDf.count()
-
-    // Per-doc partition assignments (slim metadata) are persisted so the
-    // plan/skip/limit accounting and the key join never re-derive the
-    // input; the heavy arrays are read exactly once per run, in the encode
-    // pass (the reference's plan-then-collect shape, freeze.rs:26-125).
-    phase("committed_read")
-    val plannedParts = plan(tokens, cfg, salts, binTokens).persist(StorageLevel.MEMORY_AND_DISK)
-    val plannedKeys = plannedParts.select("part_key").distinct()
-    val nPlanned = plannedKeys.count()
-    // resume: skip already-committed partitions (freeze.rs:96-109 analog);
-    // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
-    // the re-committed keys supersede via the reader's latest-run-per-key
-    // resolution, so no anti-join and no drift guard (re-encoding after an
-    // input/config change is the point)
-    phase("plan_persist")
-    if (cfg.overwrite && nCommitted > 0) {
-      // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
-      // so a committed key absent from the new plan would silently stay
-      // live — ghost rows from deleted docs, duplicates from docs that
-      // shifted into earlier bins. The advertised use case (re-encode
-      // after a codec/config change over the SAME snapshot, or a grown
-      // snapshot) always plans a superset of the committed keys; a
-      // shrunk/reshaped input must go to a fresh outDir. On a
-      // prefix-scoped sink (streaming batches), an overwrite with a
-      // partPrefix only claims THAT prefix's keys, so the guard scopes
-      // to them — other prefixes are different input slices, not ghost
-      // risks. An UNprefixed overwrite still guards every committed key
-      // (loud on a mixed sink: re-run with the matching partPrefix).
-      val guardKeys =
-        if (cfg.partPrefix.nonEmpty)
-          committedKeysDf.filter(col("part_key").startsWith(cfg.partPrefix + "/"))
-        else committedKeysDf
-      val uncovered = guardKeys
-        .join(plannedKeys.hint("SHUFFLE_HASH"), Seq("part_key"), "left_anti")
-        .count()
-      if (uncovered > 0) {
-        plannedParts.unpersist()
-        throw new IllegalStateException(
-          s"overwrite coverage guard: $uncovered committed part_key(s) " +
-            (if (cfg.partPrefix.nonEmpty) s"under prefix '${cfg.partPrefix}' " else "") +
-            "are absent from the new plan. Overwrite supersedes key by key, " +
-            "so those keys' old rows would silently stay visible next to " +
-            "the re-encoded corpus. Either the input shrank/re-binned " +
-            "(re-encode into a fresh outDir) or this is a prefix-scoped " +
-            "sink (re-run with the matching partPrefix).")
-      }
+    // every cache the run makes; the one finally below releases them on
+    // every exit, so long-lived sessions strand no blocks
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      cached += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    var todoKeys =
-      if (cfg.overwrite) plannedKeys
-      else resumeAntiJoin(plannedKeys, committedKeysDf, nCommitted,
-        cfg.broadcastKeyLimit)
-    // fresh sink (nothing committed): the anti-join is an identity, so the
-    // todo count equals the planned count — skip the extra job
-    val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
-    val nSkipped = nPlanned - nTodo // previously committed (≠ deferred below)
-
-    if (cfg.strictResume && nSkipped > 0) {
-      // positional bin keys are only stable for an identical input
-      // snapshot: if the input grew, docs appended to a committed trailing
-      // bin would be silently skipped forever. Fail fast on doc-count
-      // drift for any key we are about to skip.
-      val plannedCounts = plannedParts.groupBy("part_key")
-        .agg(count(lit(1)).as("n_planned"))
-      val committedCounts = committedMan.groupBy("part_key")
-        .agg(sum("n_docs").as("n_committed"))
-      val drift = plannedCounts.join(committedCounts, Seq("part_key"))
-        .filter(col("n_planned") =!= col("n_committed")).count()
-      if (drift > 0) {
-        plannedParts.unpersist()
-        throw new IllegalStateException(
-          s"resume guard: $drift committed part_key(s) have a different doc " +
-            "count in the current input. Positional bin keys require an " +
-            "identical input snapshot; re-encode into a fresh outDir or " +
-            "route incremental input through partPrefix (streaming path).")
-      }
-    }
-
-    if (cfg.maxPartitionsPerRun != Int.MaxValue) {
-      todoKeys = todoKeys.orderBy("part_key").limit(cfg.maxPartitionsPerRun)
-    }
-
-    if (cfg.dryRun) {
-      // --dry (freeze.rs:43-46): return the full plan accounting — the
-      // same planned/skipped/deferred and todo doc/token totals the real
-      // run would report — computed from the slim plan metadata only. The
-      // heavy arrays are never read, encode never runs, the sink is never
-      // touched (schema preview is the static [[OutputSchema]]).
-      val todoStats = plannedParts
-        .join(todoKeys, Seq("part_key"), "left_semi")
-        .agg(count(lit(1)), coalesce(sum(col("n_tok").cast("long")), lit(0L)))
-        .collect()(0)
-      plannedParts.unpersist()
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      return RunSummary(runId, nPlanned, nSkipped, 0L,
-        todoStats.getLong(0), todoStats.getLong(1), todoStats.getLong(1) * 4,
-        0L, wallMs, ManifestSink.readErrorReports(cfg.outDir).size.toLong,
-        nDeferred)
-    }
-    val todoSide =
-      if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
-        broadcast(todoKeys)
-      else todoKeys
-
-    // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
-    // exchange (the doc_id join against the slim key table); encoding runs
-    // map-side in the same stage, so the repartition-by-partition-key that
-    // controls file layout moves only the compressed blobs (~2.5-5× less).
-    val docTodo = plannedParts
-      .join(todoSide, Seq("part_key"), "left_semi")
-      .select("doc_id", "salt", "bin", "part_key")
-    // SHUFFLE_HASH on the slim side: a sort-merge join would SORT the heavy
-    // array side (observed 4× pipeline regression when the planner flipped
-    // to SMJ); hashing the per-partition metadata keeps the arrays
-    // sort-free through their single exchange.
-    // enc_task/enc_ns are evaluated in the same map-side projection as the
-    // encode itself (below the exchange), so per-task first-row→last-row
-    // spans measure REAL encode wall time (round 1 wrote a driver-side
-    // constant here).
-    // blob_len is computed in the same map-side projection as the encode:
-    // the manifest-stats aggregate below then reads an 8-byte column from
-    // the columnar cache instead of deserializing every blob's bytes a
-    // second time just to take length() (phase-profiled at ~30% of the
-    // warm pipeline wall before this). The column is cache-only — the
-    // data-write select never includes it, so the sink schema is
-    // unchanged.
-    val encoded = tokens
-      .join(docTodo.hint("SHUFFLE_HASH"), Seq("doc_id"))
-      .withColumn("blob", expr("encode_auto(tokens)"))
-      .withColumn("blob_len", length(col("blob")).cast("long"))
-      .withColumn("codec", expr("codec_of(blob)"))
-      .withColumn("enc_task", spark_partition_id())
-      .withColumn("enc_ns", expr("now_nanos()"))
-      .withColumn("run_id", lit(runId))
-      .drop("tokens")
-      .repartition(col("part_key"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    phase("resume_join")
-    if (verbose) { encoded.count(); phase("encode_materialize") }
-    // failure-safe cache cleanup: the slim/manifest persists happen inside
-    // the try; without these refs a throw between persist and totals would
-    // strand their blocks for the session's lifetime (runAll/streaming/
-    // bench sessions run many pipelines)
-    var slimRef: DataFrame = null
-    var manifestRef: DataFrame = null
     try {
+      // CURRENT view (latest run per part_key): on an append-only sink this
+      // is the committed manifest verbatim; after an overwrite it is the
+      // supersession view, so the drift guard below compares against the
+      // winning run's doc counts, not a double-counting sum over history.
+      // Persisted unless the sink is fresh (nothing to scan): the committed
+      // count, the anti-join and the drift guard share one scan. One row
+      // per part_key, so no distinct is needed.
+      val current = ManifestSink.currentManifest(spark, cfg.outDir)
+      val committedMan =
+        if (ManifestSink.committedRunIds(cfg.outDir).isEmpty) current else persisted(current)
+      val committedKeysDf = committedMan.select("part_key")
+      val nCommitted = committedKeysDf.count()
+
+      // Per-doc partition assignments (slim metadata) are persisted so the
+      // plan/skip/limit accounting and the key join never re-derive the
+      // input; the heavy arrays are read exactly once per run, in the encode
+      // pass (the reference's plan-then-collect shape, freeze.rs:26-125).
+      val plannedParts = persisted(plan(tokens, cfg, salts, binTokens))
+      val plannedKeys = plannedParts.select("part_key").distinct()
+      val nPlanned = plannedKeys.count()
+      // resume: skip already-committed partitions (freeze.rs:96-109 analog);
+      // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
+      // the re-committed keys supersede via the reader's latest-run-per-key
+      // resolution, so no anti-join and no drift guard (re-encoding after an
+      // input/config change is the point)
+      if (cfg.overwrite && nCommitted > 0) {
+        // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
+        // so a committed key absent from the new plan would silently stay
+        // live — ghost rows from deleted docs, duplicates from docs that
+        // shifted into earlier bins. The advertised use case (re-encode
+        // after a codec/config change over the SAME snapshot, or a grown
+        // snapshot) always plans a superset of the committed keys; a
+        // shrunk/reshaped input must go to a fresh outDir. On a
+        // prefix-scoped sink (streaming batches), an overwrite with a
+        // partPrefix only claims THAT prefix's keys, so the guard scopes
+        // to them — other prefixes are different input slices, not ghost
+        // risks. An UNprefixed overwrite still guards every committed key
+        // (loud on a mixed sink: re-run with the matching partPrefix).
+        val guardKeys =
+          if (cfg.partPrefix.nonEmpty)
+            committedKeysDf.filter(col("part_key").startsWith(cfg.partPrefix + "/"))
+          else committedKeysDf
+        val uncovered = guardKeys
+          .join(plannedKeys.hint("SHUFFLE_HASH"), Seq("part_key"), "left_anti")
+          .count()
+        if (uncovered > 0)
+          throw new IllegalStateException(
+            s"overwrite coverage guard: $uncovered committed part_key(s) " +
+              (if (cfg.partPrefix.nonEmpty) s"under prefix '${cfg.partPrefix}' " else "") +
+              "are absent from the new plan. Overwrite supersedes key by key, " +
+              "so those keys' old rows would silently stay visible next to " +
+              "the re-encoded corpus. Either the input shrank/re-binned " +
+              "(re-encode into a fresh outDir) or this is a prefix-scoped " +
+              "sink (re-run with the matching partPrefix).")
+      }
+      var todoKeys =
+        if (cfg.overwrite) plannedKeys
+        else resumeAntiJoin(plannedKeys, committedKeysDf, nCommitted,
+          cfg.broadcastKeyLimit)
+      // fresh sink (nothing committed): the anti-join is an identity, so the
+      // todo count equals the planned count — skip the extra job
+      val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
+      val nSkipped = nPlanned - nTodo // previously committed (≠ deferred below)
+
+      if (cfg.strictResume && nSkipped > 0) {
+        // positional bin keys are only stable for an identical input
+        // snapshot: if the input grew, docs appended to a committed trailing
+        // bin would be silently skipped forever. Fail fast on doc-count
+        // drift for any key we are about to skip.
+        val plannedCounts = plannedParts.groupBy("part_key")
+          .agg(count(lit(1)).as("n_planned"))
+        val committedCounts = committedMan.select(col("part_key"), col("n_docs").as("n_committed"))
+        val drift = plannedCounts.join(committedCounts, Seq("part_key"))
+          .filter(col("n_planned") =!= col("n_committed")).count()
+        if (drift > 0)
+          throw new IllegalStateException(
+            s"resume guard: $drift committed part_key(s) have a different doc " +
+              "count in the current input. Positional bin keys require an " +
+              "identical input snapshot; re-encode into a fresh outDir or " +
+              "route incremental input through partPrefix (streaming path).")
+      }
+
+      if (cfg.maxPartitionsPerRun != Int.MaxValue) {
+        todoKeys = todoKeys.orderBy("part_key").limit(cfg.maxPartitionsPerRun)
+      }
+
+      def summary(nParts: Long, nDocs: Long, nTokens: Long, rawBytes: Long,
+          encodedBytes: Long): RunSummary =
+        RunSummary(runId, nPlanned, nSkipped, nParts, nDocs, nTokens, rawBytes,
+          encodedBytes, (System.nanoTime() - t0) / 1000000,
+          ManifestSink.readErrorReports(cfg.outDir).size.toLong, nDeferred)
+
+      if (cfg.dryRun) {
+        // --dry (freeze.rs:43-46): return the full plan accounting — the
+        // same planned/skipped/deferred and todo doc/token totals the real
+        // run would report — computed from the slim plan metadata only. The
+        // heavy arrays are never read, encode never runs, the sink is never
+        // touched (schema preview is the static [[OutputSchema]]).
+        val todoStats = plannedParts
+          .join(todoKeys, Seq("part_key"), "left_semi")
+          .agg(count(lit(1)), coalesce(sum(col("n_tok").cast("long")), lit(0L)))
+          .collect()(0)
+        return summary(0L, todoStats.getLong(0), todoStats.getLong(1),
+          todoStats.getLong(1) * 4, 0L)
+      }
+
+      // The commit tail of both exits below: report, geometry pin, atomic
+      // publish. Pin the plan geometry at COMMIT time, not run start: a
+      // first run that fails before committing anything must not
+      // permanently pin salt/bin config on an empty sink (round-2 ADVICE).
+      // Write-once — a stale pin is cleared only by the explicit
+      // ManifestSink.clearStalePin (see the salts resolution above).
+      // Re-validate after pinning — if a concurrent first run with
+      // different geometry won the pin race, this run's data stays
+      // invisible (no marker).
+      def commit(summary: RunSummary): RunSummary = {
+        ManifestSink.pinPlanConfig(cfg.outDir, salts, binTokens)
+        ManifestSink.pinnedPlanConfig(cfg.outDir) match {
+          case Some((ps, pb)) if ps == salts && pb == binTokens => ()
+          case other => throw new IllegalStateException(
+            s"plan-geometry pin race lost: sink pinned $other but this run " +
+              s"used (saltBuckets=$salts, targetBinTokens=$binTokens); " +
+              "not committing (data stays invisible). Re-run to resume.")
+        }
+        // atomic publish — everything above is invisible until this succeeds
+        ManifestSink.commitRun(cfg.outDir, runId,
+          summaryJson(summary, cfg, salts, binTokens))
+        // the commit marker is the attempt's terminal state: the in-flight
+        // marker has served its purpose (a crash past this point loses no
+        // observability — the run IS committed). Best-effort (NonFatal only
+        // — VM errors and interrupts still propagate): the run is already
+        // committed and visible, so an IO error deleting an observability
+        // marker must not fail the run (and must not reach the error path,
+        // which would record a bogus failure report for a committed run).
+        // If the delete does fail, the marker's run_id is committed, and
+        // gcOrphans reaps exactly that leftover case.
+        try ManifestSink.clearInflight(cfg.outDir, runId)
+        catch { case scala.util.control.NonFatal(_) => () }
+        summary
+      }
+
+      // nothing left to do (every planned part committed, the drift guard
+      // passed): commit the empty run without encoding, writing or
+      // aggregating anything — the manifest alone decided it
+      if (nTodo == 0) return commit(summary(0L, 0L, 0L, 0L, 0L))
+
+      val todoSide =
+        if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
+          broadcast(todoKeys)
+        else todoKeys
+
+      // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
+      // exchange (the doc_id join against the slim key table); encoding runs
+      // map-side in the same stage, so the repartition-by-partition-key that
+      // controls file layout moves only the compressed blobs (~2.5-5× less).
+      val docTodo = plannedParts
+        .join(todoSide, Seq("part_key"), "left_semi")
+        .select("doc_id", "salt", "bin", "part_key")
+      // SHUFFLE_HASH on the slim side: a sort-merge join would SORT the heavy
+      // array side (observed 4× pipeline regression when the planner flipped
+      // to SMJ); hashing the per-partition metadata keeps the arrays
+      // sort-free through their single exchange.
+      // enc_task/enc_ns are evaluated in the same map-side projection as the
+      // encode itself (below the exchange), so per-task first-row→last-row
+      // spans measure REAL encode wall time (round 1 wrote a driver-side
+      // constant here).
+      // blob_len is computed in the same map-side projection as the encode:
+      // the manifest-stats aggregate below then reads an 8-byte column from
+      // the columnar cache instead of deserializing every blob's bytes a
+      // second time just to take length() (phase-profiled at ~30% of the
+      // warm pipeline wall before this). The column is cache-only — the
+      // data-write select never includes it, so the sink schema is
+      // unchanged.
+      val encoded = persisted(tokens
+        .join(docTodo.hint("SHUFFLE_HASH"), Seq("doc_id"))
+        .withColumn("blob", expr("encode_auto(tokens)"))
+        .withColumn("blob_len", length(col("blob")).cast("long"))
+        .withColumn("codec", expr("codec_of(blob)"))
+        .withColumn("enc_task", spark_partition_id())
+        .withColumn("enc_ns", expr("now_nanos()"))
+        .withColumn("run_id", lit(runId))
+        .drop("tokens")
+        .repartition(col("part_key")))
+
       encoded
         .withColumn("part_stub", partStub(cfg))
         .select("part_key", "run_id", "doc_id", "source", "salt", "bin",
@@ -579,7 +606,6 @@ object EncodePipeline {
         .option("compression", cfg.parquetCodec)
         .parquet(ManifestSink.dataDir(cfg.outDir))
 
-      phase("data_write")
       // per-partition lineage + metrics rows (reports.rs / summaries.rs
       // analog). ONE scan of the encoded cache produces a slim
       // per-(part_key, task, codec) intermediate; the manifest rows, the
@@ -589,16 +615,14 @@ object EncodePipeline {
       // spilled to disk, for metadata). The scan itself is column-pruned
       // to slim columns only: g_bytes folds the precomputed blob_len, so
       // the blob column's bytes are never touched here.
-      val slim = encoded
+      val slim = persisted(encoded
         .groupBy("part_key", "source", "salt", "bin", "run_id", "enc_task", "codec")
         .agg(
           count(lit(1)).as("g_docs"),
           sum(col("n_tok").cast("long")).as("g_tokens"),
           sum(col("blob_len")).as("g_bytes"),
           min("enc_ns").as("g_min_ns"),
-          max("enc_ns").as("g_max_ns"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      slimRef = slim
+          max("enc_ns").as("g_max_ns")))
       val perCodec = slim
         .groupBy("part_key", "source", "salt", "bin", "run_id", "codec")
         .agg(sum("g_docs").as("c_docs"), sum("g_tokens").as("c_tokens"),
@@ -625,66 +649,20 @@ object EncodePipeline {
         .groupBy("part_key")
         .agg(ceil(sum(col("task_wall_ms") * col("kt_tokens") / greatest(col("task_tokens"), lit(1L))))
           .cast("long").as("wall_ms"))
-      val manifest = manifestBase.join(wallPerKey, Seq("part_key"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      manifestRef = manifest
+      val manifest = persisted(manifestBase.join(wallPerKey, Seq("part_key")))
 
       manifest
         .select(ManifestSink.ManifestSchemaCols.map(col): _*)
         .write.mode("append").partitionBy("run_id")
         .parquet(ManifestSink.manifestDir(cfg.outDir))
 
-      phase("manifest_write")
       val totals = manifest.agg(
         count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
         coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
         coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
-      val nParts = totals.getLong(0)
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      val priorErrors = ManifestSink.readErrorReports(cfg.outDir).size.toLong
-      val summary = RunSummary(runId, nPlanned, nSkipped, nParts,
-        totals.getLong(1), totals.getLong(2), totals.getLong(3),
-        totals.getLong(4), wallMs, priorErrors, nDeferred)
-
-      // Pin the plan geometry at COMMIT time, not run start: a first run
-      // that fails before committing anything must not permanently pin
-      // salt/bin config on an empty sink (round-2 ADVICE). Write-once —
-      // a stale pin is cleared only by the explicit
-      // ManifestSink.clearStalePin (see the salts resolution above).
-      // Re-validate after pinning — if a concurrent first run with
-      // different geometry won the pin race, this run's data stays
-      // invisible (no marker).
-      ManifestSink.pinPlanConfig(cfg.outDir, salts, binTokens)
-      ManifestSink.pinnedPlanConfig(cfg.outDir) match {
-        case Some((ps, pb)) if ps == salts && pb == binTokens => ()
-        case other => throw new IllegalStateException(
-          s"plan-geometry pin race lost: sink pinned $other but this run " +
-            s"used (saltBuckets=$salts, targetBinTokens=$binTokens); " +
-            "not committing (data stays invisible). Re-run to resume.")
-      }
-
-      phase("totals_pin")
-      // atomic publish — everything above is invisible until this succeeds
-      ManifestSink.commitRun(cfg.outDir, runId,
-        summaryJson(summary, cfg, salts, binTokens))
-      // the commit marker is the attempt's terminal state: the in-flight
-      // marker has served its purpose (a crash past this point loses no
-      // observability — the run IS committed). Best-effort (NonFatal only
-      // — VM errors and interrupts still propagate): the run is already
-      // committed and visible, so an IO error deleting an observability
-      // marker must not fail the run (and must not reach the error path,
-      // which would record a bogus failure report for a committed run).
-      // If the delete does fail, the marker's run_id is committed, and
-      // gcOrphans reaps exactly that leftover case.
-      try ManifestSink.clearInflight(cfg.outDir, runId)
-      catch { case scala.util.control.NonFatal(_) => () }
-      summary
-    } finally {
-      encoded.unpersist()
-      plannedParts.unpersist()
-      if (slimRef != null) slimRef.unpersist()
-      if (manifestRef != null) manifestRef.unpersist()
-    }
+      commit(summary(totals.getLong(0), totals.getLong(1), totals.getLong(2),
+        totals.getLong(3), totals.getLong(4)))
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Run to completion (multiple bounded runs if maxPartitionsPerRun set). */

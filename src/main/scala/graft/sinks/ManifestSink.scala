@@ -50,6 +50,22 @@ object ManifestSink {
       StructField("source", StringType), StructField("part_stub", StringType)))
   }
 
+  /** Fixed schema of manifest rows as a read serves them: file columns in
+    * [[ManifestSchemaCols]] order, then the `run_id` partition column. Reads
+    * pass it, so no footer-inference job runs; PipelineSpec pins it to the
+    * schema Spark infers from a manifest the pipeline wrote.
+    */
+  val ManifestSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("part_key", StringType), StructField("source", StringType),
+      StructField("salt", IntegerType), StructField("bin", LongType),
+      StructField("n_docs", LongType), StructField("n_tokens", LongType),
+      StructField("raw_bytes", LongType), StructField("encoded_bytes", LongType),
+      StructField("codec", StringType), StructField("wall_ms", LongType),
+      StructField("run_id", StringType)))
+  }
+
   def dataDir(root: String): String = s"$root/data"
   def manifestDir(root: String): String = s"$root/manifest"
   private def commitsDir(root: String): Path = Paths.get(root, "commits")
@@ -111,25 +127,18 @@ object ManifestSink {
   def committedManifest(spark: SparkSession, root: String,
       isinRunLimit: Int = IsinRunLimit): DataFrame = {
     val runs = committedRunIds(root)
-    if (runs.isEmpty) {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("part_key", StringType), StructField("source", StringType),
-        StructField("salt", IntegerType), StructField("bin", LongType),
-        StructField("run_id", StringType), StructField("n_docs", LongType),
-        StructField("n_tokens", LongType), StructField("raw_bytes", LongType),
-        StructField("encoded_bytes", LongType), StructField("codec", StringType),
-        StructField("wall_ms", LongType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else if (runs.size <= isinRunLimit) {
-      // run_id is a partition dir of the manifest dataset -> pruned scan
-      spark.read.parquet(manifestDir(root))
-        .filter(col("run_id").isin(runs: _*))
+    // no manifest dir: only empty runs were committed (they write no files)
+    if (runs.isEmpty || !Files.isDirectory(Paths.get(manifestDir(root)))) {
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ManifestSchema)
     } else {
-      import spark.implicits._
-      val runsDf = runs.toDF("run_id")
-      spark.read.parquet(manifestDir(root))
-        .join(broadcast(runsDf), Seq("run_id"), "left_semi")
+      val man = spark.read.schema(ManifestSchema).parquet(manifestDir(root))
+      // run_id is a partition dir of the manifest dataset -> pruned scan
+      if (runs.size <= isinRunLimit) man.filter(col("run_id").isin(runs: _*))
+      else {
+        import spark.implicits._
+        man.join(broadcast(runs.toDF("run_id")), Seq("run_id"), "left_semi")
+      }
     }
   }
 
@@ -203,7 +212,6 @@ object ManifestSink {
     // dir, marker last — the same crash-safe order as the main path.
     // Deliberately-empty commits (report says "committed":0) are kept —
     // they are run history, not residue.
-    val committedRe = """"committed":(\d+)""".r
     val idRe2 = """"run_id":"([^"]+)"""".r
     def manifestRowless(id: String): Boolean = {
       val d = Paths.get(manifestDir(root), s"run_id=$id")
@@ -213,7 +221,7 @@ object ManifestSink {
     }
     val leaked = readCommitSummaries(root).flatMap { js =>
       for {
-        m <- committedRe.findFirstMatchIn(js) if m.group(1).toLong > 0
+        m <- CommittedField.findFirstMatchIn(js) if m.group(1).toLong > 0
         im <- idRe2.findFirstMatchIn(js) if manifestRowless(im.group(1))
       } yield im.group(1)
     }
@@ -239,25 +247,39 @@ object ManifestSink {
     * `broadcastKeyLimit` pairs the semi-join degrades from a broadcast to
     * a SHUFFLE_HASH join — hash side is still the slim key table, and the
     * heavy blob side is never sorted (an SMJ here would sort the arrays:
-    * the documented 4× pipeline regression).
+    * the documented 4× pipeline regression). The pair count is bounded by
+    * [[committedKeyBound]], read from the commit reports, not counted.
     */
   def readCommitted(spark: SparkSession, root: String,
       broadcastKeyLimit: Long = 1L << 20): DataFrame = {
-    val committed = currentManifest(spark, root).select("part_key", "run_id")
     if (!Files.isDirectory(Paths.get(dataDir(root)))) {
       // nothing ever (successfully) written — e.g. every attempt so far
       // errored before its first file landed
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DataSchema)
     } else {
+      val committed = currentManifest(spark, root).select("part_key", "run_id")
       val side =
-        if (committed.count() <= broadcastKeyLimit) broadcast(committed)
+        if (committedKeyBound(root) <= broadcastKeyLimit) broadcast(committed)
         else committed.hint("SHUFFLE_HASH")
       // explicit schema: a dataDir whose files were all garbage-collected
       // (dirs remain) must read as empty, not fail schema inference
       spark.read.schema(DataSchema).parquet(dataDir(root))
         .join(side, Seq("part_key", "run_id"), "left_semi")
     }
+  }
+
+  private val CommittedField = """"committed":(\d+)""".r
+
+  /** Upper bound on the CURRENT part_key count from the commit reports
+    * alone: each current key is counted in its winning run's report, so the
+    * sum of the `"committed"` counts bounds it (superseded keys only loosen
+    * it). A report without the field makes the bound Long.MaxValue.
+    */
+  def committedKeyBound(root: String): Long = {
+    val counts = readCommitSummaries(root)
+      .map(js => CommittedField.findFirstMatchIn(js).map(_.group(1).toLong))
+    if (counts.forall(_.isDefined)) counts.flatten.sum else Long.MaxValue
   }
 
   /** Atomically publish a run: write the marker JSON via tmp + rename

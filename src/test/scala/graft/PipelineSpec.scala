@@ -39,6 +39,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(sums.getLong(2) < sums.getLong(1), "encoded must beat raw int32 bytes")
     // run report published atomically
     assert(ManifestSink.readCommitSummaries(out).nonEmpty)
+    // readers pass a fixed manifest schema instead of inferring it: it must
+    // be the schema Spark infers from what the pipeline wrote
+    assert(spark.read.parquet(ManifestSink.manifestDir(out)).schema ==
+      ManifestSink.ManifestSchema)
   }
 
   test("resume: bounded runs commit incrementally with zero duplicates") {
@@ -61,6 +65,72 @@ class PipelineSpec extends AnyFunSuite {
     val again = EncodePipeline.run(spark, tokens, cfg.copy(maxPartitionsPerRun = Int.MaxValue))
     assert(again.committed == 0 && again.skipped == again.planned)
     assert(ManifestSink.readCommitted(spark, out).count() == 500)
+  }
+
+  test("no-op resume commits an empty run and leaves data and manifest files untouched") {
+    val out = freshDir()
+    val tokens = Tokens.synthetic(spark, 200)
+    val cfg = cfgBase.copy(outDir = out)
+    val first = EncodePipeline.run(spark, tokens, cfg)
+    def files(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Seq(ManifestSink.dataDir(out), ManifestSink.manifestDir(out)).flatMap { d =>
+        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+        try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { p =>
+          p.toString -> (java.nio.file.Files.size(p),
+            java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        }.toList
+        finally w.close()
+      }.toMap
+    }
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    val s = EncodePipeline.run(spark, tokens, cfg)
+    assert(s.planned == first.planned && s.skipped == s.planned)
+    assert(s.committed == 0 && s.nDocs == 0 && s.nTokens == 0 &&
+      s.rawBytes == 0 && s.encodedBytes == 0)
+    assert(s.deferred == 0 && s.priorFailedAttempts == 0)
+    // the empty commit marker is written, its report carries the summary,
+    // and the attempt reached its terminal state
+    assert(ManifestSink.committedRunIds(out) == Seq(first.runId, s.runId))
+    val report = ManifestSink.readCommitSummaries(out).last
+    Seq(s""""run_id":"${s.runId}"""", s""""planned":${s.planned}""",
+      s""""skipped":${s.planned}""", """"committed":0""", """"n_docs":0""",
+      """"n_tokens":0""", """"raw_bytes":0""", """"encoded_bytes":0""")
+      .foreach(f => assert(report.contains(f), report))
+    assert(ManifestSink.readInflightMarkers(out).isEmpty)
+    // nothing under data/ or manifest/ was created or rewritten
+    assert(files() == before)
+    assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
+  }
+
+  test("the resume guard runs before the no-op exit: all keys committed, counts drifted") {
+    val out = freshDir()
+    // one bin per (source, salt): dropping a doc keeps the key set, so the
+    // anti-join leaves nothing to do while one key's doc count drifts
+    val cfg = cfgBase.copy(outDir = out, targetBinTokens = 1L << 30, saltBuckets = 2)
+    EncodePipeline.run(spark, Tokens.synthetic(spark, 200), cfg)
+    val dropped = Tokens.synthetic(spark, 200).filter(col("doc_id") =!= 0)
+    val dry = EncodePipeline.run(spark, dropped, cfg.copy(dryRun = true, strictResume = false))
+    assert(dry.skipped == dry.planned && dry.nDocs == 0, dry)
+    val e = intercept[IllegalStateException](EncodePipeline.run(spark, dropped, cfg))
+    assert(e.getMessage.contains("resume guard"), e.getMessage)
+    assert(ManifestSink.committedRunIds(out).size == 1)
+  }
+
+  test("no-op resumes and guard failures release every cache they make") {
+    val out = freshDir()
+    val tokens = Tokens.synthetic(spark, 200)
+    val cfg = cfgBase.copy(outDir = out, targetBinTokens = 1L << 30, saltBuckets = 2)
+    EncodePipeline.run(spark, tokens, cfg)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 5).foreach { _ =>
+      assert(EncodePipeline.run(spark, tokens, cfg).committed == 0)
+    }
+    intercept[IllegalStateException] {
+      EncodePipeline.run(spark, tokens.filter(col("doc_id") =!= 0), cfg)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("orphans from uncommitted runs stay invisible") {
@@ -612,10 +682,19 @@ class PipelineSpec extends AnyFunSuite {
     // drift guard compares against the WINNING run's counts)
     val s3 = EncodePipeline.run(spark, tokens, cfg)
     assert(s3.committed == 0 && s3.skipped == s3.planned)
+    // readCommitted's broadcast guard reads an upper bound off the commit
+    // reports; superseded keys loosen it, never push it below the truth
+    def boundHolds(): Unit = {
+      val current = ManifestSink.currentManifest(spark, out).count()
+      assert(ManifestSink.committedKeyBound(out) >= current,
+        s"bound ${ManifestSink.committedKeyBound(out)} < $current current keys")
+    }
+    boundHolds()
 
     // the superseded first run is reclaimable; readers are unaffected
     assert(ManifestSink.supersededRunIds(spark, out) == Seq(s1.runId))
     val gc = ManifestSink.gcSuperseded(spark, out)
+    boundHolds()
     assert(gc.dataFilesDeleted > 0 && gc.manifestDirsDeleted == 1)
     assert(ManifestSink.supersededRunIds(spark, out).isEmpty)
     assert(!ManifestSink.committedRunIds(out).contains(s1.runId))
@@ -625,6 +704,7 @@ class PipelineSpec extends AnyFunSuite {
     // max+1, never count-based — an id reuse would corrupt supersession)
     val s4 = EncodePipeline.run(spark, tokens, cfg.copy(overwrite = true))
     assert(s4.runId > s2.runId)
+    boundHolds()
 
     // overwrite is single-run: runAll refuses it
     intercept[IllegalArgumentException] {

@@ -81,6 +81,15 @@ class PlanSpec extends AnyFunSuite {
     assert(big.contains("ShuffledHashJoin"), big)
     assert(big.contains("LeftSemi"), big)
     assert(!big.contains("SortMergeJoin"), big)
+    // the guard reads its key count off the commit reports (no count job):
+    // on a single-run sink the bound is exact, and the limit cuts at it
+    val bound = graft.sinks.ManifestSink.committedKeyBound(out)
+    assert(bound == graft.sinks.ManifestSink.currentManifest(spark, out).count())
+    assert(formatted(graft.sinks.ManifestSink.readCommitted(spark, out,
+      broadcastKeyLimit = bound)).contains("BroadcastHashJoin"))
+    val below = formatted(graft.sinks.ManifestSink.readCommitted(spark, out,
+      broadcastKeyLimit = bound - 1))
+    assert(below.contains("ShuffledHashJoin") && !below.contains("BroadcastHashJoin"), below)
     // run filter: a static isin literal for few runs (no join in the plan),
     // a semi-join against the runs table past the run limit
     val isin = formatted(graft.sinks.ManifestSink.committedManifest(spark, out))
