@@ -100,7 +100,10 @@ object Bpe {
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 0
     var exhausted = false
-    var priorCp: DataFrame = null
+    // the checkpoint whose blocks `corpus` reads: the corpus itself, or
+    // after a barrier the barrier's checkpoint (the re-wrapped frame over
+    // it owns no blocks, so freeing the frame would free nothing)
+    var corpusBlocks = corpus
     // the blocks the current round's corpus superseded — releasable only
     // after the next argmax action has materialized its successor (whose
     // materialization reads them)
@@ -116,7 +119,7 @@ object Bpe {
         val m = Merge(r.toLong, top(0).getLong(0), top(0).getLong(1),
           top(0).getLong(2), NewIdBase + r)
         merges += m
-        pendingRelease = corpus
+        pendingRelease = corpusBlocks
         corpus = applyMerge(corpus, m)
         r += 1
         // materialize only while another action will follow: the FINAL
@@ -136,10 +139,12 @@ object Bpe {
             // one-kernel plan, so they are freed only after it lands
             val (wrapped, cp) = Dedup.statsBarrier(corpus)
             if (pendingRelease != null) { Dedup.freeCheckpoint(pendingRelease); pendingRelease = null }
-            if (priorCp != null) Dedup.freeCheckpoint(priorCp)
-            priorCp = cp
             corpus = wrapped
-          } else corpus = corpus.localCheckpoint(false)
+            corpusBlocks = cp
+          } else {
+            corpus = corpus.localCheckpoint(false)
+            corpusBlocks = corpus
+          }
         }
       }
     }
@@ -212,7 +217,8 @@ object Bpe {
     val verbose = sys.props.get("graft.bpe.verbose").nonEmpty
     var r = 0
     var exhausted = false
-    var priorCorpusCp: DataFrame = null
+    // the checkpoint whose blocks `corpus` reads (see [[learnMerges]])
+    var corpusBlocks = corpus
     // caches still referenced by the NOT-yet-materialized current fold:
     // released only after the argmax action materializes it
     var pendingCaches: List[DataFrame] = Nil
@@ -259,7 +265,7 @@ object Bpe {
           .persist() // materialized by the NEXT argmax — no extra action
         pendingCaches = List(counts, changed)
         counts = folded
-        corpusPending = corpus
+        corpusPending = corpusBlocks
         corpus = applyMerge(corpus, m)
         r += 1
         // same final-round / strand / barrier-is-the-materialization
@@ -278,10 +284,12 @@ object Bpe {
             counts = wrappedCounts; countsCp = cCp
             val (wrapped, cp) = Dedup.statsBarrier(corpus)
             if (corpusPending != null) { Dedup.freeCheckpoint(corpusPending); corpusPending = null }
-            if (priorCorpusCp != null) Dedup.freeCheckpoint(priorCorpusCp)
-            priorCorpusCp = cp
             corpus = wrapped
-          } else corpus = corpus.localCheckpoint(false)
+            corpusBlocks = cp
+          } else {
+            corpus = corpus.localCheckpoint(false)
+            corpusBlocks = corpus
+          }
         }
       }
     }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.GraftFunctions
 import graft.sinks.ManifestSink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -288,6 +288,49 @@ object EncodePipeline {
     plannedKeys.join(side, Seq("part_key"), "left_anti")
   }
 
+  /** Manifest rows (in [[ManifestSink.ManifestSchemaCols]] order) of a
+    * run's encoded frame: per part_key its doc/token/byte totals, the
+    * modal codec (ties go to the larger codec name) and `wall_ms`, each
+    * encode task's first-row→last-row span apportioned by the key's token
+    * share of the task, ceil'd. One slim per-(part_key, enc_task, codec)
+    * aggregate feeds every level: on a frame hash-partitioned by part_key
+    * (the pipeline's encoded cache) the per-key group-bys need no
+    * exchange, and the only one left is the per-task wall aggregate, which
+    * is broadcast back (one row per encode task). Needs part_key, source,
+    * salt, bin, run_id, enc_task, codec, n_tok, blob_len and enc_ns.
+    */
+  private[graft] def manifestRows(encoded: DataFrame): DataFrame = {
+    val slim = encoded
+      .groupBy("part_key", "source", "salt", "bin", "run_id", "enc_task", "codec")
+      .agg(
+        count(lit(1)).as("g_docs"),
+        sum(col("n_tok").cast("long")).as("g_tokens"),
+        sum(col("blob_len")).as("g_bytes"),
+        min("enc_ns").as("g_min_ns"),
+        max("enc_ns").as("g_max_ns"))
+    val taskWall = slim.groupBy("enc_task").agg(
+      ((max("g_max_ns") - min("g_min_ns")) / 1000000L).as("task_wall_ms"),
+      sum("g_tokens").as("task_tokens"))
+    slim.join(broadcast(taskWall), Seq("enc_task"))
+      .withColumn("g_wall_ms",
+        col("task_wall_ms") * col("g_tokens") / greatest(col("task_tokens"), lit(1L)))
+      .groupBy("part_key", "source", "salt", "bin", "run_id", "codec")
+      .agg(sum("g_docs").as("c_docs"), sum("g_tokens").as("c_tokens"),
+        sum("g_bytes").as("c_bytes"), sum("g_wall_ms").as("c_wall_ms"))
+      .groupBy("part_key", "source", "salt", "bin", "run_id")
+      .agg(
+        sum("c_docs").as("n_docs"),
+        sum("c_tokens").as("n_tokens"),
+        (sum("c_tokens") * 4).as("raw_bytes"),
+        sum("c_bytes").as("encoded_bytes"),
+        // ≡ mode(codec) over doc rows (codec with the max doc count), with
+        // a deterministic tie: the larger codec name wins the struct
+        // comparison
+        max(struct(col("c_docs"), col("codec"))).getField("codec").as("codec"),
+        ceil(sum("c_wall_ms")).cast("long").as("wall_ms"))
+      .select(ManifestSink.ManifestSchemaCols.map(col): _*)
+  }
+
   /** Execute one run: encode + commit all not-yet-committed partitions
     * (bounded by cfg.maxPartitionsPerRun). Returns the run summary.
     */
@@ -406,6 +449,23 @@ object EncodePipeline {
       cached += df
       df.persist(StorageLevel.MEMORY_AND_DISK)
     }
+    // The data and manifest writes run concurrently (see the write path
+    // below). The first failure on either side cancels the other's jobs by
+    // this run's tag, which leaves the caller's job group alone.
+    val sc = spark.sparkContext
+    val writeTag = s"graft-encode-${java.util.UUID.randomUUID}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def fail(e: Throwable): Unit =
+      if (failure.compareAndSet(null, e))
+        sc.cancelJobsWithTag(writeTag, s"encode run $runId failed")
+    var manifestSide: Thread = null
+    // a failed run keeps cancelling while it waits: a cancel that lands
+    // between two of the manifest side's jobs misses the next one
+    def awaitManifestSide(): Unit =
+      while (manifestSide != null && manifestSide.isAlive) {
+        if (failure.get != null) sc.cancelJobsWithTag(writeTag)
+        manifestSide.join(100)
+      }
     try {
       // CURRENT view (latest run per part_key): on an append-only sink this
       // is the committed manifest verbatim; after an overwrite it is the
@@ -413,12 +473,13 @@ object EncodePipeline {
       // winning run's doc counts, not a double-counting sum over history.
       // Persisted unless the sink is fresh (nothing to scan): the committed
       // count, the anti-join and the drift guard share one scan. One row
-      // per part_key, so no distinct is needed.
+      // per part_key, so no distinct is needed. A fresh sink has nothing to
+      // count either, so it runs no job here.
       val current = ManifestSink.currentManifest(spark, cfg.outDir)
-      val committedMan =
-        if (ManifestSink.committedRunIds(cfg.outDir).isEmpty) current else persisted(current)
+      val freshSink = ManifestSink.committedRunIds(cfg.outDir).isEmpty
+      val committedMan = if (freshSink) current else persisted(current)
       val committedKeysDf = committedMan.select("part_key")
-      val nCommitted = committedKeysDf.count()
+      val nCommitted = if (freshSink) 0L else committedKeysDf.count()
 
       // Per-doc partition assignments (slim metadata) are persisted so the
       // plan/skip/limit accounting and the key join never re-derive the
@@ -553,18 +614,23 @@ object EncodePipeline {
       // aggregating anything — the manifest alone decided it
       if (nTodo == 0) return commit(summary(0L, 0L, 0L, 0L, 0L))
 
-      val todoSide =
-        if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
-          broadcast(todoKeys)
-        else todoKeys
-
       // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
       // exchange (the doc_id join against the slim key table); encoding runs
       // map-side in the same stage, so the repartition-by-partition-key that
       // controls file layout moves only the compressed blobs (~2.5-5× less).
-      val docTodo = plannedParts
-        .join(todoSide, Seq("part_key"), "left_semi")
-        .select("doc_id", "salt", "bin", "part_key")
+      // Every planned part is todo on a fresh sink, an overwrite, or a
+      // resume that skips nothing: the plan itself is then the key table,
+      // and the semi-join (an identity there) is left out.
+      val todoParts =
+        if (nTodo == nPlanned && cfg.maxPartitionsPerRun == Int.MaxValue) plannedParts
+        else {
+          val todoSide =
+            if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
+              broadcast(todoKeys)
+            else todoKeys
+          plannedParts.join(todoSide, Seq("part_key"), "left_semi")
+        }
+      val docTodo = todoParts.select("doc_id", "salt", "bin", "part_key")
       // SHUFFLE_HASH on the slim side: a sort-merge join would SORT the heavy
       // array side (observed 4× pipeline regression when the planner flipped
       // to SMJ); hashing the per-partition metadata keeps the arrays
@@ -574,7 +640,7 @@ object EncodePipeline {
       // spans measure REAL encode wall time (round 1 wrote a driver-side
       // constant here).
       // blob_len is computed in the same map-side projection as the encode:
-      // the manifest-stats aggregate below then reads an 8-byte column from
+      // the manifest aggregate ([[manifestRows]]) then reads an 8-byte column from
       // the columnar cache instead of deserializing every blob's bytes a
       // second time just to take length() (phase-profiled at ~30% of the
       // warm pipeline wall before this). The column is cache-only — the
@@ -591,78 +657,61 @@ object EncodePipeline {
         .drop("tokens")
         .repartition(col("part_key")))
 
-      encoded
-        .withColumn("part_stub", partStub(cfg))
-        .select("part_key", "run_id", "doc_id", "source", "salt", "bin",
-          "n_tok", "codec", "blob", "part_stub")
-        // per-file sort (the reference sorts every output file by the
-        // schema's sort columns, types/dataframes/sort.rs:9-18): rows
-        // within each partition directory's files follow cfg.sortColumns
-        // (default doc_id), behind the partition identity columns
-        // empty sortColumns = --sort none: only the partition identity
-        // columns are clustered (required for contiguous per-dir files)
-        .sortWithinPartitions("source", ("part_stub" +: cfg.sortColumns): _*)
-        .write.mode("append").partitionBy("source", "part_stub")
-        .option("compression", cfg.parquetCodec)
-        .parquet(ManifestSink.dataDir(cfg.outDir))
+      // The manifest side (derivation, manifest write, totals) runs on its
+      // own driver thread while this one writes the data: both read the
+      // encoded cache, which Spark builds once for whichever asks first.
+      // The run waits for both before its commit tail and cache release.
+      var totals: Row = null
+      sc.addJobTag(writeTag) // inherited by the manifest thread
+      manifestSide = new Thread(() =>
+        try {
+          // per-partition lineage + metrics rows (reports.rs / summaries.rs
+          // analog)
+          manifestRows(encoded)
+            .write.mode("append").partitionBy("run_id")
+            .parquet(ManifestSink.manifestDir(cfg.outDir))
+          // the totals read back the few small files just written (run ids
+          // are unique per attempt, so the dir holds this attempt's rows
+          // only): no cached copy of the manifest, one single-task job
+          val manifestDir = ManifestSink.manifestDir(cfg.outDir)
+          totals = spark.read.schema(ManifestSink.ManifestSchema)
+            .option("basePath", manifestDir).parquet(s"$manifestDir/run_id=$runId")
+            .coalesce(1)
+            .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
+              coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
+              coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
+        } catch { case e: Throwable => fail(e) },
+        s"graft-manifest-$runId")
+      manifestSide.setDaemon(true)
+      manifestSide.start()
 
-      // per-partition lineage + metrics rows (reports.rs / summaries.rs
-      // analog). ONE scan of the encoded cache produces a slim
-      // per-(part_key, task, codec) intermediate; the manifest rows, the
-      // per-task wall spans, and the token-share apportionment all derive
-      // from it — this used to be three separate full passes over the
-      // cached blobs (at 100 TB: three scans of a dataset that may have
-      // spilled to disk, for metadata). The scan itself is column-pruned
-      // to slim columns only: g_bytes folds the precomputed blob_len, so
-      // the blob column's bytes are never touched here.
-      val slim = persisted(encoded
-        .groupBy("part_key", "source", "salt", "bin", "run_id", "enc_task", "codec")
-        .agg(
-          count(lit(1)).as("g_docs"),
-          sum(col("n_tok").cast("long")).as("g_tokens"),
-          sum(col("blob_len")).as("g_bytes"),
-          min("enc_ns").as("g_min_ns"),
-          max("enc_ns").as("g_max_ns")))
-      val perCodec = slim
-        .groupBy("part_key", "source", "salt", "bin", "run_id", "codec")
-        .agg(sum("g_docs").as("c_docs"), sum("g_tokens").as("c_tokens"),
-          sum("g_bytes").as("c_bytes"))
-      val manifestBase = perCodec
-        .groupBy("part_key", "source", "salt", "bin", "run_id")
-        .agg(
-          sum("c_docs").as("n_docs"),
-          sum("c_tokens").as("n_tokens"),
-          (sum("c_tokens") * 4).as("raw_bytes"),
-          sum("c_bytes").as("encoded_bytes"),
-          // ≡ mode(codec) over doc rows (codec with the max doc count),
-          // with the tie now DETERMINISTIC (largest codec name wins the
-          // struct comparison) where mode's tie pick was arbitrary
-          max(struct(col("c_docs"), col("codec"))).getField("codec").as("codec"))
-      // real wall time: per encode task, first-row→last-row span;
-      // apportioned to part_keys by token share within the task
-      val taskWall = slim.groupBy("enc_task").agg(
-        ((max("g_max_ns") - min("g_min_ns")) / 1000000L).as("task_wall_ms"),
-        sum("g_tokens").as("task_tokens"))
-      val wallPerKey = slim.groupBy("part_key", "enc_task")
-        .agg(sum("g_tokens").as("kt_tokens"))
-        .join(taskWall, Seq("enc_task"))
-        .groupBy("part_key")
-        .agg(ceil(sum(col("task_wall_ms") * col("kt_tokens") / greatest(col("task_tokens"), lit(1L))))
-          .cast("long").as("wall_ms"))
-      val manifest = persisted(manifestBase.join(wallPerKey, Seq("part_key")))
-
-      manifest
-        .select(ManifestSink.ManifestSchemaCols.map(col): _*)
-        .write.mode("append").partitionBy("run_id")
-        .parquet(ManifestSink.manifestDir(cfg.outDir))
-
-      val totals = manifest.agg(
-        count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
-        coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
+      try {
+        encoded
+          .withColumn("part_stub", partStub(cfg))
+          .select("part_key", "run_id", "doc_id", "source", "salt", "bin",
+            "n_tok", "codec", "blob", "part_stub")
+          // per-file sort (the reference sorts every output file by the
+          // schema's sort columns, types/dataframes/sort.rs:9-18): rows
+          // within each partition directory's files follow cfg.sortColumns
+          // (default doc_id), behind the partition identity columns
+          // empty sortColumns = --sort none: only the partition identity
+          // columns are clustered (required for contiguous per-dir files)
+          .sortWithinPartitions("source", ("part_stub" +: cfg.sortColumns): _*)
+          .write.mode("append").partitionBy("source", "part_stub")
+          .option("compression", cfg.parquetCodec)
+          .parquet(ManifestSink.dataDir(cfg.outDir))
+      } catch { case e: Throwable => fail(e) }
+      awaitManifestSide()
+      Option(failure.get).foreach(e => throw e)
       commit(summary(totals.getLong(0), totals.getLong(1), totals.getLong(2),
         totals.getLong(3), totals.getLong(4)))
-    } finally cached.foreach(_.unpersist())
+    } finally {
+      // (only an interrupted wait gets here with the manifest side alive;
+      // the caches it reads must outlive it)
+      awaitManifestSide()
+      sc.removeJobTag(writeTag)
+      cached.foreach(_.unpersist())
+    }
   }
 
   /** Run to completion (multiple bounded runs if maxPartitionsPerRun set). */

@@ -125,8 +125,14 @@ class BpeSpec extends AnyFunSuite {
       i.toLong -> Seq.fill(30)(rnd.nextInt(4).toLong))
     val df = corpus.toDF("doc_id", "tokens")
     val k = Bpe.CheckpointEvery + 2
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (got, merged) = Bpe.learnMerges(df, k)
     assert(got.size == k) // the data sustained every round; no early stop
+    // every superseded checkpoint is freed once its successor lands, the
+    // barrier's included: only the blocks the returned corpus reads stay
+    // (before the barrier was freed it also stayed, for two in all)
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(kept.size <= 1, s"learnMerges kept checkpoint RDDs $kept")
     assert(got == refLearn(corpus.map(_._2), k))
     val gotCorpus = merged.as[(Long, Seq[Long])].collect().toMap
     val wantCorpus = corpus.map { case (id, t) =>

@@ -3,8 +3,20 @@ package graft
 import graft.pipeline.EncodePipeline
 import graft.sinks.ManifestSink
 import graft.sources.Tokens
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** E2E pipeline tests (SURVEY.md §5 plan #4): roundtrip equality via join on
   * doc_id, resumability (partial commit → rerun → no duplicates, skips
@@ -22,6 +34,47 @@ class PipelineSpec extends AnyFunSuite {
 
   private val cfgBase = EncodePipeline.Config(outDir = "", targetBinTokens = 4096,
     saltBuckets = 4)
+
+  /** Every node of an executed plan, through adaptive stages, and through
+    * a cached relation's own plan where `intoCache` says so.
+    */
+  private def nodes(p: SparkPlan, intoCache: InMemoryTableScanExec => Boolean): Seq[SparkPlan] =
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, intoCache)
+      case q: QueryStageExec => nodes(q.plan, intoCache)
+      case m: InMemoryTableScanExec if intoCache(m) => nodes(m.relation.cachedPlan, intoCache)
+      case _ => p.children.flatMap(nodes(_, intoCache))
+    })
+
+  /** The cache of a run's encoded frame (the only one holding enc_ns). */
+  private def isEncodedCache(m: InMemoryTableScanExec): Boolean =
+    m.relation.output.exists(_.name == "enc_ns")
+
+  /** Executed plans of the data and manifest writes `body` makes, keyed by
+    * the output dir name ("data", "manifest").
+    */
+  private def writePlans(body: => Unit): Map[String, SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        nodes(qe.executedPlan, _ => false).collect {
+          case w: DataWritingCommandExec => w.cmd
+        }.foreach {
+          case i: InsertIntoHadoopFsRelationCommand =>
+            seen.put(i.outputPath.getName, qe.executedPlan)
+          case _ => ()
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener is called from the listener bus, after the run returns
+      val deadline = System.nanoTime() + 30000000000L
+      while (seen.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toMap
+  }
 
   test("full run: roundtrip bit-identity, lineage, compression") {
     val out = freshDir()
@@ -223,11 +276,22 @@ class PipelineSpec extends AnyFunSuite {
     val poisoned = good.withColumn("tokens",
       when($"doc_id" === 42, expr("CAST(raise_error('poison pill') AS array<int>)"))
         .otherwise($"tokens"))
+    val sc = spark.sparkContext
+    val cachesBefore = sc.getPersistentRDDs.size
     intercept[Exception] {
       EncodePipeline.run(spark, poisoned, cfgBase.copy(outDir = out))
     }
     val errs = ManifestSink.readErrorReports(out)
     assert(errs.size == 1 && errs.head.contains("run-"), errs)
+    assert(ManifestSink.readInflightMarkers(out).isEmpty)
+    // the run waited for both of its concurrent writes: no job of it is
+    // left running (the status store hears of job ends through the
+    // listener bus), and it released every cache it made
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, sc.statusTracker.getActiveJobIds.toSeq)
+    assert(sc.getPersistentRDDs.size == cachesBefore)
     // nothing committed, orphans invisible
     assert(ManifestSink.readCommitted(spark, out).count() == 0)
     // retry with clean input succeeds and reports the prior failure
@@ -235,6 +299,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(s.committed == s.planned && s.nDocs == 120)
     assert(s.priorFailedAttempts == 1)
     assert(EncodePipeline.verifyRoundtrip(spark, good, out) == 0)
+  }
+
+  test("write plans: a fresh run skips the resume joins; the manifest shuffles only on enc_task") {
+    val tokens = Tokens.synthetic(spark, 400)
+    val fresh = writePlans {
+      EncodePipeline.run(spark, tokens, cfgBase.copy(outDir = freshDir()))
+    }
+    assert(fresh.keySet == Set("data", "manifest"), fresh.keySet)
+    // the encode join lives in the encoded cache the data write reads
+    val joins = nodes(fresh("data"), _ => true).collect { case j: BaseJoinExec => j.joinType }
+    assert(joins.nonEmpty && !joins.exists(t => t == LeftSemi || t == LeftAnti), joins)
+    // the manifest's own shuffles, not the encode's inside its cache
+    val shuffles = nodes(fresh("manifest"), m => !isEncodedCache(m))
+      .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(shuffles.size <= 1 && shuffles.forall {
+      case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("enc_task")
+      case _ => false
+    }, shuffles)
+
+    // a bounded resume still selects its parts through the broadcast semi-join
+    val out = freshDir()
+    val cfg = cfgBase.copy(outDir = out, maxPartitionsPerRun = 2)
+    EncodePipeline.run(spark, tokens, cfg)
+    val bounded = writePlans(EncodePipeline.run(spark, tokens, cfg))
+    assert(nodes(bounded("data"), _ => true).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+      case _ => false
+    })
   }
 
   test("strict resume guard: grown input fails fast instead of silently skipping") {
@@ -278,7 +370,36 @@ class PipelineSpec extends AnyFunSuite {
     // none can exceed the whole run's wall clock
     assert(w.getLong(0) <= s.wallMs, s"wall ${w.getLong(0)} vs run ${s.wallMs}")
     // and at least one partition saw measurable time
-    assert(w.getLong(1) >= 0)
+    assert(w.getLong(1) > 0)
+  }
+
+  test("manifest rows: per-key totals, modal codec with its tie rule, token-share wall_ms") {
+    // two encode tasks: task 0 spans 10 ms over 40 tokens, task 1 spans
+    // 4 ms over 20 tokens; k2 has docs in both, and its codec counts tie
+    // only once both tasks are summed (dict 2 + 0, rle 1 + 1)
+    val ms = 1000000L
+    val rows = Seq(
+      // part_key, source, salt, bin, enc_task, codec, n_tok, blob_len, enc_ns
+      ("k1", "a", 0, 0L, 0, "dict", 10, 5L, 1000 * ms),
+      ("k1", "a", 0, 0L, 0, "dict", 10, 5L, 1002 * ms),
+      ("k1", "a", 0, 0L, 0, "dict", 10, 5L, 1010 * ms),
+      ("k2", "a", 1, 0L, 0, "dict", 4, 3L, 1003 * ms),
+      ("k2", "a", 1, 0L, 0, "dict", 4, 3L, 1004 * ms),
+      ("k2", "a", 1, 0L, 0, "rle", 2, 4L, 1005 * ms),
+      ("k2", "a", 1, 0L, 1, "rle", 5, 6L, 2001 * ms),
+      ("k3", "b", 0, 1L, 1, "bitpack", 7, 9L, 2000 * ms),
+      ("k3", "b", 0, 1L, 1, "bitpack", 8, 11L, 2004 * ms))
+    val encoded = rows.toDF("part_key", "source", "salt", "bin", "enc_task", "codec",
+      "n_tok", "blob_len", "enc_ns").withColumn("run_id", lit("run-00001"))
+    val got = EncodePipeline.manifestRows(encoded).orderBy("part_key").collect().toSeq
+    assert(got.head.schema.fieldNames.toSeq == ManifestSink.ManifestSchemaCols)
+    // wall_ms = ceil(Σ task_wall_ms × key tokens in task / task tokens):
+    // k1 ceil(10·30/40 = 7.5) = 8; k2 ceil(10·10/40 + 4·5/20 = 3.5) = 4;
+    // k3 ceil(4·15/20 = 3) = 3
+    assert(got == Seq(
+      Row("k1", "a", 0, 0L, "run-00001", 3L, 30L, 120L, 15L, "dict", 8L),
+      Row("k2", "a", 1, 0L, "run-00001", 4L, 15L, 60L, 16L, "rle", 4L),
+      Row("k3", "b", 0, 1L, "run-00001", 2L, 15L, 60L, 20L, "bitpack", 3L)))
   }
 
   test("plan geometry is pinned per sink: conflicting salt/bin configs fail fast") {
