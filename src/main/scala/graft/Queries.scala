@@ -700,7 +700,7 @@ object Queries {
     (s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-srcjson").toString
       s.read.parquet(s"$dir/documents.parquet")
-        .write.mode("overwrite").json(tmp)
+        .write.mode("overwrite").options(graft.util.LocalFs.WriteOptions).json(tmp)
       graft.sources.Documents.read(s, tmp, "json")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           length(col("text")).cast("long").as("text_len"))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.functions.GraftFunctions
 import graft.sinks.ManifestSink
+import graft.util.LocalFs
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -485,9 +486,16 @@ object EncodePipeline {
       // plan/skip/limit accounting and the key join never re-derive the
       // input; the heavy arrays are read exactly once per run, in the encode
       // pass (the reference's plan-then-collect shape, freeze.rs:26-125).
-      val plannedParts = persisted(plan(tokens, cfg, salts, binTokens))
+      // A first run on a fresh sink that writes every planned part needs
+      // no accounting up front: the plan feeds the encode join directly,
+      // and the run's totals give the planned count (every planned key
+      // holds at least one doc, so it equals the committed count).
+      val countPlan = !freshSink || cfg.dryRun || cfg.maxPartitionsPerRun != Int.MaxValue
+      val plannedParts =
+        if (countPlan) persisted(plan(tokens, cfg, salts, binTokens))
+        else plan(tokens, cfg, salts, binTokens)
       val plannedKeys = plannedParts.select("part_key").distinct()
-      val nPlanned = plannedKeys.count()
+      val nPlanned = if (countPlan) plannedKeys.count() else 0L // summary uses the totals
       // resume: skip already-committed partitions (freeze.rs:96-109 analog);
       // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
       // the re-committed keys supersede via the reader's latest-run-per-key
@@ -556,8 +564,8 @@ object EncodePipeline {
 
       def summary(nParts: Long, nDocs: Long, nTokens: Long, rawBytes: Long,
           encodedBytes: Long): RunSummary =
-        RunSummary(runId, nPlanned, nSkipped, nParts, nDocs, nTokens, rawBytes,
-          encodedBytes, (System.nanoTime() - t0) / 1000000,
+        RunSummary(runId, if (countPlan) nPlanned else nParts, nSkipped, nParts,
+          nDocs, nTokens, rawBytes, encodedBytes, (System.nanoTime() - t0) / 1000000,
           ManifestSink.readErrorReports(cfg.outDir).size.toLong, nDeferred)
 
       if (cfg.dryRun) {
@@ -612,7 +620,7 @@ object EncodePipeline {
       // nothing left to do (every planned part committed, the drift guard
       // passed): commit the empty run without encoding, writing or
       // aggregating anything — the manifest alone decided it
-      if (nTodo == 0) return commit(summary(0L, 0L, 0L, 0L, 0L))
+      if (countPlan && nTodo == 0) return commit(summary(0L, 0L, 0L, 0L, 0L))
 
       // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
       // exchange (the doc_id join against the slim key table); encoding runs
@@ -620,7 +628,8 @@ object EncodePipeline {
       // controls file layout moves only the compressed blobs (~2.5-5× less).
       // Every planned part is todo on a fresh sink, an overwrite, or a
       // resume that skips nothing: the plan itself is then the key table,
-      // and the semi-join (an identity there) is left out.
+      // and the semi-join (an identity there) is left out. (An uncounted
+      // run has nTodo == nPlanned == 0.)
       val todoParts =
         if (nTodo == nPlanned && cfg.maxPartitionsPerRun == Int.MaxValue) plannedParts
         else {
@@ -669,17 +678,24 @@ object EncodePipeline {
           // analog)
           manifestRows(encoded)
             .write.mode("append").partitionBy("run_id")
+            .options(LocalFs.WriteOptions)
             .parquet(ManifestSink.manifestDir(cfg.outDir))
           // the totals read back the few small files just written (run ids
           // are unique per attempt, so the dir holds this attempt's rows
-          // only): no cached copy of the manifest, one single-task job
+          // only): no cached copy of the manifest, one single-task job.
+          // No dir: the run had no rows (only an uncounted run gets here
+          // with an empty input).
           val manifestDir = ManifestSink.manifestDir(cfg.outDir)
-          totals = spark.read.schema(ManifestSink.ManifestSchema)
-            .option("basePath", manifestDir).parquet(s"$manifestDir/run_id=$runId")
-            .coalesce(1)
-            .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
-              coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
-              coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
+          val runManifest = s"$manifestDir/run_id=$runId"
+          totals =
+            if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(runManifest)))
+              Row(0L, 0L, 0L, 0L, 0L)
+            else spark.read.schema(ManifestSink.ManifestSchema)
+              .option("basePath", manifestDir).parquet(runManifest)
+              .coalesce(1)
+              .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
+                coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
+                coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
         } catch { case e: Throwable => fail(e) },
         s"graft-manifest-$runId")
       manifestSide.setDaemon(true)
@@ -698,6 +714,7 @@ object EncodePipeline {
           // columns are clustered (required for contiguous per-dir files)
           .sortWithinPartitions("source", ("part_stub" +: cfg.sortColumns): _*)
           .write.mode("append").partitionBy("source", "part_stub")
+          .options(LocalFs.WriteOptions)
           .option("compression", cfg.parquetCodec)
           .parquet(ManifestSink.dataDir(cfg.outDir))
       } catch { case e: Throwable => fail(e) }

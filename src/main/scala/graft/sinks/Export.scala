@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.util.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -95,17 +96,19 @@ object Export {
   def write(df: DataFrame, path: String, format: String,
       compression: String = "snappy"): Unit = format match {
     case "parquet" =>
-      df.write.mode("overwrite").option("compression", compression).parquet(path)
+      df.write.mode("overwrite").options(LocalFs.WriteOptions)
+        .option("compression", compression).parquet(path)
     case "csv" =>
       val cols = binaryCols(df)
       val textified = cols.foldLeft(df)((d, c) => d.withColumn(c, hex(col(c))))
-      textified.write.mode("overwrite").option("header", "true")
+      textified.write.mode("overwrite").options(LocalFs.WriteOptions)
+        .option("header", "true")
         .option("compression", if (compression == "snappy") "gzip" else compression)
         .csv(path)
     case "json" =>
       val cols = binaryCols(df)
       val textified = cols.foldLeft(df)((d, c) => d.withColumn(c, hex(col(c))))
-      textified.write.mode("overwrite")
+      textified.write.mode("overwrite").options(LocalFs.WriteOptions)
         .option("compression", if (compression == "snappy") "gzip" else compression)
         .json(path)
     case other => throw new IllegalArgumentException(s"unknown format '$other'")

@@ -3,6 +3,7 @@ package graft
 import graft.pipeline.EncodePipeline
 import graft.sinks.ManifestSink
 import graft.sources.Tokens
+import graft.util.LocalFs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -50,30 +51,40 @@ class PipelineSpec extends AnyFunSuite {
   private def isEncodedCache(m: InMemoryTableScanExec): Boolean =
     m.relation.output.exists(_.name == "enc_ns")
 
-  /** Executed plans of the data and manifest writes `body` makes, keyed by
-    * the output dir name ("data", "manifest").
+  /** The queries of one run: the executed plan and the command of its data
+    * and manifest writes, keyed by the output dir name ("data",
+    * "manifest"), and the name of every action it ran.
     */
-  private def writePlans(body: => Unit): Map[String, SparkPlan] = {
-    val seen = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
+  private class Writes(val plans: Map[String, SparkPlan],
+      val cmds: Map[String, InsertIntoHadoopFsRelationCommand], val actions: Seq[String])
+
+  private def writePlans(body: => Unit): Writes = {
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
+    val cmds = new java.util.concurrent.ConcurrentHashMap[String, InsertIntoHadoopFsRelationCommand]
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        actions.add(funcName)
         nodes(qe.executedPlan, _ => false).collect {
           case w: DataWritingCommandExec => w.cmd
         }.foreach {
           case i: InsertIntoHadoopFsRelationCommand =>
-            seen.put(i.outputPath.getName, qe.executedPlan)
+            cmds.put(i.outputPath.getName, i)
+            plans.put(i.outputPath.getName, qe.executedPlan)
           case _ => ()
         }
+      }
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       body
-      // the listener is called from the listener bus, after the run returns
+      // the listener is called from the listener bus, after the run returns;
+      // the bus keeps order, so the writes come after every earlier action
       val deadline = System.nanoTime() + 30000000000L
-      while (seen.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toMap
+    new Writes(plans.asScala.toMap, cmds.asScala.toMap, actions.asScala.toSeq)
   }
 
   test("full run: roundtrip bit-identity, lineage, compression") {
@@ -303,10 +314,15 @@ class PipelineSpec extends AnyFunSuite {
 
   test("write plans: a fresh run skips the resume joins; the manifest shuffles only on enc_task") {
     val tokens = Tokens.synthetic(spark, 400)
-    val fresh = writePlans {
+    val freshRun = writePlans {
       EncodePipeline.run(spark, tokens, cfgBase.copy(outDir = freshDir()))
     }
+    val fresh = freshRun.plans
     assert(fresh.keySet == Set("data", "manifest"), fresh.keySet)
+    // both writes send their `file:` paths through the library's local
+    // file system
+    freshRun.cmds.values.foreach(c => assert(LocalFs.WriteOptions.forall { case (k, v) =>
+      c.options.get(k).contains(v) }, c.options))
     // the encode join lives in the encoded cache the data write reads
     val joins = nodes(fresh("data"), _ => true).collect { case j: BaseJoinExec => j.joinType }
     assert(joins.nonEmpty && !joins.exists(t => t == LeftSemi || t == LeftAnti), joins)
@@ -322,11 +338,38 @@ class PipelineSpec extends AnyFunSuite {
     val out = freshDir()
     val cfg = cfgBase.copy(outDir = out, maxPartitionsPerRun = 2)
     EncodePipeline.run(spark, tokens, cfg)
-    val bounded = writePlans(EncodePipeline.run(spark, tokens, cfg))
+    val bounded = writePlans(EncodePipeline.run(spark, tokens, cfg)).plans
     assert(nodes(bounded("data"), _ => true).exists {
       case j: BroadcastHashJoinExec => j.joinType == LeftSemi
       case _ => false
     })
+  }
+
+  test("a fresh unbounded run counts nothing; its planned count is its committed count") {
+    val tokens = Tokens.synthetic(spark, 400)
+    val out = freshDir()
+    val cfg = cfgBase.copy(outDir = out)
+    var s: EncodePipeline.RunSummary = null
+    val fresh = writePlans { s = EncodePipeline.run(spark, tokens, cfg) }
+    assert(fresh.plans.keySet == Set("data", "manifest"), fresh.plans.keySet)
+    assert(!fresh.actions.contains("count"), fresh.actions)
+    val nKeys = EncodePipeline.plan(tokens, cfg).select("part_key").distinct().count()
+    assert(s.planned == nKeys && s.committed == nKeys && s.skipped == 0 && s.nDocs == 400)
+    assert(ManifestSink.readCommitSummaries(out).exists(_.contains(s"\"planned\":$nKeys,")))
+    assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
+    // the resume that follows counts its plan and skips every key
+    val again = EncodePipeline.run(spark, tokens, cfg)
+    assert(again.planned == nKeys && again.skipped == nKeys && again.committed == 0)
+
+    // an empty input commits an empty run, and the sink takes a real run after it
+    val emptyOut = freshDir()
+    val empty = EncodePipeline.run(spark, tokens.filter(lit(false)), cfg.copy(outDir = emptyOut))
+    assert(empty.planned == 0 && empty.committed == 0 && empty.nDocs == 0)
+    assert(ManifestSink.committedRunIds(emptyOut).size == 1)
+    assert(ManifestSink.readCommitted(spark, emptyOut).count() == 0)
+    val after = EncodePipeline.run(spark, tokens, cfg.copy(outDir = emptyOut))
+    assert(after.planned == nKeys && after.committed == nKeys)
+    assert(EncodePipeline.verifyRoundtrip(spark, tokens, emptyOut) == 0)
   }
 
   test("strict resume guard: grown input fails fast instead of silently skipping") {
