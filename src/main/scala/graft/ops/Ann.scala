@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -119,30 +120,32 @@ object Ann {
       sampleSize: Int = 100000): DataFrame = {
     val spark = embeds.sparkSession
     val unit = normalized(embeds).select("vec_id", "unit")
-    val train = unit.orderBy("vec_id").limit(sampleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the first collect below materializes the sample; the returned
+    // centroids are driver data, so nothing reads it after the loop
+    val train = Materialize.lazily(unit.orderBy("vec_id").limit(sampleSize))
     import spark.implicits._
     def toDf(cs: Array[(Int, Array[Double])]): DataFrame =
       cs.toSeq.toDF("cluster", "cvec")
-    var cents = toDf(
-      train.orderBy("vec_id").limit(nCentroids).collect()
-        .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1).toArray) })
-    for (_ <- 1 to iters) {
-      val assigned = assign(train, cents)
-      // element-wise mean per cluster (posexplode + agg — the standard
-      // Spark centroid update), re-normalized (spherical k-means)
-      val next = assigned
-        .select(col("cluster"), posexplode(col("unit")).as(Seq("dim", "v")))
-        .groupBy("cluster", "dim").agg(avg("v").as("m"))
-        .groupBy("cluster")
-        .agg(expr("transform(sort_array(collect_list(struct(dim, m))), x -> x.m)").as("mvec"))
-        .withColumn("cvec", call_function("vec_normalize", col("mvec")))
-        .select("cluster", "cvec")
-      cents = toDf(next.collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
-    }
-    train.unpersist()
-    cents
+    try {
+      var cents = toDf(
+        train.df.orderBy("vec_id").limit(nCentroids).collect()
+          .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1).toArray) })
+      for (_ <- 1 to iters) {
+        val assigned = assign(train.df, cents)
+        // element-wise mean per cluster (posexplode + agg — the standard
+        // Spark centroid update), re-normalized (spherical k-means)
+        val next = assigned
+          .select(col("cluster"), posexplode(col("unit")).as(Seq("dim", "v")))
+          .groupBy("cluster", "dim").agg(avg("v").as("m"))
+          .groupBy("cluster")
+          .agg(expr("transform(sort_array(collect_list(struct(dim, m))), x -> x.m)").as("mvec"))
+          .withColumn("cvec", call_function("vec_normalize", col("mvec")))
+          .select("cluster", "cvec")
+        cents = toDf(next.collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
+      }
+      cents
+    } finally train.release()
   }
 
   /** IVF top-k: assign the corpus to inverted lists once, probe the

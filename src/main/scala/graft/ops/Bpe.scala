@@ -1,8 +1,10 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
+import scala.annotation.tailrec
 
 /** Distributed BPE tokenizer training — the corpus-scale merge-learning
   * loop (Sennrich et al., ACL'16 §3.2) over the engine's token tables:
@@ -20,21 +22,21 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   *     map-side combine — pair cardinality, not corpus size,
   *   - the argmax plans as TakeOrderedAndProject (no global sort),
   *   - the merge rewrite is one codegen'd pass per row.
-  * Each round's merged corpus is MATERIALIZED (lazy localCheckpoint, so
-  * the round's single action — the argmax collect — doubles as the
-  * materialization), and round r reads the previous round's stored
-  * arrays plus ONE merge kernel — the r5 version recomputed the corpus
-  * from the source scan through r stacked kernels every round (token
-  * GENERATION plus Θ(k²) kernel passes over the run; measured as the
-  * dominant cost of both bpe gate queries). The superseded round's
-  * blocks are freed once the next round's argmax has materialized its
-  * successor. Every CheckpointEvery rounds the corpus still materializes
-  * through the engine's iterative-loop barrier (`Dedup.statsBarrier` +
-  * `freeCheckpoint`, the CC-loop pattern — a localCheckpoint re-wrap that
-  * also stops Spark 4's originStats carry-through), which bounds both the
-  * logical-plan depth and the eviction-recompute depth. Result-invisible
-  * (same rows), spec-pinned by the merged ≡ applyMerges equality in
-  * BpeSpec past the boundary.
+  * Each round's merged corpus is MATERIALIZED (a lazy
+  * [[graft.util.Materialize]] handle, so the round's single action — the
+  * argmax collect — doubles as the materialization), and round r reads
+  * the previous round's stored arrays plus ONE merge kernel — the r5
+  * version recomputed the corpus from the source scan through r stacked
+  * kernels every round (token GENERATION plus Θ(k²) kernel passes over
+  * the run; measured as the dominant cost of both bpe gate queries). The
+  * superseded round's blocks are freed once the next round's argmax has
+  * materialized its successor. Every CheckpointEvery rounds the corpus
+  * materializes through `Materialize.barrier` instead (the CC-loop
+  * pattern — an eager checkpoint re-wrap that also stops Spark 4's
+  * originStats carry-through), which bounds both the logical-plan depth
+  * and the eviction-recompute depth. Result-invisible (same rows),
+  * spec-pinned by the merged ≡ applyMerges equality in BpeSpec past the
+  * boundary.
   */
 object Bpe {
 
@@ -84,71 +86,44 @@ object Bpe {
     require(nMerges >= 1 && nMerges <= 4096,
       s"nMerges must be in [1, 4096]: $nMerges")
     graft.functions.GraftFunctions.register(tokens.sparkSession)
-    // The round-0 corpus (scan + token generation + widening cast) is
-    // materialized too: round 0's argmax does it, and no later round ever
-    // re-runs the generator. LAZY localCheckpoint rather than persist(),
-    // twice deliberately: (1) the round's single argmax action still both
-    // materializes the blocks and reads them — no extra job per round;
-    // (2) persist() registers the PLAN in the session CacheManager, where
-    // an identical plan built by a later bench rep or sibling query would
-    // silently resolve to this invocation's data — cross-invocation
-    // result reuse the bench contract forbids. Checkpoint blocks are
-    // RDD-keyed: invisible to any other plan.
-    var corpus = tokens.select(col("doc_id"),
-      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
-      .localCheckpoint(false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var r = 0
-    var exhausted = false
-    // the checkpoint whose blocks `corpus` reads: the corpus itself, or
-    // after a barrier the barrier's checkpoint (the re-wrapped frame over
-    // it owns no blocks, so freeing the frame would free nothing)
-    var corpusBlocks = corpus
-    // the blocks the current round's corpus superseded — releasable only
-    // after the next argmax action has materialized its successor (whose
-    // materialization reads them)
-    var pendingRelease: DataFrame = null
-    while (r < nMerges && !exhausted) {
-      val top = pairCounts(corpus)
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      // the argmax materialized `corpus`'s blocks; its predecessor is done
-      if (pendingRelease != null) { Dedup.freeCheckpoint(pendingRelease); pendingRelease = null }
-      if (top.isEmpty) exhausted = true
+    // `corpus` is materialized; merge `m` is the round's argmax
+    @tailrec def round(corpus: Materialize.Handle, m: Merge): DataFrame = {
+      merges += m
+      val merged = applyMerge(corpus.df, m)
+      // the FINAL corpus is returned as a one-kernel plan over the last
+      // round's live blocks, so a single downstream consumption pays no
+      // extra materialization (the last blocks strand for the session —
+      // the price of a lazily-consumable result whose hot path must not
+      // re-run k kernels plus the generator; MEMORY_AND_DISK spills under
+      // pressure rather than dropping blocks)
+      if (merges.size == nMerges) merged
       else {
-        val m = Merge(r.toLong, top(0).getLong(0), top(0).getLong(1),
-          top(0).getLong(2), NewIdBase + r)
-        merges += m
-        pendingRelease = corpusBlocks
-        corpus = applyMerge(corpus, m)
-        r += 1
-        // materialize only while another action will follow: the FINAL
-        // corpus is returned as a one-kernel plan over the last round's
-        // live blocks, so a single downstream consumption pays no extra
-        // materialization (the last blocks strand for the session — the
-        // price of a lazily-consumable result whose hot path must not
-        // re-run k kernels plus the generator; MEMORY_AND_DISK spills
-        // under pressure rather than dropping blocks). On barrier rounds
-        // the statsBarrier IS the materialization — wrapping the round in
-        // its own lazy checkpoint first would write a second
-        // corpus-sized block set only to free it unread (review-caught).
-        if (r < nMerges) {
-          if (r % CheckpointEvery == 0) {
-            // bound the logical-plan and eviction-recompute depth; the
-            // barrier reads the previous round's blocks through the
-            // one-kernel plan, so they are freed only after it lands
-            val (wrapped, cp) = Dedup.statsBarrier(corpus)
-            if (pendingRelease != null) { Dedup.freeCheckpoint(pendingRelease); pendingRelease = null }
-            corpus = wrapped
-            corpusBlocks = cp
-          } else {
-            corpus = corpus.localCheckpoint(false)
-            corpusBlocks = corpus
-          }
+        // bound the logical-plan and eviction-recompute depth; on barrier
+        // rounds the barrier IS the materialization (a lazy checkpoint
+        // first would write a second corpus-sized block set only to free
+        // it unread)
+        val next =
+          if (merges.size % CheckpointEvery == 0) Materialize.barrier(merged)
+          else Materialize.lazily(merged)
+        val top = nextMerge(pairCounts(next.df), merges.size)
+        // that argmax materialized `next`, which read `corpus`: it is done
+        corpus.release()
+        top match {
+          case Some(m2) => round(next, m2)
+          case None => next.df
         }
       }
     }
-    (merges.toSeq, corpus)
+    // The round-0 corpus (scan + token generation + widening cast) is
+    // materialized too: round 0's argmax does it, and no later round ever
+    // re-runs the generator.
+    val corpus = Materialize.lazily(longTokens(tokens))
+    val merged = nextMerge(pairCounts(corpus.df), 0) match {
+      case Some(m) => round(corpus, m)
+      case None => corpus.df
+    }
+    (merges.toSeq, merged)
   }
 
   /** Delta-count trainer (the scale step over [[learnMerges]]): identical
@@ -162,12 +137,12 @@ object Bpe {
     * per-round DELTAS: only documents containing the merged pair can
     * change any count (the [[graft.functions.BpePairPresent]] predicate is
     * exactly the merge kernel's rewrite trigger), so each round
-    *   - filters the cached corpus with the early-exit native predicate
+    *   - filters the materialized corpus with the early-exit native predicate
     *     (one map-side pass, no shuffle),
     *   - recounts pairs of the changed docs before and after the merge —
     *     explode + shuffle over the SHRINKING changed subset only,
     *   - folds `after − before` into the running count table (slim
-    *     (lhs, rhs, count) rows, persisted per round with the lineage cut
+    *     (lhs, rhs, count) rows, materialized per round with the lineage cut
     *     every [[CheckpointEvery]] rounds),
     * and reads the next argmax from the table — the argmax action is also
     * what materializes the previous round's fold, so a round costs TWO
@@ -198,106 +173,83 @@ object Bpe {
     require(nMerges >= 1 && nMerges <= 4096,
       s"nMerges must be in [1, 4096]: $nMerges")
     graft.functions.GraftFunctions.register(tokens.sparkSession)
-    // materialized per round like [[learnMerges]] (lazy localCheckpoint —
-    // same CacheManager-avoidance rationale): the changed-doc filter
-    // re-reads the corpus every round, and without the blocks that scan
-    // recomputes token generation plus r stacked kernels each time
-    var corpus = tokens.select(col("doc_id"),
-      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
-      .localCheckpoint(false)
-    var corpusPending: DataFrame = null
-    // seed counts: ONE full recount, then deltas only
-    var (counts, countsCp) = Dedup.statsBarrier(pairCounts(corpus))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    // -Dgraft.bpe.verbose=1: per-round stderr wall time + changed-doc
-    // count. Verbose is print-only — the changed.count() below runs in
-    // EVERY mode because it is load-bearing (it materializes the shared
-    // cache; see the comment at the call), so verbose runs measure the
-    // same work as silent ones.
-    val verbose = sys.props.get("graft.bpe.verbose").nonEmpty
-    var r = 0
-    var exhausted = false
-    // the checkpoint whose blocks `corpus` reads (see [[learnMerges]])
-    var corpusBlocks = corpus
-    // caches still referenced by the NOT-yet-materialized current fold:
-    // released only after the argmax action materializes it
-    var pendingCaches: List[DataFrame] = Nil
-    while (r < nMerges && !exhausted) {
-      val tRound = System.nanoTime()
-      // the argmax action ALSO materializes the previous round's persisted
-      // fold (first action to touch it) — one job does both
-      val top = counts
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      // counts is now cached: its inputs (previous counts table + changed
-      // set) are safe to release — lineage stays intact, so an eviction
-      // recomputes through them back to the last barrier
-      pendingCaches.foreach(_.unpersist())
-      pendingCaches = Nil
-      if (top.isEmpty) exhausted = true
-      else {
-        val m = Merge(r.toLong, top(0).getLong(0), top(0).getLong(1),
-          top(0).getLong(2), NewIdBase + r)
-        merges += m
-        // the delta sources: docs the kernel will rewrite, cached for the
-        // round's two recounts (before/after). Materialized HERE — the
-        // fold's union reads it twice, and two cold branches in one job
-        // would each run the full corpus scan (the round's dominant cost)
-        // in a cache race instead of sharing one pass.
-        val changed = corpus.filter(
-          call_function("bpe_pair_present", col("tokens"), lit(m.lhs), lit(m.rhs)))
-          .persist()
-        val nChanged = changed.count()
-        // that count read the full corpus, materializing this round's
-        // corpus blocks — its predecessor is done
-        if (corpusPending != null) { Dedup.freeCheckpoint(corpusPending); corpusPending = null }
-        if (verbose)
-          System.err.println(f"[graft] bpe round=$r lhs=${m.lhs} rhs=${m.rhs} " +
-            f"count=${m.pair_count} changed_docs=$nChanged " +
-            f"secs=${(System.nanoTime() - tRound) / 1e9}%.3f")
-        val before = pairCounts(changed)
+    // the delta sources: docs merge `m` rewrites, read by the round's two
+    // recounts (before/after). Eager — one job before the fold, whose
+    // union reads it twice: two cold branches in one job would each run
+    // the full corpus scan (the round's dominant cost) instead of sharing
+    // one pass. The scan also materializes a lazy corpus.
+    def changedBy(corpus: Materialize.Handle, m: Merge) =
+      Materialize.eager(corpus.df.filter(
+        call_function("bpe_pair_present", col("tokens"), lit(m.lhs), lit(m.rhs))))
+    // `corpus`, `counts` (its pair counts) and `changed` are materialized;
+    // merge `m` is the round's argmax
+    @tailrec def round(corpus: Materialize.Handle, counts: Materialize.Handle,
+        m: Merge, changed: Materialize.Handle): DataFrame = {
+      merges += m
+      val merged = applyMerge(corpus.df, m)
+      if (merges.size == nMerges) {
+        changed.release()
+        counts.release()
+        merged
+      } else {
+        val before = pairCounts(changed.df)
           .select(col("lhs"), col("rhs"), (-col("pair_count")).as("pair_count"))
-        val after = pairCounts(applyMerge(changed, m))
-        val folded = counts.unionAll(before).unionAll(after)
+        val after = pairCounts(applyMerge(changed.df, m))
+        val fold = counts.df.unionAll(before).unionAll(after)
           .groupBy("lhs", "rhs")
           .agg(sum("pair_count").as("pair_count"))
           .filter(col("pair_count") =!= 0)
-          .persist() // materialized by the NEXT argmax — no extra action
-        pendingCaches = List(counts, changed)
-        counts = folded
-        corpusPending = corpusBlocks
-        corpus = applyMerge(corpus, m)
-        r += 1
-        // same final-round / strand / barrier-is-the-materialization
-        // posture as [[learnMerges]]
-        if (r < nMerges) {
-          if (r % CheckpointEvery == 0) {
-            // cut both lineages: the corpus kernel stack (Θ(k²) recompute
-            // otherwise) and the counts union chain (plan + originStats
-            // growth); the barrier materializes the pending fold, after
-            // which every cache behind it is releasable
-            val (wrappedCounts, cCp) = Dedup.statsBarrier(counts)
-            counts.unpersist()
-            pendingCaches.foreach(_.unpersist())
-            pendingCaches = Nil
-            Dedup.freeCheckpoint(countsCp)
-            counts = wrappedCounts; countsCp = cCp
-            val (wrapped, cp) = Dedup.statsBarrier(corpus)
-            if (corpusPending != null) { Dedup.freeCheckpoint(corpusPending); corpusPending = null }
-            corpus = wrapped
-            corpusBlocks = cp
-          } else {
-            corpus = corpus.localCheckpoint(false)
-            corpusBlocks = corpus
-          }
+        // same strand / barrier-is-the-materialization posture as
+        // [[learnMerges]]; the barrier cuts both lineages: the corpus
+        // kernel stack (Θ(k²) recompute otherwise) and the counts union
+        // chain (plan + originStats growth)
+        val barrier = merges.size % CheckpointEvery == 0
+        val folded = if (barrier) Materialize.barrier(fold) else Materialize.lazily(fold)
+        // the argmax also materializes a lazy fold — one job does both
+        val top = nextMerge(folded.df, merges.size)
+        counts.release()
+        changed.release()
+        top match {
+          case None =>
+            folded.release()
+            merged
+          case Some(m2) =>
+            val next = if (barrier) Materialize.barrier(merged) else Materialize.lazily(merged)
+            val nextChanged = changedBy(next, m2)
+            // that scan materialized `next`, which read `corpus`: it is done
+            corpus.release()
+            round(next, folded, m2, nextChanged)
         }
       }
     }
-    counts.unpersist()
-    pendingCaches.foreach(_.unpersist())
-    Dedup.freeCheckpoint(countsCp)
-    (merges.toSeq, corpus)
+    val corpus = Materialize.lazily(longTokens(tokens))
+    // seed counts: ONE full recount (its barrier also materializes the
+    // round-0 corpus), then deltas only
+    val counts = Materialize.barrier(pairCounts(corpus.df))
+    val merged = nextMerge(counts.df, 0) match {
+      case Some(m) => round(corpus, counts, m, changedBy(corpus, m))
+      case None =>
+        counts.release()
+        corpus.df
+    }
+    (merges.toSeq, merged)
   }
+
+  /** `(doc_id, tokens array<bigint>)`: the trainers' corpus, its int32
+    * tokens widened once up front.
+    */
+  private def longTokens(tokens: DataFrame): DataFrame =
+    tokens.select(col("doc_id"),
+      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
+
+  /** The round-`rank` merge: the argmax of `counts` under the (count DESC,
+    * lhs ASC, rhs ASC) total order, or None once no pair is left.
+    */
+  private def nextMerge(counts: DataFrame, rank: Int): Option[Merge] =
+    counts.orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
+      .limit(1).collect().headOption
+      .map(t => Merge(rank.toLong, t.getLong(0), t.getLong(1), t.getLong(2), NewIdBase + rank))
 
   /** Rewrite the corpus under one merge (the native greedy kernel). */
   def applyMerge(corpus: DataFrame, m: Merge): DataFrame =
@@ -311,8 +263,6 @@ object Bpe {
     */
   def applyMerges(tokens: DataFrame, merges: Seq[Merge]): DataFrame = {
     graft.functions.GraftFunctions.register(tokens.sparkSession)
-    val base = tokens.select(col("doc_id"),
-      col("tokens").cast(ArrayType(LongType, containsNull = false)).as("tokens"))
-    merges.sortBy(_.merge_rank).foldLeft(base)(applyMerge)
+    merges.sortBy(_.merge_rank).foldLeft(longTokens(tokens))(applyMerge)
   }
 }

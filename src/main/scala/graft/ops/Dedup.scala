@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,8 +119,7 @@ object Dedup {
     // blocks — without it each exchange re-split and re-hashed the full
     // text (three kernel passes, plan-audited). Deterministic recompute
     // is not the concern here (the kernel is pure); wasted passes are.
-    val sig = withMinhash(docs, k).select("doc_id", "minhash")
-      .localCheckpoint(true)
+    val sig = Materialize.eager(withMinhash(docs, k).select("doc_id", "minhash")).df
     minhashCandidatesFromSig(sig, k, bands, maxBucket)
       .join(sig.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("minhash", "mh_a"), "doc_a")
       .join(sig.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("minhash", "mh_b"), "doc_b")
@@ -176,7 +176,7 @@ object Dedup {
         // engine: broadcast while the pair list is small (the count is
         // free — the blocks are already materialized), SHUFFLE_HASH past
         // the limit — never an SMJ that would sort the text side.
-        val c = candidates.select("doc_a", "doc_b").localCheckpoint(true)
+        val c = Materialize.eager(candidates.select("doc_a", "doc_b")).df
         val nCand = c.count()
         val ids = c.select(col("doc_a").as("doc_id"))
           .unionByName(c.select(col("doc_b").as("doc_id"))).distinct()
@@ -212,8 +212,7 @@ object Dedup {
       bands: Int = 16, maxBucket: Int = 64): DataFrame = {
     // same three-reference shape as [[minhashPairs]]: one kernel pass,
     // checkpointed, read three times
-    val sig = withMinhash(docs, k).select("doc_id", "minhash")
-      .localCheckpoint(true)
+    val sig = Materialize.eager(withMinhash(docs, k).select("doc_id", "minhash")).df
     val prefiltered = minhashCandidatesFromSig(sig, k, bands, maxBucket)
       .join(sig.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("minhash", "mh_a"), "doc_a")
       .join(sig.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("minhash", "mh_b"), "doc_b")
@@ -287,44 +286,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Eager local checkpoint that ALSO drops the source plan's statistics.
-    *
-    * `Dataset.localCheckpoint` truncates the lineage but copies the origin
-    * plan's `Statistics` into the new `LogicalRDD` (`originStats`). In an
-    * iterative loop whose step joins the checkpointed frame with itself,
-    * Catalyst's size-only join estimate MULTIPLIES the two children's
-    * `sizeInBytes` (BigInt), so the carried estimate squares every round:
-    * its bit-length doubles, and by round ~17 the driver main thread sits
-    * in million-bit `BigInteger.multiplyToomCook3` for minutes per round
-    * (jstack-verified on the 51.5k-doc stress graph; per-round wall time
-    * grew a clean ×2.5/round from 0.14s to 88s while row counts stayed
-    * constant). Rebuilding the frame from the checkpointed RDD through the
-    * public `createDataFrame` path yields a LogicalRDD with NO origin
-    * stats — each round's estimates then derive from constant leaf
-    * defaults and stay a few machine words wide. The Row round-trip costs
-    * one extra (de)serialization per consumer over slim (long, long) rows
-    * — linear and negligible next to the shuffles it sits between.
-    */
-  private[graft] def statsBarrier(df: DataFrame): (DataFrame, DataFrame) = {
-    val cp = df.localCheckpoint(true)
-    (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), cp)
-  }
-
-  /** Frees the storage blocks behind an eager local checkpoint once a round
-    * supersedes it. A plain `Dataset.unpersist` is a no-op here — the blocks
-    * belong to the LogicalRDD's internal RDD, which the cache manager does
-    * not track — so without this the loop would strand one edge-set copy
-    * per round until a driver GC lets the context cleaner find them (at
-    * corpus scale that's a full |E| of storage per round). Never call this
-    * on a checkpoint the returned (still-lazy) result plan references:
-    * local-checkpoint blocks are unrecoverable once dropped.
-    */
-  private[graft] def freeCheckpoint(cp: DataFrame): Unit =
-    cp.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Connected components over a near-dup pair graph: cluster id = min
     * doc_id reachable (the keeper). Alternating LARGE-STAR / SMALL-STAR
     * edge rewriting (Kiveris et al., "Connected Components in MapReduce
@@ -342,12 +303,13 @@ object Dedup {
     * map-side-combinable min aggregates — no driver-side graph, and
     * per-node fan-out stays linear in degree, so it runs at corpus scale.
     *
-    * Each round is localCheckpoint'd (eager): an iterative loop's logical
-    * plan otherwise grows multiplicatively per round (the edge set is
-    * referenced several times per phase) and Catalyst re-analysis over
-    * the compounding tree froze a 50k-doc run before any task ran. Swap
-    * for reliable checkpoint() on a real cluster if executor loss during
-    * the loop must be survivable.
+    * Each round passes a `Materialize.barrier` (eager): an iterative
+    * loop's logical plan otherwise grows multiplicatively per round (the
+    * edge set is referenced several times per phase) and Catalyst
+    * re-analysis over the compounding tree froze a 50k-doc run before any
+    * task ran; the barrier also drops the origin statistics whose join
+    * estimate squares every round. Swap for reliable checkpoint() on a
+    * real cluster if executor loss during the loop must be survivable.
     *
     * Returns (node, label); nodes absent from `pairs` are their own
     * singleton clusters (callers left-join + coalesce).
@@ -378,23 +340,21 @@ object Dedup {
     // once; nodes and edges below re-read these checkpoint blocks instead
     // of re-running the plan (the naive form evaluated it up to 3×: once
     // per barrier plus once per union branch)
-    val (p0, p0Cp) = statsBarrier(pairs
+    val p0 = Materialize.barrier(pairs
       .select(col("doc_a").cast("long").as("doc_a"),
         col("doc_b").cast("long").as("doc_b")))
-    val (nodes, _) = statsBarrier(p0.select(col("doc_a").as("node"))
-      .unionByName(p0.select(col("doc_b").as("node")))
+    val nodes = Materialize.barrier(p0.df.select(col("doc_a").as("node"))
+      .unionByName(p0.df.select(col("doc_b").as("node")))
       .distinct())
     // canonical direction: u > v (self-pairs contribute singleton nodes only)
-    var (edges, edgesCp) = statsBarrier(p0
+    var edges = Materialize.barrier(p0.df
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-    freeCheckpoint(p0Cp)
-    val verbose = sys.props.get("graft.cc.verbose").nonEmpty
-    var prevCount = edges.count()
+    p0.release()
+    var prevCount = edges.df.count()
     if (prevCount < driverLimit) {
-      val t0 = System.nanoTime()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -407,30 +367,27 @@ object Dedup {
       // (~6× less driver heap per edge — see sizing note above)
       val longPair = org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-      edges.select(col("u"), col("v")).as(longPair).collect().foreach { case (a, b) =>
+      edges.df.select(col("u"), col("v")).as(longPair).collect().foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val ra = find(a); val rb = find(b)
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      freeCheckpoint(edgesCp)
+      edges.release()
       val sess = pairs.sparkSession
       val keys = parent.keys.toArray // snapshot: find() mutates the map
       val labels = sess.createDataFrame(
         keys.toSeq.map(n => (n, find(n)))).toDF("node", "label")
-      if (verbose) System.err.println(
-        f"[graft] connectedComponents driver union-find edges=$prevCount secs=${(System.nanoTime() - t0) / 1e9}%.2f")
-      return nodes.join(labels, Seq("node"), "left")
+      return nodes.df.join(labels, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
     }
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       // LARGE-STAR: for each center c, every strictly-larger neighbor n
       // re-attaches to m = min(neighborhood ∪ {c}). Each undirected edge
       // is processed once, at its smaller endpoint's neighborhood.
-      val bidir = edges.select(col("u").as("c"), col("v").as("n"))
-        .unionByName(edges.select(col("v").as("c"), col("u").as("n")))
+      val bidir = edges.df.select(col("u").as("c"), col("v").as("n"))
+        .unionByName(edges.df.select(col("v").as("c"), col("u").as("n")))
       val cMin = bidir.groupBy("c").agg(min("n").as("mn"))
         .select(col("c"), least(col("mn"), col("c")).as("m"))
       val large = bidir.join(cMin, Seq("c"))
@@ -445,19 +402,18 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(uMin.select(col("u"), col("m").as("v")))
         .distinct()
-      val (next, nextCp) = statsBarrier(small)
-      val nextCount = next.count()
+      val next = Materialize.barrier(small)
+      val nextCount = next.df.count()
       // exact fixpoint test: same cardinality and no new edges ⇒ equal sets
-      converged = nextCount == prevCount && next.except(edges).isEmpty
-      freeCheckpoint(edgesCp)
+      converged = nextCount == prevCount && next.df.except(edges.df).isEmpty
+      edges.release()
       edges = next
-      edgesCp = nextCp
       prevCount = nextCount
       iter += 1
-      if (verbose) System.err.println(
-        f"[graft] connectedComponents round=$iter edges=$nextCount converged=$converged secs=${(System.nanoTime() - t0) / 1e9}%.2f")
     }
-    if (!converged)
+    if (!converged) {
+      nodes.release()
+      edges.release()
       // an unconverged exit would otherwise return silently-wrong cluster
       // ids (round-2 ADVICE). Star rewiring needs O(log² n) rounds, so
       // hitting the default budget means something is genuinely wrong —
@@ -466,9 +422,10 @@ object Dedup {
         s"connectedComponents did not converge after $maxIter rounds; " +
           "raise maxIter (rounds needed grow with log² of the largest " +
           "component, not its diameter)")
+    }
     // fixpoint: edges = one star per component, centered on the min node
-    nodes
-      .join(edges.groupBy(col("u").as("node")).agg(min("v").as("mn")), Seq("node"), "left")
+    nodes.df
+      .join(edges.df.groupBy(col("u").as("node")).agg(min("v").as("mn")), Seq("node"), "left")
       .select(col("node"), coalesce(col("mn"), col("node")).as("label"))
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,11 +28,11 @@ import org.apache.spark.sql.functions._
   *     back as a tiny lookup; `rank = offset + local`.
   *
   * The two-exchange chain is materialized EXACTLY ONCE, through an eager
-  * localCheckpoint, and both the counts pass and the returned frame read
-  * the checkpointed blocks. This is load-bearing for correctness, not
-  * just cost: each consuming action builds a fresh QueryExecution whose
-  * RDDs get fresh ids, and `repartitionByRange`'s reservoir-sample seed
-  * derives from the RDD id — Spark documents the boundaries as "not
+  * [[graft.util.Materialize]] handle (a local checkpoint), and both the
+  * counts pass and the returned frame read the checkpointed blocks. This
+  * is load-bearing for correctness, not just cost: each consuming action
+  * builds a fresh QueryExecution whose RDDs get fresh ids, and
+  * `repartitionByRange`'s reservoir-sample seed derives from the RDD id — Spark documents the boundaries as "not
   * guaranteed consistent" across such re-executions. The r5 version
   * persisted, collected counts, and unpersisted BEFORE the consumer ran,
   * so offsets from execution #1 were applied to execution #2's partition
@@ -64,11 +65,10 @@ object Ranks {
     // both the counts pass and the returned plan read the same immutable
     // blocks — see the class doc for why a persist/unpersist here is a
     // correctness bug, not a cost choice
-    val local = df.repartitionByRange(nParts, order: _*)
+    val local = Materialize.eager(df.repartitionByRange(nParts, order: _*)
       .withColumn(pid, spark_partition_id())
       .withColumn(lr,
-        row_number().over(Window.partitionBy(pid).orderBy(order: _*)))
-      .localCheckpoint(true)
+        row_number().over(Window.partitionBy(pid).orderBy(order: _*)))).df
     val counts = local.groupBy(pid).agg(count(lit(1)).as("__rk_c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -194,41 +195,34 @@ object Sampling {
 
     // phase 1: stratum sizes as a DISTRIBUTED slim aggregate (null strata
     // included — Spark groups them); the driver never materializes the
-    // stratum list, only scalar counts. The frame rides a LAZY local
-    // checkpoint whose materialization IS the broadcast-vs-shuffle
-    // strategy probe: ONE job computes the aggregate, stores it, and
-    // returns the stratum count — r5 ran the probe as its own
-    // full-aggregate job and then recomputed the aggregate again in
-    // every deficit check AND in the returned plan (three computations
-    // of the same frame; judge-flagged as corpus_sample's 2.3× record
-    // regression). Checkpoint, not persist(): a persist entry is
-    // plan-keyed in the CacheManager, where an identical plan from a
-    // later bench rep would silently reuse this invocation's data. The
-    // blocks are slim and stratum-bounded (the same frame the ≤ 2^20
-    // branch broadcasts) and stay live for the session so the returned
-    // plan reads them too.
-    val counts = slim.groupBy(col(keyCol).as("s_key"))
-      .agg(count(lit(1)).as("s_cnt"))
-      .localCheckpoint(false)
-    val nStrata = counts.count()
-
-    // initial cutoff: expected n-th order statistic + generous slack
-    // (6σ of the binomial candidate count + a constant floor)
+    // stratum list, only scalar counts. Each stratum's initial cutoff is
+    // the expected n-th order statistic + generous slack (6σ of the
+    // binomial candidate count + a constant floor). The table rides a
+    // LAZY Materialize handle whose materialization IS the
+    // broadcast-vs-shuffle strategy probe: ONE job computes the
+    // aggregate, stores it, and returns the stratum count — r5 ran the
+    // probe as its own full-aggregate job and then recomputed the
+    // aggregate again in every deficit check AND in the returned plan
+    // (three computations of the same frame; judge-flagged as
+    // corpus_sample's 2.3× record regression).
     val slackRows = n + 6.0 * math.sqrt(n.toDouble) + 64.0
-    var cut = counts.withColumn("s_cut",
-      when(col("s_cnt") <= n, lit(KeySpace)).otherwise(
-        least(lit(KeySpace),
-          ceil(lit(KeySpace.toDouble) * slackRows / col("s_cnt")).cast("long"))))
+    var cut = Materialize.lazily(slim.groupBy(col(keyCol).as("s_key"))
+      .agg(count(lit(1)).as("s_cnt"))
+      .withColumn("s_cut",
+        when(col("s_cnt") <= n, lit(KeySpace)).otherwise(
+          least(lit(KeySpace),
+            ceil(lit(KeySpace.toDouble) * slackRows / col("s_cnt")).cast("long")))))
+    val nStrata = cut.df.count()
 
     // the cutoff lookup joins against the data null-safely (a null
     // stratum is its own group); broadcast while the table is small,
     // hashed shuffle past the usual key limit — never a literal
     // case-chain (plan size was linear in stratum cardinality)
-    def candidatesFor(c: DataFrame): DataFrame = {
+    def candidatesFor(c: DataFrame): Materialize.Handle = {
       val side = if (nStrata <= (1L << 20)) broadcast(c) else c.hint("SHUFFLE_HASH")
-      slim.join(side, col(keyCol) <=> col("s_key"))
+      Materialize.eager(slim.join(side, col(keyCol) <=> col("s_key"))
         .filter(col("sample_key") < col("s_cut"))
-        .select(col("doc_id"), col(keyCol), col("sample_key"))
+        .select(col("doc_id"), col(keyCol), col("sample_key")))
     }
 
     // phase 2: verify the prune keeps ≥ min(n, count) per stratum; widen
@@ -239,46 +233,42 @@ object Sampling {
     // `cut` twice), so an un-barriered loop would grow the lineage
     // ~3× per round — the exact iterative-loop pathology the CC trainer
     // documents. Every widened cutoff therefore passes through
-    // Dedup.statsBarrier (the slim table materializes, lineage cut);
-    // superseded barrier blocks are freed, the final one stays live for
-    // the returned plan (CC-loop posture).
-    // the candidate set is small by construction (~n + slack rows per
-    // stratum), so it is materialized eagerly (localCheckpoint) and BOTH
-    // the deficit check and the returned ranking plan read the blocks —
-    // r5 recomputed the full docs-side join once for the check and again
-    // for the consumer. Superseded candidate checkpoints are freed as the
-    // loop widens; the final one stays live for the returned plan.
-    var candidates = candidatesFor(cut).localCheckpoint(true)
+    // `Materialize.barrier` (the slim table materializes, lineage cut).
+    // The candidate set is small by construction (~n + slack rows per
+    // stratum), so it is materialized eagerly and BOTH the deficit check
+    // and the returned ranking plan read the blocks — r5 recomputed the
+    // full docs-side join once for the check and again for the consumer.
+    var candidates = candidatesFor(cut.df)
     var deficit = true
-    var priorCp: DataFrame = null
     while (deficit) {
-      val got = candidates.groupBy(col(keyCol).as("g_key"))
+      val got = candidates.df.groupBy(col(keyCol).as("g_key"))
         .agg(count(lit(1)).as("g_cnt"))
-      val short = cut.join(got, col("s_key") <=> col("g_key"), "left")
+      val short = cut.df.join(got, col("s_key") <=> col("g_key"), "left")
         .filter(coalesce(col("g_cnt"), lit(0L)) <
           least(lit(n.toLong), col("s_cnt")))
         .select(col("s_key").as("w_key"), lit(1L).as("w_short"))
       if (short.limit(1).count() == 0) deficit = false
       else {
-        val widened = cut.join(short, col("s_key") <=> col("w_key"), "left")
+        val widened = cut.df.join(short, col("s_key") <=> col("w_key"), "left")
           .withColumn("s_cut", when(col("w_short").isNotNull,
             least(lit(KeySpace), col("s_cut") * 4)).otherwise(col("s_cut")))
           .select(col("s_key"), col("s_cnt"), col("s_cut"))
         // materialize the widened cutoffs FIRST (their plan reads the old
-        // candidates through `short`), only then free the superseded
-        // candidate blocks and rebuild candidates under the new cutoffs
-        val (wrapped, cp) = Dedup.statsBarrier(widened)
-        if (priorCp != null) Dedup.freeCheckpoint(priorCp)
-        priorCp = cp
-        cut = wrapped
-        Dedup.freeCheckpoint(candidates)
-        candidates = candidatesFor(cut).localCheckpoint(true)
+        // cutoffs and, through `short`, the old candidates), only then
+        // free both and rebuild candidates under the new cutoffs
+        val next = Materialize.barrier(widened)
+        cut.release()
+        candidates.release()
+        cut = next
+        candidates = candidatesFor(cut.df)
       }
     }
+    // the returned plan reads only the (eager) candidate blocks
+    cut.release()
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy("sample_key", "doc_id")
-    val ranked = candidates
+    val ranked = candidates.df
       .withColumn("sample_rank", (row_number().over(w) - 1).cast("long"))
       .filter(col("sample_rank") < n)
       .select(col("doc_id"), col("sample_key"), col("sample_rank"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,8 +55,8 @@ object Sessions {
     * aggregates ((user_id, t) pairs — one row per user per stage, never
     * event-grain), each fed by the stage-filtered slim (user_id,
     * event_type, t) projection, which is materialized ONCE through an
-    * eager localCheckpoint; k is a small constant (the funnel
-    * definition), so this is a fixed pipeline of bounded shuffles that
+    * eager [[graft.util.Materialize]] handle; k is a small constant (the
+    * funnel definition), so this is a fixed pipeline of bounded shuffles that
     * all hash on the same key. No windows, nothing event-grain ever
     * crosses a join. The checkpoint matters because the per-depth output
     * unions every frontier and frontier i's plan nests frontier i−1's —
@@ -80,11 +81,10 @@ object Sessions {
     // frontier filters below are subsets of this isin), three slim
     // columns, materialized eagerly so the k(k+1)/2 downstream plan
     // references never re-touch the source
-    val base = events.filter(col("user_id").isNotNull)
+    val base = Materialize.eager(events.filter(col("user_id").isNotNull)
       .filter(col("event_type").isin(stages: _*))
       .select(col("user_id"),
-        col("event_type"), unix_micros(col("ts").cast("timestamp")).as("t"))
-      .localCheckpoint(true)
+        col("event_type"), unix_micros(col("ts").cast("timestamp")).as("t"))).df
     // frontier i = users who completed stages 0..i, with every completion
     // time t0..ti carried along; users drop out of the chain at their
     // first missed (or not-later) stage
@@ -117,10 +117,10 @@ object Sessions {
     * `(hour_us, n_users, n_retained)`, all BIGINT (hour_us = bucket start
     * in epoch microseconds). Scale shape: ONE distinct (user, hour)
     * shuffle — the slim frame materializes through an eager
-    * localCheckpoint and its three plan references (shifted self-join
-    * side, semi-join side, per-hour rollup) read the blocks; the r5
-    * version re-scanned the event source and re-ran the distinct shuffle
-    * per reference (plan-audited: 3 source scans), because the three
+    * [[graft.util.Materialize]] handle and its three plan references
+    * (shifted self-join side, semi-join side, per-hour rollup) read the
+    * blocks; the r5 version re-scanned the event source and re-ran the
+    * distinct shuffle per reference (plan-audited: 3 source scans), because the three
     * references hash on three different keys and no exchange reuse can
     * fire. Never event-grain past the distinct.
     */
@@ -128,12 +128,11 @@ object Sessions {
     val hourUs = 3600L * 1000000L
     // integral `div` (never a double divide — a quotient one ulp under a
     // bucket boundary would truncate into the wrong hour)
-    val active = events
+    val active = Materialize.eager(events
       .select(col("user_id"),
         expr(s"(unix_micros(cast(ts AS timestamp)) div ${hourUs}L) * ${hourUs}L")
           .as("hour_us"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct()).df
     val next = active.select(col("user_id"),
       (col("hour_us") - hourUs).as("hour_us"))
     active.join(next, Seq("user_id", "hour_us"), "left_semi")

@@ -117,7 +117,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("learnMerges crosses the checkpoint barrier result-invisibly") {
     // past CheckpointEvery rounds the loop re-bases the corpus on a
-    // statsBarrier localCheckpoint (bounding the Θ(k²) kernel-stack
+    // Materialize.barrier checkpoint (bounding the Θ(k²) kernel-stack
     // recompute); the learned table and the merged corpus must be
     // bit-identical to the pure-Scala reference across that boundary
     val rnd = new scala.util.Random(7)

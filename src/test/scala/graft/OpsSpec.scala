@@ -293,10 +293,14 @@ class OpsSpec extends AnyFunSuite {
     // driverLimit = 0 forces the distributed path (the driver union-find
     // fast path has no iteration budget to exhaust).
     val chain = (0 until 12).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, maxIter = 3, driverLimit = 0)
     }
     assert(e.getMessage.contains("converge"), e.getMessage)
+    // and the throw strands no blocks: nodes and edges are released too
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(kept.isEmpty, s"the failed call kept RDDs $kept")
     // and with enough rounds the whole chain collapses to label 0
     val ok = Dedup.connectedComponents(chain, maxIter = 20, driverLimit = 0).collect()
     assert(ok.map(_.getLong(1)).distinct.sameElements(Array(0L)))
@@ -1274,4 +1278,72 @@ class OpsSpec extends AnyFunSuite {
     assert(viaDriver.forall { case (n, l) => l <= n && viaDriver(l) == l })
     assert(Seq.tabulate(30)(i => viaDriver(5000L + i) == viaDriver(i.toLong)).forall(identity))
   }
+
+  /** The persisted RDDs a plan reads: each LogicalRDD leaf's RDD, walked
+    * down its dependencies to the first persisted RDD on every path (a
+    * barrier's re-wrapped frame owns no blocks; its checkpoint does).
+    */
+  private def persistedReads(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def walk(rdd: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      if (persisted(rdd.id)) Set(rdd.id)
+      else rdd.dependencies.flatMap(d => walk(d.rdd)).toSet
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.LogicalRDD => walk(l.rdd)
+    }.flatten.toSet
+  }
+
+  /** One invocation of `op`, over inputs materialized beforehand (a cached
+    * input's blocks are not the op's), must leave persisted exactly the
+    * RDDs its result reads — and the result must still read them.
+    */
+  private def keepsOnlyWhatItReads(name: String, inputs: => Seq[org.apache.spark.sql.DataFrame] = Nil)(
+      op: => org.apache.spark.sql.DataFrame): Unit =
+    test(s"$name keeps only the blocks its result reads") {
+      inputs.foreach(_.count())
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val result = op
+      val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val reads = persistedReads(result)
+      assert(kept == reads, s"$name kept RDDs $kept; its result reads $reads")
+      result.count()
+    }
+
+  private lazy val events = spark.read.parquet(s"$dir/events.parquet")
+  // a random small-alphabet corpus that sustains CheckpointEvery + 2
+  // rounds, so both lazy and barrier rounds run
+  private def bpeCorpus = {
+    val rnd = new scala.util.Random(7)
+    Seq.tabulate(30)(i => i.toLong -> Seq.fill(30)(rnd.nextInt(4).toLong))
+      .toDF("doc_id", "tokens")
+  }
+  private def randomPairs = {
+    val rnd = new scala.util.Random(20260816L)
+    Seq.tabulate(300)(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+      .toDF("doc_a", "doc_b")
+  }
+
+  keepsOnlyWhatItReads("globalRowNumber") {
+    Ranks.globalRowNumber(Seq.tabulate(200)(i => (i.toLong, (i % 7).toLong))
+      .toDF("doc_id", "score"), Seq($"score".desc, $"doc_id"), "rank")
+  }
+  keepsOnlyWhatItReads("funnel", Seq(events)) {
+    Sessions.funnel(events, Seq("signup", "view", "purchase"))
+  }
+  keepsOnlyWhatItReads("retention", Seq(events))(Sessions.retention(events))
+  keepsOnlyWhatItReads("minhashPairs", Seq(docs))(Dedup.minhashPairs(docs))
+  keepsOnlyWhatItReads("verifiedPairs", Seq(docs))(Dedup.verifiedPairs(docs))
+  keepsOnlyWhatItReads("jaccardVerify(reduceToCandidates = true)", Seq(docs)) {
+    Dedup.jaccardVerify(docs, Seq((0L, 1L), (1L, 2L), (3L, 9L)).toDF("doc_a", "doc_b"),
+      reduceToCandidates = true)
+  }
+  keepsOnlyWhatItReads("connectedComponents (driver path)")(
+    Dedup.connectedComponents(randomPairs))
+  keepsOnlyWhatItReads("connectedComponents (distributed path)")(
+    Dedup.connectedComponents(randomPairs, driverLimit = 0))
+  keepsOnlyWhatItReads("sampleExact", Seq(docs))(Sampling.sampleExact(docs, "lang", 20, 7))
+  keepsOnlyWhatItReads("learnMerges")(Bpe.learnMerges(bpeCorpus, Bpe.CheckpointEvery + 2)._2)
+  keepsOnlyWhatItReads("learnMergesDelta")(
+    Bpe.learnMergesDelta(bpeCorpus, Bpe.CheckpointEvery + 2)._2)
+  keepsOnlyWhatItReads("ivfTrain", Seq(embeds))(Ann.ivfTrain(embeds, nCentroids = 8))
 }

@@ -7,9 +7,6 @@ import org.apache.spark.sql.SparkSession
   *   sbt -batch "set Compile/unmanagedSources += file(\"tools/evidence/BpeDelta.scala\")"
   *       "runMain BpeDelta"
   * Env: BPE_DIR (default /root/testdata/sf0.1), BPE_K (default 6).
-  * Add `set run/javaOptions += "-Dgraft.bpe.verbose=1"` for the
-  * per-round wall-time + changed-docs trend (adds a count() pass per
-  * round — never record such runs as totals).
   *
   * Interleaved warm best-of-2 per trainer (this VM's shared cores swing
   * ±30% — same discipline as Bench); asserts the learned tables are
