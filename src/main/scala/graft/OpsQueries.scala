@@ -976,14 +976,6 @@ it${r + 1} AS MATERIALIZED (
     * — gate data has real ties at every round, so don't weaken either
     * side's ORDER BY. (3) Fresh ids start at 2^31, above the int32 token
     * domain — no collision with input tokens.
-    *
-    * r5 note: the DELTA trainer ([[Bpe.learnMergesDelta]]) exists as the
-    * scale path (per-round recounts touch only changed docs) and is
-    * BpeSpec-pinned table-and-corpus identical at k = 32 — but the GATE
-    * stays on [[Bpe.learnMerges]], which measures faster here (gate
-    * data's small alphabet collapses the recount shuffle under map-side
-    * combine, so single-action rounds win on job fixed costs; numbers in
-    * Bpe.scaladoc + BASELINE.md).
     */
   private val bpeLearn = Q(
     (s, dir) => {

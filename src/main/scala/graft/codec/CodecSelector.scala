@@ -19,9 +19,7 @@ final case class ColumnStats(
     maxDelta: Long,
     rleBytes: Long,        // exact RLE payload size
     dictValueBytes: Long   // exact zigzag bytes of the dictionary values
-) {
-  def avgRunLen: Double = if (nRuns == 0) 0.0 else n.toDouble / nRuns
-}
+)
 
 object ColumnStats {
   val DistinctCap = 4096

@@ -75,51 +75,6 @@ object BpeMerge {
   }
 }
 
-/** bpe_pair_present(tokens array<bigint>, lhs, rhs) -> boolean: does the
-  * adjacent pair (lhs, rhs) occur anywhere in the array? Exactly the
-  * trigger condition of [[BpeMerge]]'s greedy pass — the kernel rewrites
-  * a row iff this predicate holds (a present pair always merges at least
-  * its leftmost occurrence; an absent pair leaves the row untouched) —
-  * which is what makes the delta trainer's changed-doc filter sound.
-  * Early-exit scan, native for the same reason as bpe_merge: it runs
-  * once per corpus row per trainer round, and the higher-order `exists`
-  * formulation is CodegenFallback.
-  */
-case class BpePairPresent(child: Expression, lhs: Long, rhs: Long)
-    extends UnaryExpression with Predicate {
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bpe_pair_present"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint> with non-null elements, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(tokens: Any): Any =
-    java.lang.Boolean.valueOf(
-      BpePairPresent.compute(tokens.asInstanceOf[ArrayData], lhs, rhs))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.BpePairPresent.compute($arr, ${lhs}L, ${rhs}L);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object BpePairPresent {
-  /** Java-callable kernel (used from generated code). */
-  def compute(arr: ArrayData, a: Long, b: Long): Boolean = {
-    val n = arr.numElements()
-    var j = 0
-    while (j + 1 < n) {
-      if (arr.getLong(j) == a && arr.getLong(j + 1) == b) return true
-      j += 1
-    }
-    false
-  }
-}
-
 /** long_checksum(arr array<bigint>) -> bigint:
   * `pmod(sum(pmod((i+1) * v_i, M)), M)` with 1-based positions and
   * M = 1_000_000_007 — the positional content fold for BIGINT-valued

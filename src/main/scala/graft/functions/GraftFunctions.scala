@@ -82,9 +82,6 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("bpe_merge",
       exprs => BpeMerge(exprs(0), litLong(exprs(1)), litLong(exprs(2)),
         litLong(exprs(3))), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_pair_present",
-      exprs => BpePairPresent(exprs(0), litLong(exprs(1)), litLong(exprs(2))),
-      "scala_udf")
     reg.createOrReplaceTempFunction("long_checksum",
       exprs => LongChecksum(exprs.head), "scala_udf")
   }

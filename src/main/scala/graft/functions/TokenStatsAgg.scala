@@ -96,16 +96,4 @@ object TokenStatsAgg {
   /** DataFrame-facing column: token_stats_agg(tokens). */
   def column(tokens: Column): Column =
     org.apache.spark.sql.functions.udaf(agg).apply(tokens)
-
-  /** Partition-level codec recommendation from merged stats — the
-    * decision-table view of the cost-based per-row selector (dominant-
-    * signal heuristic, for lineage/ops visibility).
-    */
-  def recommend(s: Stats): String = {
-    if (s.n_tokens == 0) "plain"
-    else if (s.avg_run_len >= 4.0) "rle"
-    else if (s.sorted_rows == s.n_rows) "fordelta"
-    else if (s.max - s.min < (1L << 16)) "bitpack"
-    else "dict"
-  }
 }

@@ -126,117 +126,7 @@ object Bpe {
     (merges.toSeq, merged)
   }
 
-  /** Delta-count trainer (the scale step over [[learnMerges]]): identical
-    * merge table — BpeSpec pins the equivalence at k ≥ 32 — but per-round
-    * cost tracks the CHANGED-doc set, not the corpus.
-    *
-    * [[learnMerges]] recounts every adjacent pair of every document each
-    * round: one full-corpus explode + shuffle per merge, Θ(k · corpus) —
-    * honest at gate k = 6, quadratic-ish toward a real 32k vocab. This
-    * variant maintains the pair-count table across rounds and folds in
-    * per-round DELTAS: only documents containing the merged pair can
-    * change any count (the [[graft.functions.BpePairPresent]] predicate is
-    * exactly the merge kernel's rewrite trigger), so each round
-    *   - filters the materialized corpus with the early-exit native predicate
-    *     (one map-side pass, no shuffle),
-    *   - recounts pairs of the changed docs before and after the merge —
-    *     explode + shuffle over the SHRINKING changed subset only,
-    *   - folds `after − before` into the running count table (slim
-    *     (lhs, rhs, count) rows, materialized per round with the lineage cut
-    *     every [[CheckpointEvery]] rounds),
-    * and reads the next argmax from the table — the argmax action is also
-    * what materializes the previous round's fold, so a round costs TWO
-    * Spark actions total (changed-scan, argmax+fold). Exactness:
-    * unchanged docs contribute identical pair multisets before and after,
-    * so `counts ⊕ (after(changed) − before(changed))` ≡ a full recount —
-    * including the lhs = rhs greedy run-parity regime, because both sides
-    * of the delta count REAL arrays the kernel produced. As merges
-    * specialize, |changed| collapses, so late rounds cost one map-side
-    * corpus scan plus a near-empty shuffle. The merge-kernel rewrite
-    * stays one codegen'd pass per row with the same [[CheckpointEvery]]
-    * barrier discipline.
-    *
-    * WHEN TO USE WHICH (measured, BASELINE.md §bpe): on gate data the
-    * token alphabet is small, so the recount's pair shuffle collapses
-    * under map-side combine to a few thousand rows and [[learnMerges]]'s
-    * single action per round wins on job fixed costs (sf0.1 k=6, warm
-    * interleaved: 3.6s vs 5.2s). The delta trainer's per-round cost falls with round index
-    * (sf0.01 k=24: 2.9s → 0.6s as the changed set specializes) and its
-    * shuffle volume is |changed| pairs instead of the corpus — the
-    * trade that wins exactly when corpus-scale pair explosion dominates
-    * job overhead: large alphabets (real text, not mod-64 synthetics),
-    * deep vocabularies, executor-count clusters. The gate/bench queries
-    * therefore stay on [[learnMerges]]; this is the documented scale
-    * path, equivalence-pinned so the switch is a one-line swap.
-    */
-  def learnMergesDelta(tokens: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
-    require(nMerges >= 1 && nMerges <= 4096,
-      s"nMerges must be in [1, 4096]: $nMerges")
-    graft.functions.GraftFunctions.register(tokens.sparkSession)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    // the delta sources: docs merge `m` rewrites, read by the round's two
-    // recounts (before/after). Eager — one job before the fold, whose
-    // union reads it twice: two cold branches in one job would each run
-    // the full corpus scan (the round's dominant cost) instead of sharing
-    // one pass. The scan also materializes a lazy corpus.
-    def changedBy(corpus: Materialize.Handle, m: Merge) =
-      Materialize.eager(corpus.df.filter(
-        call_function("bpe_pair_present", col("tokens"), lit(m.lhs), lit(m.rhs))))
-    // `corpus`, `counts` (its pair counts) and `changed` are materialized;
-    // merge `m` is the round's argmax
-    @tailrec def round(corpus: Materialize.Handle, counts: Materialize.Handle,
-        m: Merge, changed: Materialize.Handle): DataFrame = {
-      merges += m
-      val merged = applyMerge(corpus.df, m)
-      if (merges.size == nMerges) {
-        changed.release()
-        counts.release()
-        merged
-      } else {
-        val before = pairCounts(changed.df)
-          .select(col("lhs"), col("rhs"), (-col("pair_count")).as("pair_count"))
-        val after = pairCounts(applyMerge(changed.df, m))
-        val fold = counts.df.unionAll(before).unionAll(after)
-          .groupBy("lhs", "rhs")
-          .agg(sum("pair_count").as("pair_count"))
-          .filter(col("pair_count") =!= 0)
-        // same strand / barrier-is-the-materialization posture as
-        // [[learnMerges]]; the barrier cuts both lineages: the corpus
-        // kernel stack (Θ(k²) recompute otherwise) and the counts union
-        // chain (plan + originStats growth)
-        val barrier = merges.size % CheckpointEvery == 0
-        val folded = if (barrier) Materialize.barrier(fold) else Materialize.lazily(fold)
-        // the argmax also materializes a lazy fold — one job does both
-        val top = nextMerge(folded.df, merges.size)
-        counts.release()
-        changed.release()
-        top match {
-          case None =>
-            folded.release()
-            merged
-          case Some(m2) =>
-            val next = if (barrier) Materialize.barrier(merged) else Materialize.lazily(merged)
-            val nextChanged = changedBy(next, m2)
-            // that scan materialized `next`, which read `corpus`: it is done
-            corpus.release()
-            round(next, folded, m2, nextChanged)
-        }
-      }
-    }
-    val corpus = Materialize.lazily(longTokens(tokens))
-    // seed counts: ONE full recount (its barrier also materializes the
-    // round-0 corpus), then deltas only
-    val counts = Materialize.barrier(pairCounts(corpus.df))
-    val merged = nextMerge(counts.df, 0) match {
-      case Some(m) => round(corpus, counts, m, changedBy(corpus, m))
-      case None =>
-        counts.release()
-        corpus.df
-    }
-    (merges.toSeq, merged)
-  }
-
-  /** `(doc_id, tokens array<bigint>)`: the trainers' corpus, its int32
+  /** `(doc_id, tokens array<bigint>)`: the trainer's corpus, its int32
     * tokens widened once up front.
     */
   private def longTokens(tokens: DataFrame): DataFrame =

@@ -148,44 +148,10 @@ object Dedup {
     * given candidate pair set — the verify stage of the near-dup pipeline.
     * Cost is O(|candidates|): the docs' gram sets are joined to the pair
     * list, never cross-joined.
-    *
-    * `reduceToCandidates` (default off) semi-joins the docs source
-    * against the candidate-involved id set BEFORE building gram arrays,
-    * so the gram construction touches only candidate docs. MEASURED
-    * trade (r6 A/B, interleaved best-of-4 at sf0.1 / local[32]): at gate
-    * scale the default single-job form wins — 0.69s vs 1.03s — because
-    * the reduction costs a candidate materialization (eager checkpoint),
-    * a count, and two semi-joins, i.e. several sequential jobs where the
-    * default runs ONE fully-overlapped job and 32 cores absorb the
-    * wasted gram builds. At corpus scales where candidates are sparse
-    * and gram construction dominates (billions of docs, candidate
-    * fraction ≪ 1), flip it on: gram work then tracks |candidates|, not
-    * |corpus|. The switch is result-invisible (OpsSpec asserts equality).
     */
-  def jaccardVerify(docs: DataFrame, candidates: DataFrame,
-      reduceToCandidates: Boolean = false): DataFrame = {
-    val (cand, grams) =
-      if (!reduceToCandidates) {
-        (candidates.select("doc_a", "doc_b"),
-          trigrams(docs).select("doc_id", "grams"))
-      } else {
-        // the candidate frame is referenced three times in this mode (two
-        // id projections + the pair join) and its plan can be arbitrarily
-        // expensive — pin it once with an eager checkpoint. The id
-        // semi-join is size-guarded like every slim-side join in this
-        // engine: broadcast while the pair list is small (the count is
-        // free — the blocks are already materialized), SHUFFLE_HASH past
-        // the limit — never an SMJ that would sort the text side.
-        val c = Materialize.eager(candidates.select("doc_a", "doc_b")).df
-        val nCand = c.count()
-        val ids = c.select(col("doc_a").as("doc_id"))
-          .unionByName(c.select(col("doc_b").as("doc_id"))).distinct()
-        val idsSide = if (2 * nCand <= (1L << 20)) broadcast(ids)
-          else ids.hint("SHUFFLE_HASH")
-        (c, trigrams(docs.join(idsSide, Seq("doc_id"), "left_semi"))
-          .select("doc_id", "grams"))
-      }
-    cand
+  def jaccardVerify(docs: DataFrame, candidates: DataFrame): DataFrame = {
+    val grams = trigrams(docs).select("doc_id", "grams")
+    candidates.select("doc_a", "doc_b")
       .join(grams.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("grams", "grams_a"), "doc_a")
       .join(grams.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("grams", "grams_b"), "doc_b")
       .select(col("doc_a"), col("doc_b"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-semantics checkpointed sink over plain parquet (no Iceberg
   * runtime jars ship in this sandbox — SURVEY.md §7 preamble): snapshot
@@ -70,21 +71,38 @@ object ManifestSink {
   def manifestDir(root: String): String = s"$root/manifest"
   private def commitsDir(root: String): Path = Paths.get(root, "commits")
 
-  /** Ids of committed runs (tiny listing; one marker file per run). */
-  def committedRunIds(root: String): Seq[String] = {
-    val dir = commitsDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val s = Files.list(dir)
-    try {
-      s.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".json") && !n.startsWith("_tmp"))
-          out += n.stripSuffix(".json")
-      }
-    } finally s.close()
-    out.toSeq.sorted
+  // ---- marker files: commits/, inflight/ and errors/ each hold one
+  // `<runId>.json` per run, published by tmp-write + atomic rename
+  // (export.rs:13-23 semantics), so a listing never sees a partial file ----
+
+  /** Atomically publish `dir/<runId>.json` (replacing any earlier one). */
+  private def writeMarker(dir: Path, runId: String, json: String): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s"_tmp_$runId.json")
+    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, dir.resolve(s"$runId.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** The published markers in `dir` (`*.json`, never an unrenamed `_tmp`);
+    * empty if `dir` does not exist.
+    */
+  private def markers(dir: Path): Seq[Path] = {
+    if (!Files.isDirectory(dir)) return Seq.empty
+    val s = Files.list(dir)
+    try s.iterator.asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".json") && !n.startsWith("_tmp")
+    }.toList
+    finally s.close()
+  }
+
+  private def readUtf8(p: Path): String =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+
+  /** Ids of committed runs (tiny listing; one marker file per run). */
+  def committedRunIds(root: String): Seq[String] =
+    markers(commitsDir(root)).map(_.getFileName.toString.stripSuffix(".json")).sorted
 
   /** Next run id for this sink: `run-<idx>-<uuid8>` with a MONOTONIC index
     * (max committed index + 1, never reusing a lower index after
@@ -286,20 +304,11 @@ object ManifestSink {
     * (export.rs:13-23 semantics). Call only after data + manifest writes
     * succeeded.
     */
-  def commitRun(root: String, runId: String, summaryJson: String): Unit = {
-    val dir = commitsDir(root)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"_tmp_$runId.json")
-    Files.write(tmp, summaryJson.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"$runId.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def commitRun(root: String, runId: String, summaryJson: String): Unit =
+    writeMarker(commitsDir(root), runId, summaryJson)
 
   def readCommitSummaries(root: String): Seq[String] =
-    committedRunIds(root).map { id =>
-      new String(Files.readAllBytes(commitsDir(root).resolve(s"$id.json")),
-        StandardCharsets.UTF_8)
-    }
+    committedRunIds(root).map(id => readUtf8(commitsDir(root).resolve(s"$id.json")))
 
   // ---- pinned plan geometry: part_keys are positional (source, salt,
   // bin) coordinates, so EVERY run against a sink must use the same salt
@@ -373,7 +382,7 @@ object ManifestSink {
   def pinnedPlanConfig(root: String): Option[(Int, Long)] = {
     val p = configPath(root)
     if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+    val s = readUtf8(p)
     val re = """\{"salt_buckets":(\d+),"target_bin_tokens":(\d+)\}""".r
     s match {
       case re(sb, tb) => Some((sb.toInt, tb.toLong))
@@ -394,14 +403,8 @@ object ManifestSink {
   private def inflightDir(root: String): Path = Paths.get(root, "inflight")
 
   /** Durably record that a run attempt has started (atomic tmp+rename). */
-  def recordInflight(root: String, runId: String, json: String): Unit = {
-    val dir = inflightDir(root)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"_tmp_$runId.json")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"$runId.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def recordInflight(root: String, runId: String, json: String): Unit =
+    writeMarker(inflightDir(root), runId, json)
 
   /** Remove a run's in-flight marker (attempt reached a terminal state). */
   def clearInflight(root: String, runId: String): Unit =
@@ -411,20 +414,8 @@ object ManifestSink {
     * each is an attempt that died (kill/OOM/power) mid-run and may have
     * left orphan (invisible) data files worth garbage-collecting.
     */
-  def readInflightMarkers(root: String): Seq[String] = {
-    val dir = inflightDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val s = Files.list(dir)
-    try {
-      s.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".json") && !n.startsWith("_tmp"))
-          out += new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      }
-    } finally s.close()
-    out.toSeq.sorted
-  }
+  def readInflightMarkers(root: String): Seq[String] =
+    markers(inflightDir(root)).map(readUtf8).sorted
 
   final case class GcReport(
       dataFilesDeleted: Int,
@@ -555,32 +546,14 @@ object ManifestSink {
 
   /** Durably record a failed run attempt (atomic tmp+rename like commits). */
   def recordError(root: String, runId: String, message: String): Unit = {
-    val dir = errorsDir(root)
-    Files.createDirectories(dir)
     // truncate the RAW message first, then escape: truncating after
     // escaping could cut mid escape pair (trailing lone backslash from an
     // escaped quote) and produce an invalid JSON report
     val safe = graft.util.JsonEsc.escape(message.take(500))
-    val tmp = dir.resolve(s"_tmp_$runId.json")
-    Files.write(tmp,
-      s"""{"run_id":"$runId","error":"$safe"}""".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"$runId.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeMarker(errorsDir(root), runId, s"""{"run_id":"$runId","error":"$safe"}""")
   }
 
   /** JSON bodies of recorded failed attempts (empty if none). */
-  def readErrorReports(root: String): Seq[String] = {
-    val dir = errorsDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val s = Files.list(dir)
-    try {
-      s.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".json") && !n.startsWith("_tmp"))
-          out += new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      }
-    } finally s.close()
-    out.toSeq.sorted
-  }
+  def readErrorReports(root: String): Seq[String] =
+    markers(errorsDir(root)).map(readUtf8).sorted
 }

@@ -55,12 +55,6 @@ object Tokens {
   // would have constant deltas and FOR-delta would (correctly but
   // pointlessly) compress it to nothing. All intermediates stay < 2^52.
 
-  /** The SQL-lambda form of the generator (kept for the equivalence test —
-    * the DuckDB oracle mirrors this arithmetic).
-    */
-  def tokensSqlExpr: String =
-    s"CAST(transform(sequence(0L, CAST(n_tok AS BIGINT) - 1), i -> ${genSql("doc_id", "i")}) AS array<int>)"
-
   /** Spark-side token table derived from `documents.parquet` under sfDir.
     * Token materialization uses the native [[graft.functions.GenTokens]]
     * kernel (value-identical to [[genSql]]; asserted in TokensSpec) — the

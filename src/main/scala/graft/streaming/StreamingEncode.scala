@@ -3,7 +3,7 @@ package graft.streaming
 import graft.pipeline.EncodePipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference is
@@ -139,9 +139,5 @@ object StreamingEncode {
           state.update(BinState(cum))
           out.iterator
         })
-  }
-
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.awaitTermination()
   }
 }

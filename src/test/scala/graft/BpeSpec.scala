@@ -98,21 +98,37 @@ class BpeSpec extends AnyFunSuite {
   test("learnMerges matches the pure-Scala reference trainer, ranks and counts") {
     // crafted corpus with count ties (resolved by the (count, lhs, rhs)
     // total order) and a run of equal tokens
-    val corpus = Seq(
+    val crafted = Seq(
       0L -> Seq(1L, 2, 1, 2, 3, 3, 3, 1, 2),
       1L -> Seq(2L, 1, 2, 1, 2, 3),
       2L -> Seq(3L, 3, 3, 3, 1, 2),
       3L -> Seq(7L, 8, 7, 8, 7, 8))
-    val df = corpus.toDF("doc_id", "tokens")
-    val (got, merged) = Bpe.learnMerges(df, 5)
-    val want = refLearn(corpus.map(_._2), 5)
-    assert(got == want)
-    // and the merged corpus matches the reference fold applied in order
-    val gotCorpus = merged.as[(Long, Seq[Long])].collect().toMap
-    val wantCorpus = corpus.map { case (id, t) =>
-      id -> want.foldLeft(t)((acc, m) => refMerge(acc, m.lhs, m.rhs, m.new_id))
-    }.toMap
-    assert(gotCorpus == wantCorpus)
+    // run-heavy corpus that sustains 32 rounds (three barrier rounds) and
+    // hits the lhs = rhs run-parity regime (long equal runs)
+    val rnd = new scala.util.Random(23)
+    val runHeavy = Seq.tabulate(40) { i =>
+      val runs = Seq.fill(10 + rnd.nextInt(8)) {
+        val sym = rnd.nextInt(5).toLong
+        Seq.fill(1 + rnd.nextInt(4))(sym)
+      }
+      i.toLong -> runs.flatten
+    }
+    // a corpus that runs out of pairs: learning stops after one merge
+    val tiny = Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L))
+    for ((corpus, k, rounds) <- Seq((crafted, 5, 5), (runHeavy, 32, 32), (tiny, 5, 1))) {
+      val (got, merged) = Bpe.learnMerges(corpus.toDF("doc_id", "tokens"), k)
+      val want = refLearn(corpus.map(_._2), k)
+      assert(got == want, s"k = $k")
+      assert(got.size == rounds, s"k = $k")
+      // and the merged corpus matches the reference fold applied in order
+      val gotCorpus = merged.as[(Long, Seq[Long])].collect().toMap
+      val wantCorpus = corpus.map { case (id, t) =>
+        id -> want.foldLeft(t)((acc, m) => refMerge(acc, m.lhs, m.rhs, m.new_id))
+      }.toMap
+      assert(gotCorpus == wantCorpus, s"k = $k")
+    }
+    assert(refLearn(runHeavy.map(_._2), 32).exists(m => m.lhs == m.rhs),
+      "the equal-pair regime must be exercised — regenerate the corpus if this trips")
   }
 
   test("learnMerges crosses the checkpoint barrier result-invisibly") {
@@ -158,71 +174,6 @@ class BpeSpec extends AnyFunSuite {
     val (merges, _) = Bpe.learnMerges(toks, 6)
     assert(merges.size == 6)
     assert(merges.forall(m => m.lhs != m.rhs), merges.toString)
-  }
-
-  test("bpe_pair_present kernel ≡ adjacency check; exactly the merge kernel's rewrite trigger") {
-    graft.functions.GraftFunctions.register(spark)
-    val rnd = new scala.util.Random(11)
-    val cases = Seq.tabulate(80) { i =>
-      (i.toLong, Seq.fill(rnd.nextInt(20))(rnd.nextInt(3).toLong))
-    }
-    val df = cases.toDF("doc_id", "tokens")
-    for (a <- 0L to 2L; b <- 0L to 2L) {
-      val got = df
-        .select($"doc_id",
-          call_function("bpe_pair_present", $"tokens", lit(a), lit(b)).as("p"),
-          call_function("bpe_merge", $"tokens", lit(a), lit(b), lit(9999L)).as("m"),
-          $"tokens")
-        .as[(Long, Boolean, Seq[Long], Seq[Long])].collect()
-      got.foreach { case (id, present, merged, orig) =>
-        // independent adjacency reference
-        val want = orig.indices.dropRight(1).exists(j => orig(j) == a && orig(j + 1) == b)
-        assert(present == want, s"doc $id pair ($a,$b)")
-        // soundness coupling for the delta trainer's changed-doc filter:
-        // the kernel rewrites a row IFF the predicate holds
-        assert(present == (merged != orig), s"doc $id pair ($a,$b): trigger mismatch")
-      }
-    }
-  }
-
-  test("learnMergesDelta ≡ learnMerges at k = 32 (merge table and corpus), incl. lhs = rhs rounds") {
-    // corpus engineered to sustain 32 merges and to hit the lhs = rhs
-    // run-parity regime (long equal runs) — the delta fold must stay exact
-    // through both, because each side of the delta counts REAL kernel
-    // output arrays
-    val rnd = new scala.util.Random(23)
-    val corpus = Seq.tabulate(40) { i =>
-      val runs = Seq.fill(10 + rnd.nextInt(8)) {
-        val sym = rnd.nextInt(5).toLong
-        Seq.fill(1 + rnd.nextInt(4))(sym)
-      }
-      i.toLong -> runs.flatten
-    }
-    val df = corpus.toDF("doc_id", "tokens")
-    val k = 32
-    val (full, fullCorpus) = Bpe.learnMerges(df, k)
-    val (delta, deltaCorpus) = Bpe.learnMergesDelta(df, k)
-    assert(full.size == k, "corpus must sustain all 32 rounds for the claim to bind")
-    assert(delta == full)
-    assert(full.exists(m => m.lhs == m.rhs),
-      "the equal-pair regime must be exercised — regenerate the corpus if this trips")
-    val a = fullCorpus.as[(Long, Seq[Long])].collect().toMap
-    val b = deltaCorpus.as[(Long, Seq[Long])].collect().toMap
-    assert(a == b)
-  }
-
-  test("learnMergesDelta matches the reference trainer on the gate source and early-stops exactly") {
-    val toks = graft.sources.Tokens.fromDocuments(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"tokens").limit(60)
-    val (full, _) = Bpe.learnMerges(toks, 6)
-    val (delta, _) = Bpe.learnMergesDelta(toks, 6)
-    assert(delta == full)
-    // exhaustion parity: a tiny corpus that runs out of pairs stops both
-    // trainers at the same round with the same table
-    val tiny = Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L)).toDF("doc_id", "tokens")
-    val (f2, _) = Bpe.learnMerges(tiny, 5)
-    val (d2, _) = Bpe.learnMergesDelta(tiny, 5)
-    assert(d2 == f2 && d2.size == 1)
   }
 
   test("long_checksum ≡ SQL positional fold and token_checksum congruence") {

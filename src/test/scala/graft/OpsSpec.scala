@@ -139,14 +139,6 @@ class OpsSpec extends AnyFunSuite {
     val lsh = Dedup.verifiedPairs(docs, minJacPct = 80)
     assert(lsh.exceptAll(exact).count() == 0)
     assert(exact.exceptAll(lsh).count() == 0)
-    // the opt-in candidate-reduction scale path is result-invisible: same
-    // rows as the default single-job form over a real candidate set
-    val cands = Dedup.minhashPairs(docs, minEstJaccard = 0.2)
-      .select("doc_a", "doc_b")
-    val dflt = Dedup.jaccardVerify(docs, cands)
-    val reduced = Dedup.jaccardVerify(docs, cands, reduceToCandidates = true)
-    assert(dflt.exceptAll(reduced).count() == 0)
-    assert(reduced.exceptAll(dflt).count() == 0)
   }
 
   test("connected components: chains merge, disjoint clusters stay apart") {
@@ -1333,17 +1325,11 @@ class OpsSpec extends AnyFunSuite {
   keepsOnlyWhatItReads("retention", Seq(events))(Sessions.retention(events))
   keepsOnlyWhatItReads("minhashPairs", Seq(docs))(Dedup.minhashPairs(docs))
   keepsOnlyWhatItReads("verifiedPairs", Seq(docs))(Dedup.verifiedPairs(docs))
-  keepsOnlyWhatItReads("jaccardVerify(reduceToCandidates = true)", Seq(docs)) {
-    Dedup.jaccardVerify(docs, Seq((0L, 1L), (1L, 2L), (3L, 9L)).toDF("doc_a", "doc_b"),
-      reduceToCandidates = true)
-  }
   keepsOnlyWhatItReads("connectedComponents (driver path)")(
     Dedup.connectedComponents(randomPairs))
   keepsOnlyWhatItReads("connectedComponents (distributed path)")(
     Dedup.connectedComponents(randomPairs, driverLimit = 0))
   keepsOnlyWhatItReads("sampleExact", Seq(docs))(Sampling.sampleExact(docs, "lang", 20, 7))
   keepsOnlyWhatItReads("learnMerges")(Bpe.learnMerges(bpeCorpus, Bpe.CheckpointEvery + 2)._2)
-  keepsOnlyWhatItReads("learnMergesDelta")(
-    Bpe.learnMergesDelta(bpeCorpus, Bpe.CheckpointEvery + 2)._2)
   keepsOnlyWhatItReads("ivfTrain", Seq(embeds))(Ann.ivfTrain(embeds, nCentroids = 8))
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run (guide: one session
@@ -17,6 +20,17 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // Spark warns on every unpersist of a local checkpoint ("RDD n was
+    // locally checkpointed, ... cannot be recomputed after unpersisting");
+    // each Materialize release is one, hundreds per run, burying the other
+    // warnings. Drop that message only; every other WARN line stays.
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val quiet = RegexFilter.createFilter(
+      ".*was locally checkpointed.*cannot be recomputed after unpersisting.*",
+      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL)
+    quiet.start()
+    ctx.getConfiguration.addFilter(quiet)
+    ctx.updateLoggers()
     s
   }
 }
