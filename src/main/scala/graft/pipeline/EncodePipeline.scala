@@ -79,8 +79,6 @@ object EncodePipeline {
                                      // blobs: the lightweight codecs expose
                                      // cross-row structure zstd exploits
                                      // (0.71 B/tok vs 1.42 for zstd on raw)
-      broadcastKeyLimit: Long = 1L << 20, // key-table rows above this use a
-                                          // shuffle join, not a broadcast
       strictResume: Boolean = true,       // fail-fast if a skipped part_key's
                                           // doc count drifted from the manifest
       label: String = "",     // K4/K5 user chunk label (reference
@@ -159,7 +157,6 @@ object EncodePipeline {
       require(targetBinTokens > 0, s"targetBinTokens must be positive: $targetBinTokens")
       require(saltBuckets >= 0, s"saltBuckets must be >= 0 (0 = auto): $saltBuckets")
       require(maxPartitionsPerRun > 0, s"maxPartitionsPerRun must be positive")
-      require(broadcastKeyLimit > 0, s"broadcastKeyLimit must be positive")
       require(!partPrefix.contains("/"),
         s"partPrefix must not contain '/' (it is a part_key segment): '$partPrefix'")
       val codecs = Set("zstd", "lz4", "snappy", "gzip", "lzo", "brotli", "none", "uncompressed")
@@ -193,7 +190,7 @@ object EncodePipeline {
         s""""target_partitions":$targetPartitions,""" +
         s""""salt_buckets":$resolvedSalts,"max_partitions_per_run":$maxPartitionsPerRun,""" +
         s""""part_prefix":"${esc(partPrefix)}","parquet_codec":"$parquetCodec",""" +
-        s""""broadcast_key_limit":$broadcastKeyLimit,"strict_resume":$strictResume,""" +
+        s""""strict_resume":$strictResume,""" +
         s""""overwrite":$overwrite,""" +
         s""""label":"${esc(label)}",""" +
         s""""sort_columns":[${sortColumns.map(c => "\"" + esc(c) + "\"").mkString(",")}],""" +
@@ -232,10 +229,7 @@ object EncodePipeline {
     * total because doc_id is unique).
     */
   def plan(tokens: DataFrame, cfg: Config): DataFrame =
-    plan(tokens, cfg, resolveSalts(tokens, cfg))
-
-  def plan(tokens: DataFrame, cfg: Config, salts: Int): DataFrame =
-    plan(tokens, cfg, salts, cfg.targetBinTokens)
+    plan(tokens, cfg, resolveSalts(tokens, cfg), cfg.targetBinTokens)
 
   def plan(tokens: DataFrame, cfg: Config, salts: Int, binTokens: Long): DataFrame = {
     val w = Window.partitionBy("source", "salt").orderBy("doc_id")
@@ -343,28 +337,22 @@ object EncodePipeline {
     // lexicographic run order is what overwrite supersession resolves on
     val runId = ManifestSink.nextRunId(cfg.outDir)
     // in-flight marker BEFORE any work (reference incomplete_<ts>.json,
-    // reports.rs:41-48): cleared when the attempt reaches a terminal state
-    // (commit marker or error report below), so a marker that survives ==
-    // an attempt killed mid-run (SIGKILL/OOM) whose orphan data — invisible
-    // to readers — is worth garbage-collecting. Dry runs write nothing.
+    // reports.rs:41-48): a marker that survives == an attempt killed
+    // mid-run (SIGKILL/OOM) whose orphan data — invisible to readers — is
+    // worth garbage-collecting. Dry runs write nothing.
     if (!cfg.dryRun)
-      ManifestSink.recordInflight(cfg.outDir, runId,
+      ManifestSink.begin(cfg.outDir, runId,
         s"""{"run_id":"$runId","started_unix_ms":${System.currentTimeMillis},""" +
           s""""engine_version":"$Version","config":${cfg.reportJson(cfg.saltBuckets)}}""")
     try runGuarded(spark, tokens, cfg, runId, t0)
     catch {
       case e: Throwable =>
         // durable error accounting (reports.rs analog): the failed attempt
-        // is recorded; its data stays invisible (no commit marker). The
-        // error report is the attempt's terminal state, superseding the
-        // in-flight marker. A dry run must stay write-free even on failure.
-        if (!cfg.dryRun) {
-          try {
-            ManifestSink.recordError(cfg.outDir, runId,
-              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-            ManifestSink.clearInflight(cfg.outDir, runId)
-          } catch { case _: Throwable => () }
-        }
+        // is recorded; its data stays invisible (no commit marker). A dry
+        // run must stay write-free even on failure.
+        if (!cfg.dryRun)
+          ManifestSink.abort(cfg.outDir, runId,
+            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
         throw e
     }
   }
@@ -399,48 +387,26 @@ object EncodePipeline {
     // part_keys are positional (source, salt, bin) coordinates: every run
     // against this sink must use the same geometry or identical docs land
     // under fresh keys and resume sees nothing to skip (silent dupes).
-    // The first SUCCESSFUL run pins it (at commit time — see below);
-    // later runs validate — and auto-salt mode reuses the pin, so input
-    // growth can't shift the salt count mid-sink.
-    val (salts, binTokens) = ManifestSink.pinnedPlanConfig(cfg.outDir) match {
-      case Some((pinSalts, pinBin)) =>
-        // hint the remediation when the pin is stale (crash between pin
-        // and commit on a sink with zero visible data): the fix is the
-        // EXPLICIT ManifestSink.clearStalePin — an automatic overwrite
-        // here would be a check-then-act race against a concurrent first
-        // run (two geometries could both commit)
-        def staleHint =
-          if (ManifestSink.committedRunIds(cfg.outDir).isEmpty)
-            " (this sink has no committed runs, so the pin is stale — a " +
-              "prior run crashed between pin and commit; clear it with " +
-              "ManifestSink.clearStalePin and re-run)"
-          else ""
-        // targetPartitions mode derives its bin size at sink creation; on
-        // an already-pinned sink the pin IS the geometry (resume identity),
-        // so only an EXPLICIT targetBinTokens conflict is an error
-        if (cfg.targetPartitions == 0 && pinBin != cfg.targetBinTokens)
-          throw new IllegalStateException(
-            s"sink ${cfg.outDir} was created with targetBinTokens=$pinBin; " +
-              s"config says ${cfg.targetBinTokens}. Changing bin geometry on " +
-              "an existing sink would duplicate committed content — use a " +
-              s"fresh outDir$staleHint.")
-        if (cfg.saltBuckets > 0 && cfg.saltBuckets != pinSalts)
-          throw new IllegalStateException(
-            s"sink ${cfg.outDir} was created with saltBuckets=$pinSalts; " +
-              s"config says ${cfg.saltBuckets}. Use a fresh outDir$staleHint.")
-        (pinSalts, pinBin)
-      case None =>
-        val s = resolveSalts(tokens, cfg)
-        // --n-chunks (subchunks.rs:12-43): bin size from the input total,
-        // ceil so the count never overshoots N by more than the group
-        // rounding; the derived value is pinned at commit like any other
-        val b =
-          if (cfg.targetPartitions > 0) {
-            val total = tokens.agg(coalesce(sum(col("n_tok").cast("long")), lit(0L)))
-              .collect()(0).getLong(0)
-            math.max(1L, (total + cfg.targetPartitions - 1) / cfg.targetPartitions)
-          } else cfg.targetBinTokens
-        (s, b)
+    // The first SUCCESSFUL run pins it (ManifestSink.commit); later runs
+    // validate — and auto-salt mode reuses the pin, so input growth can't
+    // shift the salt count mid-sink. targetPartitions mode derives its bin
+    // size at sink creation; on an already-pinned sink the pin IS the
+    // geometry (resume identity), so only an EXPLICIT targetBinTokens
+    // conflict is an error.
+    val pinned = ManifestSink.pinnedGeometry(cfg.outDir, cfg.saltBuckets,
+      if (cfg.targetPartitions == 0) cfg.targetBinTokens else 0L)
+    val (salts, binTokens) = pinned.getOrElse {
+      val s = resolveSalts(tokens, cfg)
+      // --n-chunks (subchunks.rs:12-43): bin size from the input total,
+      // ceil so the count never overshoots N by more than the group
+      // rounding; the derived value is pinned at commit like any other
+      val b =
+        if (cfg.targetPartitions > 0) {
+          val total = tokens.agg(coalesce(sum(col("n_tok").cast("long")), lit(0L)))
+            .collect()(0).getLong(0)
+          math.max(1L, (total + cfg.targetPartitions - 1) / cfg.targetPartitions)
+        } else cfg.targetBinTokens
+      (s, b)
     }
 
     // every cache the run makes; the one finally below releases them on
@@ -534,7 +500,7 @@ object EncodePipeline {
       var todoKeys =
         if (cfg.overwrite) plannedKeys
         else resumeAntiJoin(plannedKeys, committedKeysDf, nCommitted,
-          cfg.broadcastKeyLimit)
+          ManifestSink.BroadcastKeyLimit)
       // fresh sink (nothing committed): the anti-join is an identity, so the
       // todo count equals the planned count — skip the extra job
       val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
@@ -582,38 +548,10 @@ object EncodePipeline {
           todoStats.getLong(1) * 4, 0L)
       }
 
-      // The commit tail of both exits below: report, geometry pin, atomic
-      // publish. Pin the plan geometry at COMMIT time, not run start: a
-      // first run that fails before committing anything must not
-      // permanently pin salt/bin config on an empty sink (round-2 ADVICE).
-      // Write-once — a stale pin is cleared only by the explicit
-      // ManifestSink.clearStalePin (see the salts resolution above).
-      // Re-validate after pinning — if a concurrent first run with
-      // different geometry won the pin race, this run's data stays
-      // invisible (no marker).
+      // the commit tail of both exits below (geometry pin, atomic publish)
       def commit(summary: RunSummary): RunSummary = {
-        ManifestSink.pinPlanConfig(cfg.outDir, salts, binTokens)
-        ManifestSink.pinnedPlanConfig(cfg.outDir) match {
-          case Some((ps, pb)) if ps == salts && pb == binTokens => ()
-          case other => throw new IllegalStateException(
-            s"plan-geometry pin race lost: sink pinned $other but this run " +
-              s"used (saltBuckets=$salts, targetBinTokens=$binTokens); " +
-              "not committing (data stays invisible). Re-run to resume.")
-        }
-        // atomic publish — everything above is invisible until this succeeds
-        ManifestSink.commitRun(cfg.outDir, runId,
+        ManifestSink.commit(cfg.outDir, runId, salts, binTokens,
           summaryJson(summary, cfg, salts, binTokens))
-        // the commit marker is the attempt's terminal state: the in-flight
-        // marker has served its purpose (a crash past this point loses no
-        // observability — the run IS committed). Best-effort (NonFatal only
-        // — VM errors and interrupts still propagate): the run is already
-        // committed and visible, so an IO error deleting an observability
-        // marker must not fail the run (and must not reach the error path,
-        // which would record a bogus failure report for a committed run).
-        // If the delete does fail, the marker's run_id is committed, and
-        // gcOrphans reaps exactly that leftover case.
-        try ManifestSink.clearInflight(cfg.outDir, runId)
-        catch { case scala.util.control.NonFatal(_) => () }
         summary
       }
 
@@ -634,7 +572,7 @@ object EncodePipeline {
         if (nTodo == nPlanned && cfg.maxPartitionsPerRun == Int.MaxValue) plannedParts
         else {
           val todoSide =
-            if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= cfg.broadcastKeyLimit)
+            if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= ManifestSink.BroadcastKeyLimit)
               broadcast(todoKeys)
             else todoKeys
           plannedParts.join(todoSide, Seq("part_key"), "left_semi")
@@ -681,21 +619,15 @@ object EncodePipeline {
             .options(LocalFs.WriteOptions)
             .parquet(ManifestSink.manifestDir(cfg.outDir))
           // the totals read back the few small files just written (run ids
-          // are unique per attempt, so the dir holds this attempt's rows
-          // only): no cached copy of the manifest, one single-task job.
-          // No dir: the run had no rows (only an uncounted run gets here
-          // with an empty input).
-          val manifestDir = ManifestSink.manifestDir(cfg.outDir)
-          val runManifest = s"$manifestDir/run_id=$runId"
-          totals =
-            if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(runManifest)))
-              Row(0L, 0L, 0L, 0L, 0L)
-            else spark.read.schema(ManifestSink.ManifestSchema)
-              .option("basePath", manifestDir).parquet(runManifest)
-              .coalesce(1)
+          // are unique per attempt, so they hold this attempt's rows only):
+          // no cached copy of the manifest, one single-task job. None: the
+          // run had no rows (only an uncounted run gets here with an empty
+          // input).
+          totals = ManifestSink.runManifest(spark, cfg.outDir, runId)
+            .fold(Row(0L, 0L, 0L, 0L, 0L))(_.coalesce(1)
               .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
                 coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
-                coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)
+                coalesce(sum("encoded_bytes"), lit(0L))).collect()(0))
         } catch { case e: Throwable => fail(e) },
         s"graft-manifest-$runId")
       manifestSide.setDaemon(true)

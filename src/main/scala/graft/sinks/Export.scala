@@ -98,19 +98,12 @@ object Export {
     case "parquet" =>
       df.write.mode("overwrite").options(LocalFs.WriteOptions)
         .option("compression", compression).parquet(path)
-    case "csv" =>
-      val cols = binaryCols(df)
-      val textified = cols.foldLeft(df)((d, c) => d.withColumn(c, hex(col(c))))
+    case "csv" | "json" =>
+      val textified = binaryCols(df).foldLeft(df)((d, c) => d.withColumn(c, hex(col(c))))
       textified.write.mode("overwrite").options(LocalFs.WriteOptions)
-        .option("header", "true")
+        .options(if (format == "csv") Map("header" -> "true") else Map.empty[String, String])
         .option("compression", if (compression == "snappy") "gzip" else compression)
-        .csv(path)
-    case "json" =>
-      val cols = binaryCols(df)
-      val textified = cols.foldLeft(df)((d, c) => d.withColumn(c, hex(col(c))))
-      textified.write.mode("overwrite").options(LocalFs.WriteOptions)
-        .option("compression", if (compression == "snappy") "gzip" else compression)
-        .json(path)
+        .format(format).save(path)
     case other => throw new IllegalArgumentException(s"unknown format '$other'")
   }
 

@@ -18,6 +18,7 @@ import scala.jdk.CollectionConverters._
   * data/source=<s>/part-*.parquet      encoded rows (+ part_key, run_id cols)
   * manifest/run_id=<id>/part-*.parquet per-partition lineage + metrics rows
   * commits/<id>.json                   atomic run marker (tmp + rename)
+  * inflight/<id>.json, errors/<id>.json attempt started / attempt failed
   * }}}
   *
   * Invariants:
@@ -27,6 +28,9 @@ import scala.jdk.CollectionConverters._
   *    crashed run's orphan files are never read and a re-run of the same
   *    partition cannot produce duplicates;
   *  - resume = anti-join the new plan against committed part_keys.
+  *
+  * A run's lifecycle is [[begin]], then [[commit]] or [[abort]]; the marker
+  * files, the geometry pin and their order are this object's alone.
   */
 object ManifestSink {
 
@@ -97,12 +101,16 @@ object ManifestSink {
     finally s.close()
   }
 
+  /** A marker's run id: its file is named `<runId>.json`. */
+  private def runIdOf(marker: Path): String =
+    marker.getFileName.toString.stripSuffix(".json")
+
   private def readUtf8(p: Path): String =
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
 
   /** Ids of committed runs (tiny listing; one marker file per run). */
   def committedRunIds(root: String): Seq[String] =
-    markers(commitsDir(root)).map(_.getFileName.toString.stripSuffix(".json")).sorted
+    markers(commitsDir(root)).map(runIdOf).sorted
 
   /** Next run id for this sink: `run-<idx>-<uuid8>` with a MONOTONIC index
     * (max committed index + 1, never reusing a lower index after
@@ -131,16 +139,28 @@ object ManifestSink {
     */
   val IsinRunLimit: Int = 64
 
-  /** Committed manifest rows (lineage + metrics table; reference K9/K10).
-    *
-    * Size-guarded run filter: a short run list — the common case — prunes
-    * run_id partition dirs with a static `isin` literal; past
-    * [[IsinRunLimit]] runs that literal In-tree grows O(runs) (a
-    * plan-size/analysis killer at thousands of runs), so the filter
-    * becomes a semi-join against a runs DataFrame instead. The runs side
-    * is one short string per run — broadcastable at any realistic run
-    * count — and run_id stays a partition column, so the join still
-    * prunes dirs dynamically.
+  /** Above this many keys a key-table join (resume anti-join, todo
+    * semi-join, snapshot read) hashes a shuffle instead of broadcasting.
+    */
+  val BroadcastKeyLimit: Long = 1L << 20
+
+  /** Rows of `df` whose run_id is in `runs`. A short list — the common
+    * case — is a static `isin` literal (on a run_id partition column it
+    * prunes dirs); past `limit` runs that In-tree grows O(runs), a
+    * plan-size/analysis killer at thousands of runs, so the filter becomes
+    * a semi-join against the runs instead. The runs side is one short
+    * string per run — broadcastable at any realistic run count — and the
+    * join still prunes partition dirs dynamically.
+    */
+  private def whereRunIn(df: DataFrame, runs: Seq[String], limit: Int): DataFrame =
+    if (runs.size <= limit) df.filter(col("run_id").isin(runs: _*))
+    else {
+      import df.sparkSession.implicits._
+      df.join(broadcast(runs.toDF("run_id")), Seq("run_id"), "left_semi")
+    }
+
+  /** Committed manifest rows (lineage + metrics table; reference K9/K10),
+    * run-filtered by [[whereRunIn]].
     */
   def committedManifest(spark: SparkSession, root: String,
       isinRunLimit: Int = IsinRunLimit): DataFrame = {
@@ -150,14 +170,24 @@ object ManifestSink {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ManifestSchema)
     } else {
-      val man = spark.read.schema(ManifestSchema).parquet(manifestDir(root))
-      // run_id is a partition dir of the manifest dataset -> pruned scan
-      if (runs.size <= isinRunLimit) man.filter(col("run_id").isin(runs: _*))
-      else {
-        import spark.implicits._
-        man.join(broadcast(runs.toDF("run_id")), Seq("run_id"), "left_semi")
-      }
+      whereRunIn(spark.read.schema(ManifestSchema).parquet(manifestDir(root)),
+        runs, isinRunLimit)
     }
+  }
+
+  /** `manifest/run_id=<id>`: one run's manifest partition directory. */
+  private def runManifestDir(root: String, runId: String): Path =
+    Paths.get(manifestDir(root), s"run_id=$runId")
+
+  /** One run's manifest rows, committed or not (the pipeline totals its
+    * own attempt from them before committing); None when the run wrote no
+    * manifest rows. Builds the read only — it issues no job.
+    */
+  def runManifest(spark: SparkSession, root: String, runId: String): Option[DataFrame] = {
+    val d = runManifestDir(root, runId)
+    if (!Files.isDirectory(d)) None
+    else Some(spark.read.schema(ManifestSchema)
+      .option("basePath", manifestDir(root)).parquet(d.toString))
   }
 
   /** CURRENT manifest rows: per part_key, the row of the latest committed
@@ -200,57 +230,34 @@ object ManifestSink {
     (all -- live).toSeq.sorted
   }
 
-  /** Reclaim fully-superseded runs' bytes: data files, manifest dirs, and
-    * finally the commit markers. Crash-safe order — data first, marker
-    * last, so an interrupted GC leaves the run still classified superseded
-    * and the next call finishes the job; deleting the marker last also
-    * means readers (who resolve winners per part_key) never observe a
+  /** Reclaim fully-superseded runs' bytes through [[reap]]: data files,
+    * manifest dirs, and finally the commit markers. The marker goes last,
+    * so readers (who resolve winners per part_key) never observe a
     * half-deleted state. Idempotent.
+    *
+    * Also reaps half-collected runs: a kill inside an earlier call can
+    * leave a run whose commit report claims committed > 0 but whose
+    * manifest dir is gone (or left EMPTY by a kill mid-deleteTree — zero
+    * manifest rows either way). Such a run can never be classified
+    * superseded again, so its marker (and any data files a kill before the
+    * data pass left behind) would leak forever. Deliberately-empty commits
+    * (report says "committed":0) are kept — they are run history, not
+    * residue. The two sets are disjoint (a superseded run has manifest
+    * rows), so one pass reaps their union.
     */
   def gcSuperseded(spark: SparkSession, root: String): GcReport = {
-    val dead = supersededRunIds(spark, root)
-    val dataFiles = deleteDataFilesForRuns(spark, root, dead)
-    var manifestDirs = 0
-    dead.foreach { id =>
-      val d = Paths.get(manifestDir(root), s"run_id=$id")
-      if (Files.isDirectory(d)) { deleteTree(d); manifestDirs += 1 }
-    }
-    var markers = 0
-    dead.foreach { id =>
-      if (Files.deleteIfExists(commitsDir(root).resolve(s"$id.json")))
-        markers += 1
-    }
-    // crash-window sweep (review-caught): a kill between the manifest-dir
-    // loop and the marker loop leaves a run whose commit REPORT claims
-    // committed > 0 but whose manifest dir is gone (or left EMPTY by a
-    // kill mid-deleteTree — zero manifest rows either way) — such a run
-    // can never be classified superseded again, so its marker (and any
-    // data files a kill before the data loop left behind) would leak
-    // forever. Reap exactly that shape: data files first, then the empty
-    // dir, marker last — the same crash-safe order as the main path.
-    // Deliberately-empty commits (report says "committed":0) are kept —
-    // they are run history, not residue.
-    val idRe2 = """"run_id":"([^"]+)"""".r
+    val superseded = supersededRunIds(spark, root)
     def manifestRowless(id: String): Boolean = {
-      val d = Paths.get(manifestDir(root), s"run_id=$id")
+      val d = runManifestDir(root, id)
       if (!Files.isDirectory(d)) return true
       val s = Files.list(d)
       try !s.findFirst().isPresent finally s.close()
     }
-    val leaked = readCommitSummaries(root).flatMap { js =>
-      for {
-        m <- CommittedField.findFirstMatchIn(js) if m.group(1).toLong > 0
-        im <- idRe2.findFirstMatchIn(js) if manifestRowless(im.group(1))
-      } yield im.group(1)
+    val halfCollected = committedRunIds(root).filter { id =>
+      CommittedField.findFirstMatchIn(readUtf8(commitsDir(root).resolve(s"$id.json")))
+        .exists(_.group(1).toLong > 0) && manifestRowless(id)
     }
-    val leakedData = deleteDataFilesForRuns(spark, root, leaked.sorted)
-    leaked.foreach { id =>
-      val d = Paths.get(manifestDir(root), s"run_id=$id")
-      if (Files.isDirectory(d)) { deleteTree(d); manifestDirs += 1 }
-      if (Files.deleteIfExists(commitsDir(root).resolve(s"$id.json")))
-        markers += 1
-    }
-    GcReport(dataFiles + leakedData, manifestDirs, markers, 0)
+    reap(spark, root, (superseded ++ halfCollected).sorted, commitsDir(root))
   }
 
   /** Committed encoded rows (snapshot read): data semi-joined against the
@@ -269,7 +276,7 @@ object ManifestSink {
     * [[committedKeyBound]], read from the commit reports, not counted.
     */
   def readCommitted(spark: SparkSession, root: String,
-      broadcastKeyLimit: Long = 1L << 20): DataFrame = {
+      broadcastKeyLimit: Long = BroadcastKeyLimit): DataFrame = {
     if (!Files.isDirectory(Paths.get(dataDir(root)))) {
       // nothing ever (successfully) written — e.g. every attempt so far
       // errored before its first file landed
@@ -300,13 +307,6 @@ object ManifestSink {
     if (counts.forall(_.isDefined)) counts.flatten.sum else Long.MaxValue
   }
 
-  /** Atomically publish a run: write the marker JSON via tmp + rename
-    * (export.rs:13-23 semantics). Call only after data + manifest writes
-    * succeeded.
-    */
-  def commitRun(root: String, runId: String, summaryJson: String): Unit =
-    writeMarker(commitsDir(root), runId, summaryJson)
-
   def readCommitSummaries(root: String): Seq[String] =
     committedRunIds(root).map(id => readUtf8(commitsDir(root).resolve(s"$id.json")))
 
@@ -330,7 +330,7 @@ object ManifestSink {
     * geometries sit committed. Un-bricking a stale pin is an explicit
     * operator action — [[clearStalePin]]).
     */
-  def pinPlanConfig(root: String, saltBuckets: Int, targetBinTokens: Long): Unit = {
+  private def pinPlanConfig(root: String, saltBuckets: Int, targetBinTokens: Long): Unit = {
     val p = configPath(root)
     if (Files.exists(p)) return
     Files.createDirectories(p.getParent)
@@ -378,6 +378,38 @@ object ManifestSink {
           "quiescence).")
   }
 
+  /** The sink's pinned geometry, checked against the one a run asks for:
+    * `saltBuckets` 0 (auto) or `binTokens` 0 (derived from the input)
+    * accepts the pin, any other mismatch fails fast. None on a sink that
+    * has never committed; the run then resolves its own geometry, which
+    * [[commit]] pins.
+    */
+  def pinnedGeometry(root: String, saltBuckets: Int, binTokens: Long): Option[(Int, Long)] =
+    pinnedPlanConfig(root).map { case pin @ (pinSalts, pinBin) =>
+      // hint the remediation when the pin is stale (crash between pin and
+      // commit on a sink with zero visible data): the fix is the EXPLICIT
+      // clearStalePin — an automatic overwrite here would be a
+      // check-then-act race against a concurrent first run (two geometries
+      // could both commit)
+      def staleHint =
+        if (committedRunIds(root).isEmpty)
+          " (this sink has no committed runs, so the pin is stale — a " +
+            "prior run crashed between pin and commit; clear it with " +
+            "ManifestSink.clearStalePin and re-run)"
+        else ""
+      if (binTokens > 0 && pinBin != binTokens)
+        throw new IllegalStateException(
+          s"sink $root was created with targetBinTokens=$pinBin; " +
+            s"config says $binTokens. Changing bin geometry on " +
+            "an existing sink would duplicate committed content — use a " +
+            s"fresh outDir$staleHint.")
+      if (saltBuckets > 0 && saltBuckets != pinSalts)
+        throw new IllegalStateException(
+          s"sink $root was created with saltBuckets=$pinSalts; " +
+            s"config says $saltBuckets. Use a fresh outDir$staleHint.")
+      pin
+    }
+
   /** (saltBuckets, targetBinTokens) pinned at sink creation, if any. */
   def pinnedPlanConfig(root: String): Option[(Int, Long)] = {
     val p = configPath(root)
@@ -402,12 +434,57 @@ object ManifestSink {
 
   private def inflightDir(root: String): Path = Paths.get(root, "inflight")
 
-  /** Durably record that a run attempt has started (atomic tmp+rename). */
-  def recordInflight(root: String, runId: String, json: String): Unit =
+  /** Start a run attempt: durably write its in-flight marker (atomic
+    * tmp+rename) before any work.
+    */
+  def begin(root: String, runId: String, json: String): Unit =
     writeMarker(inflightDir(root), runId, json)
 
-  /** Remove a run's in-flight marker (attempt reached a terminal state). */
-  def clearInflight(root: String, runId: String): Unit =
+  /** Publish a run whose data and manifest writes succeeded.
+    *
+    * Pins the plan geometry at COMMIT time, not run start: a first run
+    * that fails before committing anything must not permanently pin
+    * salt/bin config on an empty sink (round-2 ADVICE). The pin is
+    * write-once, so it is re-checked after pinning: if a concurrent first
+    * run with different geometry won the pin race, this run's data stays
+    * invisible (no marker). Then the commit marker is published atomically
+    * — everything before it is invisible until it lands.
+    *
+    * The commit marker is the attempt's terminal state, so the in-flight
+    * marker is cleared last, best-effort (NonFatal only — VM errors and
+    * interrupts still propagate): the run is already committed and
+    * visible, so an IO error deleting an observability marker must not
+    * fail it (nor record a bogus failure report for it). A marker left
+    * that way names a committed run, which [[gcOrphans]] reaps.
+    */
+  def commit(root: String, runId: String, saltBuckets: Int, binTokens: Long,
+      reportJson: String): Unit = {
+    pinPlanConfig(root, saltBuckets, binTokens)
+    pinnedPlanConfig(root) match {
+      case Some((ps, pb)) if ps == saltBuckets && pb == binTokens => ()
+      case other => throw new IllegalStateException(
+        s"plan-geometry pin race lost: sink pinned $other but this run " +
+          s"used (saltBuckets=$saltBuckets, targetBinTokens=$binTokens); " +
+          "not committing (data stays invisible). Re-run to resume.")
+    }
+    writeMarker(commitsDir(root), runId, reportJson)
+    try clearInflight(root, runId)
+    catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** End a failed run attempt: its error report is the terminal state and
+    * supersedes the in-flight marker, which is cleared only once the report
+    * is written — a run that cannot record its failure keeps its marker,
+    * like a killed one. Never throws: the caller rethrows the run's own
+    * failure.
+    */
+  def abort(root: String, runId: String, message: String): Unit =
+    try {
+      recordError(root, runId, message)
+      clearInflight(root, runId)
+    } catch { case _: Throwable => () }
+
+  private def clearInflight(root: String, runId: String): Unit =
     Files.deleteIfExists(inflightDir(root).resolve(s"$runId.json"))
 
   /** JSON bodies of markers whose runs never reached a terminal state —
@@ -445,42 +522,23 @@ object ManifestSink {
       olderThanMs: Long = 24L * 3600 * 1000): GcReport = {
     val now = System.currentTimeMillis
     val committed = committedRunIds(root).toSet
-    val idRe = """"run_id":"([^"]+)"""".r
     val tsRe = """"started_unix_ms":(\d+)""".r
-    def idOf(json: String): Option[String] =
-      idRe.findFirstMatchIn(json).map(_.group(1))
-    val erroredIds = readErrorReports(root).flatMap(idOf)
-    val inflight = readInflightMarkers(root)
-    val staleInflightIds = inflight.flatMap { m =>
+    val erroredIds = markers(errorsDir(root)).map(runIdOf)
+    val inflight = markers(inflightDir(root))
+    val staleInflightIds = inflight.filter { m =>
       // fail-safe direction: a marker whose timestamp is missing or
       // unparsable is treated as NOT old (never collected) — the
       // alternative would garbage-collect a possibly-LIVE attempt
-      val old = tsRe.findFirstMatchIn(m).map(_.group(1).toLong)
+      tsRe.findFirstMatchIn(readUtf8(m)).map(_.group(1).toLong)
         .exists(ts => now - ts >= olderThanMs)
-      if (old) idOf(m) else None
-    }
+    }.map(runIdOf)
     val dead = (erroredIds ++ staleInflightIds).toSet -- committed
-    val dataFiles = deleteDataFilesForRuns(spark, root, dead.toSeq.sorted)
-    var manifestDirs = 0
-    dead.foreach { id =>
-      val d = Paths.get(manifestDir(root), s"run_id=$id")
-      if (Files.isDirectory(d)) {
-        deleteTree(d); manifestDirs += 1
-      }
-    }
-    var markers = 0
-    dead.foreach { id =>
-      val p = inflightDir(root).resolve(s"$id.json")
-      if (Files.deleteIfExists(p)) markers += 1
-    }
+    val reaped = reap(spark, root, dead.toSeq.sorted, inflightDir(root))
     // a marker whose run_id IS committed is leftover from a failed
     // best-effort clear after a successful commit — terminal state
     // exists, so reap it here (the `dead` set excludes committed ids and
     // would never reach it)
-    inflight.flatMap(idOf).filter(committed).foreach { id =>
-      if (Files.deleteIfExists(inflightDir(root).resolve(s"$id.json")))
-        markers += 1
-    }
+    val leftovers = inflight.filter(m => committed(runIdOf(m))).count(Files.deleteIfExists)
     var tempDirs = 0
     Seq(dataDir(root), manifestDir(root)).foreach { d =>
       val t = Paths.get(d, "_temporary")
@@ -489,34 +547,42 @@ object ManifestSink {
         deleteTree(t); tempDirs += 1
       }
     }
-    GcReport(dataFiles, manifestDirs, markers, tempDirs)
+    reaped.copy(markersCleared = reaped.markersCleared + leftovers,
+      tempDirsDeleted = tempDirs)
+  }
+
+  /** Delete runs' on-disk residue in crash-safe order: their data files,
+    * then their `manifest/run_id=` dirs, then their markers in `markerDir`.
+    * A kill part-way leaves the markers, so the next GC call finds the
+    * same runs and finishes the job. Shared by [[gcOrphans]] (dead
+    * attempts) and [[gcSuperseded]] (overwritten and half-collected runs).
+    */
+  private def reap(spark: SparkSession, root: String, ids: Seq[String],
+      markerDir: Path): GcReport = {
+    val dataFiles = deleteDataFilesForRuns(spark, root, ids)
+    val manifestDirs = ids.map(runManifestDir(root, _)).count { d =>
+      Files.isDirectory(d) && { deleteTree(d); true }
+    }
+    val markersCleared = ids.count(id => Files.deleteIfExists(markerDir.resolve(s"$id.json")))
+    GcReport(dataFiles, manifestDirs, markersCleared, 0)
   }
 
   /** Delete the data files of the given run ids (found by a column-pruned
     * distributed scan of the data set's run_id column — the only way to
     * map files to runs, since data partitions by (source, part_stub), not
-    * run). Shared by [[gcOrphans]] (dead attempts) and [[gcSuperseded]]
-    * (overwritten runs). Returns the number of files deleted.
+    * run). Returns the number of files deleted.
     */
   private def deleteDataFilesForRuns(spark: SparkSession, root: String,
       deadSeq: Seq[String]): Int = {
     var dataFiles = 0
     if (deadSeq.nonEmpty && Files.isDirectory(Paths.get(dataDir(root)))) {
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
       // explicit schema: no inference, so a dataDir holding only
       // _temporary residue (or nothing — GC is idempotent and the dead
       // set never shrinks, error reports being permanent) reads as empty
       // instead of throwing
-      val df0 = spark.read.schema(DataSchema).parquet(dataDir(root))
-      // same size guard as committedManifest: the errored-id set grows
-      // without bound over a sink's lifetime, and an In-literal over
-      // thousands of ids is a plan-size killer
-      val matched =
-        if (deadSeq.size <= IsinRunLimit) df0.filter(col("run_id").isin(deadSeq: _*))
-        else {
-          import spark.implicits._
-          df0.join(broadcast(deadSeq.toDF("run_id")), Seq("run_id"), "left_semi")
-        }
+      // the errored-id set grows without bound over a sink's lifetime
+      val matched = whereRunIn(spark.read.schema(DataSchema).parquet(dataDir(root)),
+        deadSeq, IsinRunLimit)
       val files = matched.select(input_file_name()).distinct().collect()
         .map(_.getString(0))
       files.foreach { f =>
@@ -545,7 +611,7 @@ object ManifestSink {
   private def errorsDir(root: String): Path = Paths.get(root, "errors")
 
   /** Durably record a failed run attempt (atomic tmp+rename like commits). */
-  def recordError(root: String, runId: String, message: String): Unit = {
+  private def recordError(root: String, runId: String, message: String): Unit = {
     // truncate the RAW message first, then escape: truncating after
     // escaping could cut mid escape pair (trailing lone backslash from an
     // escaped quote) and produce an invalid JSON report

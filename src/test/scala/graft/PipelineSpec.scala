@@ -33,6 +33,10 @@ class PipelineSpec extends AnyFunSuite {
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft-sink").toString
 
+  /** Drop a run's in-flight marker as if the run had ended elsewhere. */
+  private def clearInflight(root: String, runId: String): Unit =
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "inflight", s"$runId.json"))
+
   private val cfgBase = EncodePipeline.Config(outDir = "", targetBinTokens = 4096,
     saltBuckets = 4)
 
@@ -502,7 +506,7 @@ class PipelineSpec extends AnyFunSuite {
     // truncating used to cut the escape pair in half (trailing lone
     // backslash → invalid JSON); truncate-then-escape keeps it whole
     val nasty = ("a" * 499) + "\"" + "tail beyond the cut \\ \" \n"
-    ManifestSink.recordError(out, "run-test", nasty)
+    ManifestSink.abort(out, "run-test", nasty)
     val reports = ManifestSink.readErrorReports(out)
     assert(reports.size == 1)
     import spark.implicits._
@@ -548,7 +552,6 @@ class PipelineSpec extends AnyFunSuite {
       maxPartitionsPerRun = c.getAs[Long]("max_partitions_per_run").toInt,
       partPrefix = c.getAs[String]("part_prefix"),
       parquetCodec = c.getAs[String]("parquet_codec"),
-      broadcastKeyLimit = c.getAs[Long]("broadcast_key_limit"),
       strictResume = c.getAs[Boolean]("strict_resume"),
       reorgBuffer = c.getAs[Long]("reorg_buffer"))
     val again = EncodePipeline.run(spark, tokens, cfg2)
@@ -683,7 +686,7 @@ class PipelineSpec extends AnyFunSuite {
         "codec", "blob", "source", "part_stub")
       .write.mode("append").partitionBy("source", "part_stub")
       .parquet(ManifestSink.dataDir(out))
-    ManifestSink.recordInflight(out, deadId,
+    ManifestSink.begin(out, deadId,
       s"""{"run_id":"$deadId","started_unix_ms":0}""")
     // plus an errored attempt (no files — its write job aborted)
     val poisoned = tokens.withColumn("tokens",
@@ -707,23 +710,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(ManifestSink.readErrorReports(out).nonEmpty)
     assert(ManifestSink.readInflightMarkers(out).isEmpty)
     // a LIVE attempt (fresh marker) is never collected at the default age
-    ManifestSink.recordInflight(out, "run-00042-live",
+    ManifestSink.begin(out, "run-00042-live",
       s"""{"run_id":"run-00042-live","started_unix_ms":${System.currentTimeMillis}}""")
     val gc2 = ManifestSink.gcOrphans(spark, out)
     assert(gc2.markersCleared == 0 && gc2.dataFilesDeleted == 0, gc2)
     assert(ManifestSink.readInflightMarkers(out).size == 1)
-    ManifestSink.clearInflight(out, "run-00042-live")
+    clearInflight(out, "run-00042-live")
     // fail-safe timestamp parsing: a marker with no parsable
     // started_unix_ms is treated as NOT old — never collected
-    ManifestSink.recordInflight(out, "run-00077-nots",
+    ManifestSink.begin(out, "run-00077-nots",
       """{"run_id":"run-00077-nots"}""")
     ManifestSink.gcOrphans(spark, out, olderThanMs = 0)
     assert(ManifestSink.readInflightMarkers(out).exists(_.contains("run-00077-nots")))
-    ManifestSink.clearInflight(out, "run-00077-nots")
+    clearInflight(out, "run-00077-nots")
     // a leftover marker for a COMMITTED run (a failed best-effort clear
     // after commit) IS reaped — its terminal state exists
     val committedId = ManifestSink.committedRunIds(out).head
-    ManifestSink.recordInflight(out, committedId,
+    ManifestSink.begin(out, committedId,
       s"""{"run_id":"$committedId","started_unix_ms":0}""")
     val gc4 = ManifestSink.gcOrphans(spark, out, olderThanMs = 0)
     assert(gc4.markersCleared == 1, gc4)
@@ -758,7 +761,8 @@ class PipelineSpec extends AnyFunSuite {
   test("stale pin on an empty sink: explicit clearStalePin unbricks it (no racy auto-overwrite)") {
     val out = freshDir()
     // crash-between-pin-and-commit analog: a pin exists, zero committed runs
-    ManifestSink.pinPlanConfig(out, 99, 12345L)
+    java.nio.file.Files.write(java.nio.file.Paths.get(out, "_plan_config.json"),
+      """{"salt_buckets":99,"target_bin_tokens":12345}""".getBytes)
     // the conflicting run still fails fast (an AUTOMATIC overwrite would be
     // a check-then-act race against a concurrent first run) — but the
     // error now names the remediation
@@ -961,30 +965,38 @@ class PipelineSpec extends AnyFunSuite {
     val cfg = cfgBase.copy(outDir = out)
     val s1 = EncodePipeline.run(spark, tokens, cfg)
     val s2 = EncodePipeline.run(spark, tokens, cfg.copy(overwrite = true))
+    val s3 = EncodePipeline.run(spark, tokens, cfg.copy(overwrite = true))
     // simulate a GC killed between the manifest-dir delete and the marker
-    // delete: the superseded run's manifest dir is gone, its marker left
+    // delete: s1's manifest dir is gone, its marker left
     val mdir = java.nio.file.Paths.get(ManifestSink.manifestDir(out), s"run_id=${s1.runId}")
     val walk = java.nio.file.Files.walk(mdir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
     finally walk.close()
-    // the run now has zero manifest rows, so supersession can't classify it
-    assert(ManifestSink.supersededRunIds(spark, out).isEmpty)
-    // ...but the sweep recognizes the shape (report says committed > 0,
-    // manifest dir absent) and reaps the leaked marker AND the stranded
+    // s1 now has zero manifest rows, so supersession can't classify it;
+    // s2, overwritten by s3, is superseded
+    assert(ManifestSink.supersededRunIds(spark, out) == Seq(s2.runId))
+    val doomedFiles = spark.read.parquet(ManifestSink.dataDir(out))
+      .filter(col("run_id").isin(s1.runId, s2.runId))
+      .select(input_file_name()).distinct().count()
+    assert(doomedFiles > 0)
+    // ...but the sweep recognizes s1's shape (report says committed > 0,
+    // manifest dir absent) and reaps its leaked marker AND its stranded
     // data files (nothing else could ever reclaim them: no marker, no
-    // error report, no inflight marker), reporting both
+    // error report, no inflight marker) in the same pass as s2: both
+    // markers, s2's manifest dir, both runs' data files
     val gcr = ManifestSink.gcSuperseded(spark, out)
-    assert(gcr.markersCleared == 1 && gcr.dataFilesDeleted > 0, gcr.toString)
-    assert(!ManifestSink.committedRunIds(out).contains(s1.runId))
+    assert(gcr == ManifestSink.GcReport(dataFilesDeleted = doomedFiles.toInt,
+      manifestDirsDeleted = 1, markersCleared = 2, tempDirsDeleted = 0), gcr.toString)
+    assert(ManifestSink.committedRunIds(out) == Seq(s3.runId))
     assert(ManifestSink.readCommitted(spark, out).count() == 150)
     assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
     // a deliberately-empty commit (committed = 0) is history, not residue
-    val s3 = EncodePipeline.run(spark, tokens, cfg)
-    assert(s3.committed == 0)
+    val s4 = EncodePipeline.run(spark, tokens, cfg)
+    assert(s4.committed == 0)
     ManifestSink.gcSuperseded(spark, out)
+    assert(ManifestSink.committedRunIds(out).contains(s4.runId))
     assert(ManifestSink.committedRunIds(out).contains(s3.runId))
-    assert(ManifestSink.committedRunIds(out).contains(s2.runId))
   }
 
   test("overwrite is all-or-nothing: bounded overwrite refused; shrunk input fails the coverage guard") {
