@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Native kernels for the distributed BPE trainer ([[graft.ops.Bpe]]).
@@ -30,9 +29,8 @@ import org.apache.spark.sql.types._
   * nullable-element arrays rather than inventing a null-merge rule.
   */
 case class BpeMerge(child: Expression, lhs: Long, rhs: Long, newId: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "bpe_merge"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -41,14 +39,10 @@ case class BpeMerge(child: Expression, lhs: Long, rhs: Long, newId: Long)
       s"$prettyName expects array<bigint> with non-null elements, got ${dt.sql}")
   }
 
-  override def nullSafeEval(tokens: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      BpeMerge.compute(tokens.asInstanceOf[ArrayData], lhs, rhs, newId))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.BpeMerge.compute($arr, ${lhs}L, ${rhs}L, ${newId}L));""".stripMargin)
+  override protected def kernel = BpeMerge
+  override protected def method = "compute"
+  override protected def arguments =
+    Seq(child, Literal(lhs), Literal(rhs), Literal(newId))
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -86,9 +80,8 @@ object BpeMerge {
   * on their shared domain, and value-identical to the DuckDB replay
   * `sum((rn * tok) % M) % M` because every term is non-negative there.
   */
-case class LongChecksum(child: Expression) extends UnaryExpression {
+case class LongChecksum(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "long_checksum"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -97,13 +90,8 @@ case class LongChecksum(child: Expression) extends UnaryExpression {
       s"$prettyName expects array<bigint> with non-null elements, got ${dt.sql}")
   }
 
-  override def nullSafeEval(tokens: Any): Any =
-    java.lang.Long.valueOf(
-      LongChecksum.compute(tokens.asInstanceOf[ArrayData]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.LongChecksum.compute($arr);")
+  override protected def kernel = LongChecksum
+  override protected def method = "compute"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar functions mirroring the reference's chain-data type system
   * (SURVEY.md §2.7): keccak256 (cryo hashes init code / calldata,
@@ -18,23 +16,15 @@ import org.apache.spark.unsafe.types.UTF8String
 /** keccak256(binary) -> 32-byte binary. Keccak-f[1600] with the original
   * Keccak padding (0x01), i.e. the Ethereum variant, not NIST SHA3's 0x06.
   */
-case class Keccak256(child: Expression) extends UnaryExpression {
+case class Keccak256(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "keccak256"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${dt.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(bytes: Any): Any =
-    Keccak.hash256(bytes.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Keccak.hash256($b);")
+  override protected def kernel = Keccak
+  override protected def method = "hash256"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -154,24 +144,15 @@ object Keccak {
   * to decimal string (cryo's {name}_string representation,
   * dataframes/creation.rs:56-63).
   */
-case class U256ToString(child: Expression) extends UnaryExpression {
+case class U256ToString(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_string"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got ${dt.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(bytes: Any): Any =
-    UTF8String.fromString(
-      new java.math.BigInteger(1, bytes.asInstanceOf[Array[Byte]]).toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  new java.math.BigInteger(1, $b).toString());""".stripMargin)
+  override protected def kernel = Kernels
+  override protected def method = "u256ToString"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -179,22 +160,15 @@ case class U256ToString(child: Expression) extends UnaryExpression {
 /** u256_to_f64(binary[32]) -> double (cryo's {name}_f64 representation,
   * dataframes/creation.rs:64-71).
   */
-case class U256ToDouble(child: Expression) extends UnaryExpression {
+case class U256ToDouble(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_f64"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got ${dt.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(bytes: Any): Any =
-    new java.math.BigInteger(1, bytes.asInstanceOf[Array[Byte]]).doubleValue()
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = new java.math.BigInteger(1, $b).doubleValue();")
+  override protected def kernel = Kernels
+  override protected def method = "u256ToDouble"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -202,22 +176,15 @@ case class U256ToDouble(child: Expression) extends UnaryExpression {
 /** u256_to_f32(binary[32]) -> float (cryo's {name}_f32 representation,
   * dataframes/creation.rs:52-60).
   */
-case class U256ToFloat(child: Expression) extends UnaryExpression {
+case class U256ToFloat(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = FloatType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_f32"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got ${dt.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(bytes: Any): Any =
-    new java.math.BigInteger(1, bytes.asInstanceOf[Array[Byte]]).floatValue()
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = new java.math.BigInteger(1, $b).floatValue();")
+  override protected def kernel = Kernels
+  override protected def method = "u256ToFloat"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,21 +20,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * used by every codec roundtrip query ([[graft.sources.Tokens.checksumSql]]
   * is the SQL mirror).
   */
-case class TokenChecksum(child: Expression) extends UnaryExpression {
+case class TokenChecksum(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "token_checksum"
 
   override def checkInputDataTypes(): TypeCheckResult =
     TokenExprs.requireIntArray(prettyName, child.dataType)
 
-  override def nullSafeEval(tokens: Any): Any =
-    java.lang.Long.valueOf(
-      ChecksumKernels.tokenChecksum(tokens.asInstanceOf[ArrayData]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.ChecksumKernels.tokenChecksum($arr);")
+  override protected def kernel = ChecksumKernels
+  override protected def method = "tokenChecksum"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -44,21 +37,15 @@ case class TokenChecksum(child: Expression) extends UnaryExpression {
   * n_tok × 2^31 < 2^44 per row — no overflow per doc; callers that
   * aggregate across docs reduce mod-first, see stats_agg).
   */
-case class TokensSum(child: Expression) extends UnaryExpression {
+case class TokensSum(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "tokens_sum"
 
   override def checkInputDataTypes(): TypeCheckResult =
     TokenExprs.requireIntArray(prettyName, child.dataType)
 
-  override def nullSafeEval(tokens: Any): Any =
-    java.lang.Long.valueOf(
-      ChecksumKernels.tokensSum(tokens.asInstanceOf[ArrayData]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.ChecksumKernels.tokensSum($arr);")
+  override protected def kernel = ChecksumKernels
+  override protected def method = "tokensSum"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -76,9 +63,8 @@ case class TokensSum(child: Expression) extends UnaryExpression {
   * (Spark's length/substring are codepoint-based and ascii() yields the
   * codepoint), spec-verified over mixed scripts.
   */
-case class CharFingerprint(child: Expression) extends UnaryExpression {
+case class CharFingerprint(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "char_fingerprint"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -87,13 +73,8 @@ case class CharFingerprint(child: Expression) extends UnaryExpression {
       s"$prettyName expects string, got ${dt.sql}")
   }
 
-  override def nullSafeEval(text: Any): Any =
-    java.lang.Long.valueOf(
-      ChecksumKernels.charFingerprint(text.asInstanceOf[UTF8String]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.ChecksumKernels.charFingerprint($s);")
+  override protected def kernel = ChecksumKernels
+  override protected def method = "charFingerprint"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

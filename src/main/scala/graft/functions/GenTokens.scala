@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** gen_tokens(doc_id bigint, n_tok bigint) -> array<int>: the deterministic
@@ -14,10 +13,9 @@ import org.apache.spark.sql.types._
   * interpreted generator dominated the cold pipeline benchmark.
   */
 case class GenTokens(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "gen_tokens"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -27,14 +25,8 @@ case class GenTokens(left: Expression, right: Expression)
         s"$prettyName expects (bigint doc_id, bigint n_tok)")
     }
 
-  override def nullSafeEval(docId: Any, nTok: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      GenTokens.generate(docId.asInstanceOf[Long], nTok.asInstanceOf[Long].toInt))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, n) =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.GenTokens.generate($d, (int) $n));""".stripMargin)
+  override protected def kernel = Kernels
+  override protected def method = "genTokens"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)

@@ -3,10 +3,8 @@ package graft.functions
 import graft.codec._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
@@ -14,20 +12,20 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   * reference's scalar transform extension point → custom `Expression`s;
   * cryo's per-column series building is crates/cryo_to_df/src/lib.rs:103-131).
   *
-  * All expressions implement `doGenCode` by delegating to the JVM kernels,
-  * so they stay inside whole-stage codegen spans (no UDF boxing, no
-  * CodegenFallback on the hot encode/decode path).
+  * Each native expression names one static JVM kernel method through
+  * [[KernelCall]], which gives it both its interpreted `eval` and its
+  * generated code: a direct call inside the whole-stage codegen span (no
+  * UDF boxing, no CodegenFallback on the hot encode/decode path).
   */
 
 /** encode_tokens(tokens array<int>, codec string) -> binary blob.
-  * The codec argument must be foldable (a literal); the codec object is
-  * resolved once at plan time.
+  * The codec argument must be foldable (a literal); the codec is resolved
+  * once at plan time and its tag byte is the kernel's literal argument.
   */
 case class EncodeTokens(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "encode_tokens"
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -39,17 +37,10 @@ case class EncodeTokens(left: Expression, right: Expression)
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  @transient private lazy val codec: Codec =
-    Codecs.byName(right.eval(InternalRow.empty).toString)
-
-  override def nullSafeEval(tokens: Any, codecName: Any): Any =
-    codec.encode(tokens.asInstanceOf[ArrayData].toIntArray())
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codec", codec, classOf[Codec].getName)
-    nullSafeCodeGen(ctx, ev, (arr, _) =>
-      s"${ev.value} = $ref.encode($arr.toIntArray());")
-  }
+  override protected def kernel = Kernels
+  override protected def method = "encodeTokens"
+  override protected def arguments =
+    Seq(left, Literal(Codecs.byName(right.eval(InternalRow.empty).toString).tag))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
@@ -60,24 +51,16 @@ case class EncodeTokens(left: Expression, right: Expression)
   * BASELINE.json's north_star).
   */
 case class EncodeAuto(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "encode_auto"
 
   override def checkInputDataTypes(): TypeCheckResult =
     TokenExprs.requireIntArray(prettyName, child.dataType)
 
-  override def nullSafeEval(tokens: Any): Any =
-    CodecSelector.encodeAuto(tokens.asInstanceOf[ArrayData].toIntArray())
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("selector", CodecSelector,
-      "graft.codec.CodecSelector$")
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = $ref.encodeAuto($arr.toIntArray());")
-  }
+  override protected def kernel = Kernels
+  override protected def method = "encodeAuto"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -86,25 +69,16 @@ case class EncodeAuto(child: Expression)
   * encode_tokens/encode_auto for any codec tag (self-describing blobs).
   */
 case class DecodeTokens(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "decode_tokens"
 
   override def checkInputDataTypes(): TypeCheckResult =
     TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(blob: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      Codecs.decode(blob.asInstanceOf[Array[Byte]]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codecs", Codecs, "graft.codec.Codecs$")
-    nullSafeCodeGen(ctx, ev, blob =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($ref.decode($blob));""".stripMargin)
-  }
+  override protected def kernel = Codecs
+  override protected def method = "decode"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -114,25 +88,16 @@ case class DecodeTokens(child: Expression)
   * crates/freeze/src/types/reports.rs:9-23).
   */
 case class CodecOf(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "codec_of"
 
   override def checkInputDataTypes(): TypeCheckResult =
     TokenExprs.requireBinary(prettyName, child.dataType)
 
-  override def nullSafeEval(blob: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      Codecs.codecNameOf(blob.asInstanceOf[Array[Byte]]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codecs", Codecs, "graft.codec.Codecs$")
-    nullSafeCodeGen(ctx, ev, blob =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String
-         |  .fromString($ref.codecNameOf($blob));""".stripMargin)
-  }
+  override protected def kernel = Kernels
+  override protected def method = "codecOf"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -200,30 +165,29 @@ private[functions] object TokenExprs {
   * (table × plane × dim) — ~2048 expression evals per row.
   */
 case class HyperplaneBuckets(child: Expression, planes: Int, tables: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "hyperplane_buckets"
 
+  // a bucket is one bit per plane of a long, and plane p of table t seeds
+  // its weights with t * 64 + p: more than 64 planes would wrap onto low
+  // bits and alias the next table's planes. Zero planes is the exhaustive
+  // regime (one bucket) that the ann oracle queries run.
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) if planes < 0 || planes > 64 =>
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName planes must be in [0, 64], got $planes")
+    case ArrayType(DoubleType, _) if tables < 1 => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName tables must be >= 1, got $tables")
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects array<double>, got ${dt.sql}")
   }
 
-  override def nullSafeEval(unit: Any): Any = {
-    val v = unit.asInstanceOf[ArrayData].toDoubleArray()
-    UnsafeArrayData.fromPrimitiveArray(
-      HyperplaneBuckets.buckets(v, planes, tables))
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = "graft.functions.HyperplaneBuckets"
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($cls.buckets($arr.toDoubleArray(), $planes, $tables));""".stripMargin)
-  }
+  override protected def kernel = Kernels
+  override protected def method = "hyperplaneBuckets"
+  override protected def arguments = Seq(child, Literal(planes), Literal(tables))
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -238,7 +202,6 @@ object HyperplaneBuckets {
     (z >>> 11).toDouble / (1L << 53).toDouble - 0.5
   }
 
-  /** Java-callable kernel (used from generated code). */
   def buckets(v: Array[Double], planes: Int, tables: Int): Array[Long] = {
     val out = new Array[Long](tables)
     var t = 0
@@ -267,9 +230,9 @@ object HyperplaneBuckets {
   * lambda interpretation — two orders of magnitude slower on 64-dim
   * embeddings, and recomputed at every plan reference.
   */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+case class VecDot(left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_dot"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -280,22 +243,16 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
         s"$prettyName expects two array<double> args")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.dot(a.asInstanceOf[ArrayData].toDoubleArray(),
-      b.asInstanceOf[ArrayData].toDoubleArray())
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VecKernels.dot($a.toDoubleArray(), $b.toDoubleArray());")
+  override protected def kernel = Kernels
+  override protected def method = "vecDot"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
 
 /** vec_normalize(a array<float|double>) -> array<double>: L2 unit vector. */
-case class VecNormalize(child: Expression) extends UnaryExpression {
+case class VecNormalize(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_normalize"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -305,29 +262,10 @@ case class VecNormalize(child: Expression) extends UnaryExpression {
       s"$prettyName expects array<float|double>, got ${dt.sql}")
   }
 
-  private val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val v = if (isFloat) {
-      val f = arr.toFloatArray()
-      val d = new Array[Double](f.length)
-      var i = 0
-      while (i < f.length) { d(i) = f(i).toDouble; i += 1 }
-      d
-    } else arr.toDoubleArray()
-    UnsafeArrayData.fromPrimitiveArray(VecKernels.normalize(v))
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val conv = if (isFloat) "graft.functions.VecKernels.toDouble($arr.toFloatArray())"
-      else "$arr.toDoubleArray()"
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.VecKernels.normalize(${conv.replace("$arr", arr)}));""".stripMargin)
+  override protected def kernel = Kernels
+  override protected def method = child.dataType match {
+    case ArrayType(FloatType, _) => "normalizeFloats"
+    case _ => "normalizeDoubles"
   }
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
@@ -361,9 +299,8 @@ object VecKernels {
   * Native because the higher-order formulation evaluates an interpreted
   * hash expression per (word × bit): ~64× redundant hashing.
   */
-case class Simhash64(child: Expression) extends UnaryExpression {
+case class Simhash64(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash64"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -372,12 +309,8 @@ case class Simhash64(child: Expression) extends UnaryExpression {
       s"$prettyName expects array<string>, got ${dt.sql}")
   }
 
-  override def nullSafeEval(words: Any): Any =
-    java.lang.Long.valueOf(Simhash64.compute(words.asInstanceOf[ArrayData]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.Simhash64.compute($arr);")
+  override protected def kernel = Simhash64
+  override protected def method = "compute"
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -432,25 +365,22 @@ object Simhash64 {
   * formulation re-hashed every shingle k times through interpreted
   * expressions.
   */
-case class MinhashSignature(child: Expression, k: Int) extends UnaryExpression {
+case class MinhashSignature(child: Expression, k: Int)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_signature"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName k must be >= 1, got $k")
     case dt => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects array<string>, got ${dt.sql}")
   }
 
-  override def nullSafeEval(words: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      MinhashSignature.compute(words.asInstanceOf[ArrayData], k))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.MinhashSignature.compute($arr, $k));""".stripMargin)
+  override protected def kernel = MinhashSignature
+  override protected def method = "compute"
+  override protected def arguments = Seq(child, Literal(k))
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -520,9 +450,9 @@ object MinhashSignature {
   * step; the 0x20 separator makes "a b" as one word byte-alias ["a","b"]
   * (pinned as a documented wire-format property).
   */
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleHashes(child: Expression, n: Int)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "shingle_hashes"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -533,14 +463,9 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
       s"$prettyName expects array<string>, got ${dt.sql}")
   }
 
-  override def nullSafeEval(words: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      ShingleHashes.compute(words.asInstanceOf[ArrayData], n))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.ShingleHashes.compute($arr, $n));""".stripMargin)
+  override protected def kernel = ShingleHashes
+  override protected def method = "compute"
+  override protected def arguments = Seq(child, Literal(n))
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -596,9 +521,8 @@ object ShingleHashes {
   * codepoint convention over their single-space rejoin.
   */
 case class CutSpans(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "cut_spans"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -612,14 +536,9 @@ case class CutSpans(left: Expression, right: Expression, n: Int)
         s"$prettyName expects (array<string>, array<long>)")
     }
 
-  override def nullSafeEval(words: Any, cuts: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(CutSpans.compute(
-      words.asInstanceOf[ArrayData], cuts.asInstanceOf[ArrayData], n))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, c) =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(graft.functions.CutSpans.compute($w, $c, $n));""".stripMargin)
+  override protected def kernel = CutSpans
+  override protected def method = "compute"
+  override protected def arguments = Seq(left, right, Literal(n))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
@@ -669,9 +588,9 @@ object CutSpans {
   * AND recomputed per plan reference — the exact trap the prefilter exists
   * to avoid paying (its whole point is being ~ns-cheap per candidate pair).
   */
-case class SigAgree(left: Expression, right: Expression) extends BinaryExpression {
+case class SigAgree(left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "sig_agree"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -682,13 +601,8 @@ case class SigAgree(left: Expression, right: Expression) extends BinaryExpressio
         s"$prettyName expects two array<long> signatures")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Integer.valueOf(SigAgree.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SigAgree.compute($a, $b);")
+  override protected def kernel = SigAgree
+  override protected def method = "compute"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)

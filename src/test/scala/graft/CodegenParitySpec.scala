@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Every native expression computes one row two ways: the generated Java
   * that whole-stage codegen compiles, and the interpreted `eval` that a
@@ -159,5 +160,29 @@ class CodegenParitySpec extends AnyFunSuite {
       assert(e.sql == sql, q)
       assert(e.nullable == nullable, q)
     }
+  }
+
+  test("no function source writes its own doGenCode outside KernelCall") {
+    // NowNanos reads the clock per row and DecodeStruct holds a per-plan
+    // decoder; every other native expression names a kernel through KernelCall
+    val allowed = Set("KernelCall.scala", "NowNanos.scala", "StructCodec.scala")
+    val root = java.nio.file.Paths.get("src/main/scala/graft/functions")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val sources = {
+      val list = java.nio.file.Files.list(root)
+      try list.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally list.close()
+    }
+    val hits = for {
+      f <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if code.contains("def doGenCode")
+    } yield (f.getFileName.toString, s":${i + 1}")
+    // the scan sees the trait's own definition
+    assert(hits.exists(_._1 == "KernelCall.scala"), hits)
+    val offenders = hits.filterNot(h => allowed(h._1)).map { case (f, at) => f + at }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -53,16 +53,25 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .createOrReplaceTempView("tokens_lit_v")
     // a column where a literal is required must raise a clear
     // "literal"-mentioning error at plan time, not an opaque
-    // BoundReference NPE from eval(null)
-    for (q <- Seq(
-        "SELECT bpe_merge(tokens, doc_id, 2, 3) FROM tokens_lit_v",
-        "SELECT minhash_signature(tokens, doc_id) FROM tokens_lit_v",
-        "SELECT hyperplane_buckets(CAST(tokens AS ARRAY<DOUBLE>), doc_id, 1) FROM tokens_lit_v")) {
+    // BoundReference NPE from eval(null); an out-of-range literal fails
+    // analysis instead of wrapping bits or failing per row
+    val vec = "CAST(tokens AS ARRAY<DOUBLE>)"
+    val words = "CAST(tokens AS ARRAY<STRING>)"
+    for ((q, expected) <- Seq(
+        "SELECT bpe_merge(tokens, doc_id, 2, 3) FROM tokens_lit_v" -> "literal",
+        "SELECT minhash_signature(tokens, doc_id) FROM tokens_lit_v" -> "literal",
+        s"SELECT hyperplane_buckets($vec, doc_id, 1) FROM tokens_lit_v" -> "literal",
+        s"SELECT hyperplane_buckets($vec, 65, 1) FROM tokens_lit_v" -> "planes must be in [0, 64]",
+        s"SELECT hyperplane_buckets($vec, -1, 1) FROM tokens_lit_v" -> "planes must be in [0, 64]",
+        s"SELECT hyperplane_buckets($vec, 8, 0) FROM tokens_lit_v" -> "tables must be >= 1",
+        s"SELECT hyperplane_buckets($vec, 8, -1) FROM tokens_lit_v" -> "tables must be >= 1",
+        s"SELECT minhash_signature($words, 0) FROM tokens_lit_v" -> "k must be >= 1",
+        s"SELECT minhash_signature($words, -3) FROM tokens_lit_v" -> "k must be >= 1")) {
       val e = intercept[Exception](spark.sql(q).collect())
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
         else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.toLowerCase.contains("literal")), e.toString)
+      assert(msgs(e).exists(_.toLowerCase.contains(expected)), e.toString)
     }
   }
 }
