@@ -26,7 +26,9 @@ trait KernelCall extends Expression {
 
   protected def method: String
 
-  /** The method's arguments: the children, then any plan-time literals. */
+  /** The method's arguments: by default the children; an expression with
+    * plan-time parameters passes them as literals after its children.
+    */
   protected def arguments: Seq[Expression] = children
 
   @transient private lazy val call: Expression = dataType match {
