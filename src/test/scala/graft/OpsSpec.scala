@@ -180,7 +180,8 @@ class OpsSpec extends AnyFunSuite {
     // every clone connects to the anchor (doc 1 = bucket min) at hamming 0;
     // the round-1 drop-the-bucket cap returned ZERO pairs here
     assert(pairs.filter($"doc_a" === 1 && $"hamming" === 0).count() == 499)
-    // and nothing quadratic survived the cap
+    // and nothing quadratic survived the cap: no clone-clone pair at all
+    assert(pairs.filter($"doc_a" >= 300000).count() == 0)
     assert(pairs.count() < 2000, s"pair blow-up: ${pairs.count()}")
     pairs.unpersist()
   }
@@ -249,6 +250,20 @@ class OpsSpec extends AnyFunSuite {
       val recall = lshPairs.count().toDouble / exact
       assert(recall > 0.1, s"recall $recall")
     }
+  }
+
+  test("embedding bucket cap: a giant duplicate cluster yields linear star edges") {
+    // 300 copies of one embedding plus the original as the minimum vec_id:
+    // every hyperplane table puts all 301 vectors in one bucket, so the cap
+    // must switch it to star edges against the original — exactly n-1 pairs
+    val orig = embeds.filter($"vec_id" === 0).select("vec_id", "embedding")
+    val clones = spark.range(1, 301).select(($"id" + 400000).as("vec_id"))
+      .crossJoin(orig.select("embedding"))
+    val pairs = Dedup.embeddingPairs(orig.unionByName(clones), maxBucket = 16).cache()
+    assert(pairs.count() == 300, s"pairs: ${pairs.count()}")
+    assert(pairs.filter($"vec_a" === 0 && $"vec_b" >= 400000).count() == 300)
+    assert(pairs.filter($"vec_a" >= 400000).count() == 0)
+    pairs.unpersist()
   }
 
   test("media decode: batch shape, determinism, feature schema") {
