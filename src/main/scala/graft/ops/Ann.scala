@@ -52,33 +52,39 @@ object Ann {
     * per probe. O(|probes| × |corpus|) with no shuffle on the corpus side
     * beyond the final per-probe top-k window.
     */
-  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
+  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    // broadcast(p) chosen by Catalyst/AQE
+    rerank(corpus, probes, k)((p, c) => p.join(c, col("probe_id") =!= col("nbr_id")))
+
+  /** Exact cosine top-k over the (probe, neighbor) pairs `pairUp` forms
+    * from the normalized probes (`probe_id`, `probe_unit`) and corpus
+    * (`nbr_id`, `nbr_unit`): per-probe `row_number` by (cosine DESC,
+    * nbr_id), ranks ≤ k kept. The shared tail of brute force and of every
+    * approximate index (candidates are few, vectors join to them, never
+    * to each other).
+    */
+  private def rerank(corpus: DataFrame, probes: DataFrame, k: Int)(
+      pairUp: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val c = normalized(corpus).select(col("vec_id").as("nbr_id"), col("unit").as("nbr_unit"))
     val p = normalized(probes).select(col("vec_id").as("probe_id"), col("unit").as("probe_unit"))
     val w = Window.partitionBy("probe_id").orderBy(col("cosine").desc, col("nbr_id"))
-    p.join(c, col("probe_id") =!= col("nbr_id")) // broadcast(p) chosen by Catalyst/AQE
+    pairUp(p, c)
       .withColumn("cosine", dot(col("probe_unit"), col("nbr_unit")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("probe_id"), col("rank").cast("long").as("rank"), col("nbr_id"))
   }
 
-  /** Exact cosine re-rank of a candidate pair set (the shared tail of
-    * every approximate index: candidates are few, vectors join to them,
-    * never to each other).
+  /** [[rerank]] of an index's (probe_id, nbr_id) matches, self-matches
+    * and repeats dropped.
     */
-  private def rerank(candidates: DataFrame, corpus: DataFrame,
+  private def rerankCandidates(matches: DataFrame, corpus: DataFrame,
       probes: DataFrame, k: Int): DataFrame = {
-    val c = normalized(corpus).select(col("vec_id").as("nbr_id"), col("unit").as("nbr_unit"))
-    val p = normalized(probes).select(col("vec_id").as("probe_id"), col("unit").as("probe_unit"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cosine").desc, col("nbr_id"))
-    candidates
-      .join(p, "probe_id")
-      .join(c, "nbr_id")
-      .withColumn("cosine", dot(col("probe_unit"), col("nbr_unit")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank").cast("long").as("rank"), col("nbr_id"))
+    val candidates = matches
+      .filter(col("probe_id") =!= col("nbr_id"))
+      .select("probe_id", "nbr_id")
+      .distinct()
+    rerank(corpus, probes, k)((p, c) => candidates.join(p, "probe_id").join(c, "nbr_id"))
   }
 
   // ---------------------------------------------------------------- IVF
@@ -165,11 +171,7 @@ object Ann {
       .withColumn("r", row_number().over(pw))
       .filter(col("r") <= nProbes)
       .select(col("vec_id").as("probe_id"), col("cluster"))
-    val candidates = pLists.join(cIdx, Seq("cluster"))
-      .filter(col("probe_id") =!= col("nbr_id"))
-      .select("probe_id", "nbr_id")
-      .distinct()
-    rerank(candidates, corpus, probes, k)
+    rerankCandidates(pLists.join(cIdx, Seq("cluster")), corpus, probes, k)
   }
 
   /** LSH top-k: candidates = corpus vectors sharing any table bucket with
@@ -181,10 +183,6 @@ object Ann {
       .select(col("vec_id").as("nbr_id"), col("table_id"), col("bucket"))
     val pIdx = lshIndex(normalized(probes), planes, tables)
       .select(col("vec_id").as("probe_id"), col("table_id"), col("bucket"))
-    val candidates = pIdx.join(cIdx, Seq("table_id", "bucket"))
-      .filter(col("probe_id") =!= col("nbr_id"))
-      .select("probe_id", "nbr_id")
-      .distinct()
-    rerank(candidates, corpus, probes, k)
+    rerankCandidates(pIdx.join(cIdx, Seq("table_id", "bucket")), corpus, probes, k)
   }
 }

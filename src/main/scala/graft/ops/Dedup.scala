@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.util.Materialize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data deduplication operators over the `documents`
@@ -82,37 +83,65 @@ object Dedup {
   def minhashCandidatesFromSig(sig: DataFrame, k: Int = 32, bands: Int = 8,
       maxBucket: Int = 64): DataFrame = {
     val rows = k / bands
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band_id", "band_hash")
-    val buckets = sig
-      .select(col("doc_id"),
-        posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> xxhash64(concat_ws(',', slice(minhash, b * $rows + 1, $rows))))"))
-          .as(Seq("band_id", "band_hash")))
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min("doc_id").over(w))
-    // Single anchor⨝member join (plan-audited shape): an ANCHOR is every
-    // member of a small bucket but only the min of an oversized one, so a
-    // giant dup cluster emits linear star edges while small buckets emit
-    // all-pairs. Both join sides are filters of the SAME windowed subtree
-    // and keep its (band_id, band_hash) partitioning — the join adds no
-    // exchange, and there is no union branch recomputing the signatures.
-    val anchors = buckets
-      .filter(col("bucket_n") <= maxBucket || col("doc_id") === col("bucket_min"))
-      .select(col("doc_id").as("doc_a"), col("band_id"), col("band_hash"))
-    val members = buckets
-      .select(col("doc_id").as("doc_b"), col("band_id"), col("band_hash"))
-    anchors.join(members, Seq("band_id", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
+    val buckets = sig.select(col("doc_id"),
+      posexplode(expr(
+        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(concat_ws(',', slice(minhash, b * $rows + 1, $rows))))"))
+        .as(Seq("band_id", "band_hash")))
+    cappedPairs(buckets, "doc_id", Seq("band_id", "band_hash"), maxBucket)
       .select("doc_a", "doc_b")
       .distinct()
   }
 
-  /** MinHash + LSH near-dup pairs with estimated Jaccard = matching
-    * signature fraction over the candidate set (capped — see
-    * [[minhashCandidates]]).
+  /** `doc_id` → `doc_a`, `vec_id` → `vec_b`, `minhash` → `minhash_a`: the
+    * name a column takes on one side of a candidate pair.
     */
-  def minhashPairs(docs: DataFrame, k: Int = 32, bands: Int = 8,
-      minEstJaccard: Double = 0.5, maxBucket: Int = 64): DataFrame = {
+  private def pairName(c: String, side: String): String =
+    c.stripSuffix("_id") + "_" + side
+
+  /** Bucket-capped candidate pairs, the one generator behind the minhash,
+    * simhash and embedding near-dup operators: rows of `buckets` sharing
+    * a `keys` bucket pair up as (`id`_a, `id`_b) with a < b, and every
+    * `carried` column rides both sides (see [[pairName]]). A bucket with
+    * more than `maxBucket` rows emits only STAR edges against its minimum
+    * id — O(n) pairs that keep a giant cluster connected — instead of
+    * n²/2. A pair sharing several buckets comes back once per bucket;
+    * callers filter, then `distinct()`.
+    *
+    * Single anchor⨝member join (plan-audited shape): an ANCHOR is every
+    * member of a small bucket but only the min of an oversized one. Both
+    * join sides are filters of the SAME windowed subtree and keep its
+    * `keys` partitioning — the join adds no exchange, and there is no
+    * union branch recomputing the bucket source.
+    */
+  private def cappedPairs(buckets: DataFrame, id: String, keys: Seq[String],
+      maxBucket: Int, carried: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    val counted = buckets
+      .withColumn("bucket_n", count(lit(1)).over(w))
+      .withColumn("bucket_min", min(id).over(w))
+    def side(s: String, rows: DataFrame) =
+      rows.select((id +: carried).map(c => col(c).as(pairName(c, s))) ++ keys.map(col): _*)
+    side("a", counted.filter(col("bucket_n") <= maxBucket || col(id) === col("bucket_min")))
+      .join(side("b", counted), keys)
+      .filter(col(pairName(id, "a")) < col(pairName(id, "b")))
+  }
+
+  /** Joins `table`'s `value` column onto both ends of every (`id`_a,
+    * `id`_b) pair, as `value`_a and `value`_b.
+    */
+  private def bothSides(pairs: DataFrame, table: DataFrame, id: String,
+      value: String): DataFrame =
+    Seq("a", "b").foldLeft(pairs) { (acc, s) =>
+      acc.join(table.withColumnRenamed(id, pairName(id, s))
+        .withColumnRenamed(value, pairName(value, s)), pairName(id, s))
+    }
+
+  /** Capped minhash candidates with `sig_agree`, the number of equal
+    * signature lanes — the shared front of [[minhashPairs]] and
+    * [[verifiedPairs]].
+    */
+  private def sigAgreeCandidates(docs: DataFrame, k: Int, bands: Int,
+      maxBucket: Int): DataFrame = {
     // the signature table is referenced three times below (banding + both
     // pair-side joins); an eager checkpoint runs the kernel over the
     // corpus ONCE and the three references read the slim (doc_id, k×i64)
@@ -120,29 +149,34 @@ object Dedup {
     // text (three kernel passes, plan-audited). Deterministic recompute
     // is not the concern here (the kernel is pure); wasted passes are.
     val sig = Materialize.eager(withMinhash(docs, k).select("doc_id", "minhash")).df
-    minhashCandidatesFromSig(sig, k, bands, maxBucket)
-      .join(sig.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("minhash", "mh_a"), "doc_a")
-      .join(sig.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("minhash", "mh_b"), "doc_b")
+    bothSides(minhashCandidatesFromSig(sig, k, bands, maxBucket), sig, "doc_id", "minhash")
       // native kernel: the HOF formulation (zip_with+aggregate) is
       // CodegenFallback and recomputed per plan reference (CLAUDE.md)
-      .withColumn("est_jaccard",
-        call_function("sig_agree", col("mh_a"), col("mh_b")).cast("double") / lit(k))
+      .withColumn("sig_agree", call_function("sig_agree", col("minhash_a"), col("minhash_b")))
+  }
+
+  /** MinHash + LSH near-dup pairs with estimated Jaccard = matching
+    * signature fraction over the candidate set (capped — see
+    * [[minhashCandidates]]).
+    */
+  def minhashPairs(docs: DataFrame, k: Int = 32, bands: Int = 8,
+      minEstJaccard: Double = 0.5, maxBucket: Int = 64): DataFrame =
+    sigAgreeCandidates(docs, k, bands, maxBucket)
+      .withColumn("est_jaccard", col("sig_agree").cast("double") / lit(k))
       .filter(col("est_jaccard") >= minEstJaccard)
       .select("doc_a", "doc_b", "est_jaccard")
-  }
 
   /** Distinct word-trigram set per doc (the exact-similarity unit shared
     * by [[ngramJaccard]] and [[verifiedPairs]]).
     */
   private def trigrams(docs: DataFrame): DataFrame = docs
     .withColumn("words", split(col("text"), " "))
-    .withColumn("grams", expr(
-      """array_distinct(CASE WHEN size(words) >= 3 THEN
-        |  transform(sequence(0, size(words) - 3),
-        |    i -> concat_ws(' ', element_at(words, i + 1),
-        |                        element_at(words, i + 2),
-        |                        element_at(words, i + 3)))
-        |ELSE array(concat_ws(' ', words)) END)""".stripMargin))
+    .withColumn("grams", expr(TextOps.gramsSql(3)))
+
+  /** floor(100 · |a ∩ b| / |a ∪ b|) of two gram-set columns, as `jac_pct`. */
+  private def jacPct(a: String, b: String): Column = expr(
+    s"CAST(floor(100.0 * size(array_intersect($a, $b)) / size(array_union($a, $b))) AS BIGINT)")
+    .as("jac_pct")
 
   /** Exact trigram Jaccard (jac_pct = floor(100 * |∩| / |∪|)) over the
     * given candidate pair set — the verify stage of the near-dup pipeline.
@@ -151,12 +185,8 @@ object Dedup {
     */
   def jaccardVerify(docs: DataFrame, candidates: DataFrame): DataFrame = {
     val grams = trigrams(docs).select("doc_id", "grams")
-    candidates.select("doc_a", "doc_b")
-      .join(grams.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("grams", "grams_a"), "doc_a")
-      .join(grams.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("grams", "grams_b"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(floor(100.0 * size(array_intersect(grams_a, grams_b)) / size(array_union(grams_a, grams_b))) AS BIGINT)")
-          .as("jac_pct"))
+    bothSides(candidates.select("doc_a", "doc_b"), grams, "doc_id", "grams")
+      .select(col("doc_a"), col("doc_b"), jacPct("grams_a", "grams_b"))
   }
 
   /** The full near-dup op a user calls at scale: MinHash-LSH candidate
@@ -176,14 +206,8 @@ object Dedup {
     */
   def verifiedPairs(docs: DataFrame, minJacPct: Long = 80, k: Int = 32,
       bands: Int = 16, maxBucket: Int = 64): DataFrame = {
-    // same three-reference shape as [[minhashPairs]]: one kernel pass,
-    // checkpointed, read three times
-    val sig = Materialize.eager(withMinhash(docs, k).select("doc_id", "minhash")).df
-    val prefiltered = minhashCandidatesFromSig(sig, k, bands, maxBucket)
-      .join(sig.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("minhash", "mh_a"), "doc_a")
-      .join(sig.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("minhash", "mh_b"), "doc_b")
-      .filter(call_function("sig_agree", col("mh_a"), col("mh_b"))
-        .cast("double") >= lit(k * minJacPct / 200.0))
+    val prefiltered = sigAgreeCandidates(docs, k, bands, maxBucket)
+      .filter(col("sig_agree").cast("double") >= lit(k * minJacPct / 200.0))
       .select("doc_a", "doc_b")
     jaccardVerify(docs, prefiltered).filter(col("jac_pct") >= minJacPct)
   }
@@ -203,8 +227,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(
         col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("CAST(floor(100.0 * size(array_intersect(a.grams, b.grams)) / size(array_union(a.grams, b.grams))) AS BIGINT)")
-          .as("jac_pct"))
+        jacPct("a.grams", "b.grams"))
   }
 
   /** 64-bit SimHash per doc (Charikar'02), computed shuffle-free by the
@@ -220,34 +243,20 @@ object Dedup {
 
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 64): DataFrame = {
-    val sig = simhash(docs).select("doc_id", "simhash")
-    val chunks = sig.select(col("doc_id"), col("simhash"),
+    val chunks = simhash(docs).select(col("doc_id"), col("simhash"),
       posexplode(expr(
         "transform(sequence(0, 3), c -> shiftright(simhash, c * 16) & 65535L)"))
         .as(Seq("chunk_id", "chunk")))
-    // Bucket cap via the anchor⨝member shape (see minhashCandidatesFromSig):
-    // a 16-bit chunk shared by >maxBucket docs is usually corpus-wide
-    // commonality and would go quadratic, so oversized buckets emit only
-    // star candidates against the bucket min — O(n) spurious candidates
-    // that the exact hamming recheck filters, while a giant EXACT-dup
-    // cluster (hamming 0 to the anchor) is still fully recovered. (The
-    // round-1 cap dropped oversized buckets outright, silently losing
-    // identical-doc clusters bigger than the cap.)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("chunk_id", "chunk")
-    val bucketed = chunks
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min("doc_id").over(w))
-    val anchors = bucketed
-      .filter(col("bucket_n") <= maxBucket || col("doc_id") === col("bucket_min"))
-      .select(col("doc_id").as("doc_a"), col("simhash").as("sim_a"),
-        col("chunk_id"), col("chunk"))
-    val members = bucketed
-      .select(col("doc_id").as("doc_b"), col("simhash").as("sim_b"),
-        col("chunk_id"), col("chunk"))
-    anchors.join(members, Seq("chunk_id", "chunk"))
-      .filter(col("doc_a") < col("doc_b"))
+    // Bucket cap (see cappedPairs): a 16-bit chunk shared by >maxBucket
+    // docs is usually corpus-wide commonality and would go quadratic, so
+    // oversized buckets emit only star candidates against the bucket min —
+    // O(n) spurious candidates that the exact hamming recheck filters,
+    // while a giant EXACT-dup cluster (hamming 0 to the anchor) is still
+    // fully recovered. (The round-1 cap dropped oversized buckets
+    // outright, silently losing identical-doc clusters bigger than the cap.)
+    cappedPairs(chunks, "doc_id", Seq("chunk_id", "chunk"), maxBucket, "simhash")
       .select(col("doc_a"), col("doc_b"),
-        expr("bit_count(sim_a ^ sim_b)").cast("long").as("hamming"))
+        expr("bit_count(simhash_a ^ simhash_b)").cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -454,12 +463,9 @@ object Dedup {
   def dupSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2): DataFrame = {
     require(n >= 1, s"window size must be >= 1: $n")
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val byHash = org.apache.spark.sql.expressions.Window.partitionBy("h")
+    val byHash = Window.partitionBy("h")
     val byHashDoc = byHash.orderBy("doc_id")
-    docs.select(col("doc_id"),
-        posexplode(call_function("shingle_hashes", split(col("text"), " "), lit(n)))
-          .as(Seq("pos", "h")))
+    TextOps.shinglePositions(docs, n)
       .withColumn("n_docs",
         max(dense_rank().over(byHashDoc)).over(byHash).cast("long"))
       .filter(col("n_docs") >= minDocs)
@@ -472,7 +478,7 @@ object Dedup {
     * copy of each boilerplate region): every n-word window whose content
     * appears in ≥ `minDocs` distinct docs is cut from every doc EXCEPT
     * the keeper (the minimum doc_id holding that content — the same
-    * min-key keeper rule as [[dedupCorpus]]). Output is one row per doc
+    * min-key keeper rule as [[keepers]]). Output is one row per doc
     * with audit columns only: `n_cut` / `n_kept` word counts and
     * `cleaned_fp`, the char-fingerprint of the single-space rejoin of the
     * surviving words — the whole cleaned text pinned to one replayable
@@ -493,13 +499,9 @@ object Dedup {
   def cutSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2): DataFrame = {
     require(n >= 1, s"window size must be >= 1: $n")
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val byHash = org.apache.spark.sql.expressions.Window.partitionBy("h")
+    val byHash = Window.partitionBy("h")
     val byHashDoc = byHash.orderBy("doc_id")
-    val cutLists = docs
-      .select(col("doc_id"),
-        posexplode(call_function("shingle_hashes", split(col("text"), " "), lit(n)))
-          .as(Seq("pos", "h")))
+    val cutLists = TextOps.shinglePositions(docs, n)
       .withColumn("n_docs",
         max(dense_rank().over(byHashDoc)).over(byHash))
       .withColumn("keeper", min(col("doc_id")).over(byHash))
@@ -516,32 +518,21 @@ object Dedup {
   }
 
   /** Embedding near-dup: cosine ≥ threshold pairs, candidates bucketed by
-    * random-hyperplane LSH (see [[Ann.hyperplaneBuckets]]) so the pair join
+    * random-hyperplane LSH (see [[Ann.lshIndex]]) so the pair join
     * never goes quadratic in the corpus.
     */
   def embeddingPairs(embeds: DataFrame, threshold: Double = 0.95,
       planes: Int = 8, tables: Int = 4, maxBucket: Int = 256): DataFrame = {
     val unit = Ann.normalized(embeds).select(col("vec_id"), col("unit"))
-    // anchor⨝member with a bucket cap, like the token-LSH candidate
-    // stages: a hyperplane bucket holding >maxBucket vectors (duplicate
+    // a hyperplane bucket holding >maxBucket vectors (duplicate
     // embeddings, degenerate regions) emits linear star candidates
-    // instead of n²/2; the exact cosine recheck filters the extras
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("table_id", "bucket")
-    val idx = Ann.lshIndex(unit, planes, tables)
-      .select("vec_id", "table_id", "bucket")
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min("vec_id").over(w))
-    val anchors = idx
-      .filter(col("bucket_n") <= maxBucket || col("vec_id") === col("bucket_min"))
-      .select(col("vec_id").as("vec_a"), col("table_id"), col("bucket"))
-    val members = idx.select(col("vec_id").as("vec_b"), col("table_id"), col("bucket"))
-    val candidates = anchors.join(members, Seq("table_id", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
+    // instead of n²/2 (see cappedPairs); the exact cosine recheck filters
+    // the extras
+    val idx = Ann.lshIndex(unit, planes, tables).select("vec_id", "table_id", "bucket")
+    val candidates = cappedPairs(idx, "vec_id", Seq("table_id", "bucket"), maxBucket)
       .select("vec_a", "vec_b")
       .distinct()
-    candidates
-      .join(unit.withColumnRenamed("vec_id", "vec_a").withColumnRenamed("unit", "unit_a"), "vec_a")
-      .join(unit.withColumnRenamed("vec_id", "vec_b").withColumnRenamed("unit", "unit_b"), "vec_b")
+    bothSides(candidates, unit, "vec_id", "unit")
       .select(col("vec_a"), col("vec_b"), Ann.dot(col("unit_a"), col("unit_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }

@@ -70,12 +70,9 @@ object Quantiles {
     * Output adds `pct_mille` (and a long-cast `valCol`).
     */
   def percentileRanks(df: DataFrame, keyCol: String, valCol: String): DataFrame = {
-    require(!df.columns.contains("pct_mille"),
-      "input already has a pct_mille column (this operator's output)")
-    require(valCol == "v" || !df.columns.contains("v"),
-      "input already has a v column (this operator's internal name)")
-    Seq("__qk", "__qv").foreach(c => require(!df.columns.contains(c),
-      s"input already has a $c column (this operator's internal name)"))
+    // valCol == "v" is permitted (see the rename below)
+    Sampling.requireAbsent(df,
+      Seq("pct_mille", "__qk", "__qv") ++ Seq("v").filter(_ != valCol): _*)
     // cum ≤ total ≤ 2^63/1000 rows — the multiply stays in i64
     // (distribution side renamed so the rejoin can use an explicit
     // null-SAFE key equality: a null stratum is a real group — the window

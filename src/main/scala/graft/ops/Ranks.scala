@@ -57,8 +57,7 @@ object Ranks {
   def globalRowNumber(df: DataFrame, order: Seq[Column], rankName: String): DataFrame = {
     require(order.nonEmpty, "globalRowNumber needs at least one sort column")
     val Seq(pid, lr, off) = Seq("__rk_pid", "__rk_lr", "__rk_off")
-    Seq(pid, lr, off, rankName).foreach(c =>
-      require(!df.columns.contains(c), s"input already has a $c column"))
+    Sampling.requireAbsent(df, pid, lr, off, rankName)
     val spark = df.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
     // eager checkpoint: the range split + local numbering run ONCE, and

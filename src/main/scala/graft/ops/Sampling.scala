@@ -39,12 +39,25 @@ object Sampling {
     * Mirrored in `OpsQueries.shuffleKeyDuckSql` and the OpsSpec driver
     * replays — value-identical, touch all or none.
     */
-  private def shuffleKey(seed: Long, opName: String): Column = {
-    val key = expr(
-      s"pmod(pmod(pmod(doc_id, 4294967296) + $seed, 4294967296) * 1103515245, 4294967296)")
-    when(col("doc_id") >= 0, key)
+  private def shuffleKey(seed: Long, opName: String): Column = nonNegativeId(expr(
+    s"pmod(pmod(pmod(doc_id, 4294967296) + $seed, 4294967296) * 1103515245, 4294967296)"),
+    opName)
+
+  /** `value` where doc_id ≥ 0, a run-time error naming `opName` elsewhere:
+    * the validity condition of [[bucketSql]] and [[shuffleKey]] — negative
+    * ids would hash differently across the Spark/DuckDB/JVM mirrors (pmod
+    * vs sign-preserving %), so fail loudly rather than mis-sample.
+    */
+  private def nonNegativeId(value: Column, opName: String): Column =
+    when(col("doc_id") >= 0, value)
       .otherwise(raise_error(lit(s"$opName requires non-negative doc_id")))
-  }
+
+  /** Fails fast when `df` already has one of `names` — the columns an
+    * operator adds (its output or internal names) would clobber them.
+    */
+  private[ops] def requireAbsent(df: DataFrame, names: String*): Unit =
+    names.foreach(c => require(!df.columns.contains(c),
+      s"input already has a $c column (this operator's output or internal name)"))
 
   /** `bucketSql` as a column (LongType). */
   def bucket: Column = expr(bucketSql).cast("long")
@@ -62,18 +75,11 @@ object Sampling {
     ratesPerMille.foreach { case (k, v) =>
       require(v >= 0 && v <= 1000, s"rate for '$k' out of [0, 1000]: $v")
     }
-    require(!docs.columns.contains("mix_bucket"),
-      "input already has a mix_bucket column (it is this operator's output)")
     val rateCol = "__graft_mix_rate" // internal; prefixed to avoid clobbering
-    require(!docs.columns.contains(rateCol),
-      s"input already has a $rateCol column (this operator's internal name)")
+    requireAbsent(docs, "mix_bucket", rateCol)
     val rates = typedLit(ratesPerMille.map { case (k, v) => (k, v.toLong) })
     docs
-      .withColumn("mix_bucket",
-        // negative ids would bucket differently across the Spark/DuckDB/JVM
-        // mirrors (pmod vs sign-preserving %) — fail loudly, don't mis-mix
-        when(col("doc_id") >= 0, bucket)
-          .otherwise(raise_error(lit("mixCorpus requires non-negative doc_id"))))
+      .withColumn("mix_bucket", nonNegativeId(bucket, "mixCorpus"))
       .withColumn(rateCol,
         coalesce(element_at(rates, col(keyCol)), lit(defaultPerMille.toLong)))
       .filter(col("mix_bucket") < col(rateCol))
@@ -102,18 +108,11 @@ object Sampling {
     ratesPerMille.foreach { case (k, v) =>
       require(v >= 0 && v <= maxRate, s"rate for '$k' out of [0, $maxRate]: $v")
     }
-    Seq("mix_bucket", "n_copies", "copy_idx").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a $c column (it is this operator's output)")
-    }
     val rateCol = "__graft_repeat_rate" // internal; prefixed to avoid clobbering
-    require(!docs.columns.contains(rateCol),
-      s"input already has a $rateCol column (this operator's internal name)")
+    requireAbsent(docs, "mix_bucket", "n_copies", "copy_idx", rateCol)
     val rates = typedLit(ratesPerMille.map { case (k, v) => (k, v.toLong) })
     docs
-      .withColumn("mix_bucket",
-        when(col("doc_id") >= 0, bucket)
-          .otherwise(raise_error(lit("upsample requires non-negative doc_id"))))
+      .withColumn("mix_bucket", nonNegativeId(bucket, "upsample"))
       .withColumn(rateCol,
         coalesce(element_at(rates, col(keyCol)), lit(defaultPerMille.toLong)))
       .withColumn("n_copies",
@@ -141,14 +140,11 @@ object Sampling {
     require(bounds.map(_._2) == bounds.map(_._2).sorted &&
       bounds.map(_._2).distinct == bounds.map(_._2),
       s"split bounds must be strictly increasing: $bounds")
-    require(!docs.columns.contains("split") && !docs.columns.contains("mix_bucket"),
-      "input already has a split/mix_bucket column (this operator's output)")
-    val b = when(col("doc_id") >= 0, bucket)
-      .otherwise(raise_error(lit("split requires non-negative doc_id")))
+    requireAbsent(docs, "split", "mix_bucket")
     val label = bounds.init.foldRight(lit(bounds.last._1): Column) {
       case ((name, bound), rest) => when(col("mix_bucket") < bound, name).otherwise(rest)
     }
-    docs.withColumn("mix_bucket", b).withColumn("split", label)
+    docs.withColumn("mix_bucket", nonNegativeId(bucket, "split")).withColumn("split", label)
   }
 
   /** Exact-n per-stratum sample: the first `n` documents of every stratum
@@ -185,10 +181,7 @@ object Sampling {
       seed: Long = 0L): DataFrame = {
     require(n >= 1, s"n must be positive: $n")
     require(seed >= 0 && seed < (1L << 31), s"seed must be in [0, 2^31): $seed")
-    Seq("sample_key", "sample_rank").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a $c column (this operator's output)")
-    }
+    requireAbsent(docs, "sample_key", "sample_rank")
     val KeySpace = 4294967296L // 2^32 — exclusive upper bound of the hash
     val slim = docs.select(col("doc_id"), col(keyCol),
       shuffleKey(seed, "sampleExact").cast("long").as("sample_key"))
@@ -301,10 +294,7 @@ object Sampling {
       salts: Int = 32): DataFrame = {
     require(n >= 1, s"n must be positive: $n")
     require(salts >= 1, s"salts must be positive: $salts")
-    Seq("topk_rank", "topk_salt").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a $c column (this operator's output)")
-    }
+    requireAbsent(docs, "topk_rank", "topk_salt")
     val score = when(col(scoreCol).isNotNull, col(scoreCol))
       .otherwise(raise_error(lit(s"topkByScore requires non-null $scoreCol")))
     val slim = docs.select(col("doc_id"), col(keyCol), score.as(scoreCol),
@@ -346,17 +336,13 @@ object Sampling {
   def shuffleOrder(docs: DataFrame, nShards: Int, seed: Long = 0L): DataFrame = {
     require(nShards > 0, s"nShards must be positive: $nShards")
     require(seed >= 0 && seed < (1L << 31), s"seed must be in [0, 2^31): $seed")
-    Seq("shard", "shuffle_key", "shuffle_pos").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a $c column (this operator's output)")
-    }
-    val guarded = shuffleKey(seed, "shuffleOrder")
+    requireAbsent(docs, "shard", "shuffle_key", "shuffle_pos")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy("shuffle_key", "doc_id")
     val slim = docs
       .select(col("doc_id"),
         pmod(col("doc_id"), lit(nShards.toLong)).as("shard"),
-        guarded.cast("long").as("shuffle_key"))
+        shuffleKey(seed, "shuffleOrder").cast("long").as("shuffle_key"))
       .withColumn("shuffle_pos", (row_number().over(w) - 1).cast("long"))
     docs.join(slim.hint("SHUFFLE_HASH"), Seq("doc_id"))
   }

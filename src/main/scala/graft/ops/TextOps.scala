@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: quality scoring,
@@ -10,6 +10,20 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** Word count by space counting (length − length without spaces + 1):
+    * arithmetic both engines replay exactly.
+    */
+  private def nWords: Column =
+    (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long")
+
+  /** Whole-word occurrences of the stop words "the", "a" and "data",
+    * counted on the space-padded text column `padded`.
+    */
+  private def stopWords: Column = Seq("the", "a", "data").map { word =>
+    (length(col("padded")) - length(regexp_replace(col("padded"), s" $word ", ""))) /
+      (word.length + 2)
+  }.reduce(_ + _)
+
   /** Quality stats: word/char counts, average word length (×10, integer),
     * stopword density (per 1000 words). Space-counting via length-replace
     * keeps the arithmetic portable across engines.
@@ -18,8 +32,7 @@ object TextOps {
     docs.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),
-      (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
-        .cast("long").as("n_words"))
+      nWords.as("n_words"))
       .withColumn("avg_word_len_x10",
         expr("CAST(floor(10.0 * (n_chars - n_words + 1) / n_words) AS BIGINT)"))
 
@@ -27,19 +40,13 @@ object TextOps {
     * function-word set; `pred` = 'en' over a threshold. (The corpus being
     * synthetic word soup, this measures plumbing, not linguistics.)
     */
-  def langid(docs: DataFrame): DataFrame = {
-    def occurrences(word: String) =
-      ((length(col("padded")) - length(regexp_replace(col("padded"), s" $word ", "")))
-        / (word.length + 2))
+  def langid(docs: DataFrame): DataFrame =
     docs
       .withColumn("padded", concat(lit(" "), col("text"), lit(" ")))
-      .withColumn("n_stop",
-        (occurrences("the") + occurrences("a") + occurrences("data")).cast("long"))
-      .withColumn("n_words",
-        (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long"))
+      .withColumn("n_stop", stopWords.cast("long"))
+      .withColumn("n_words", nWords)
       .select(col("doc_id"), col("lang"), col("n_stop"),
         expr("CASE WHEN n_stop * 1000 / n_words >= 30 THEN 'en_like' ELSE 'other' END").as("pred"))
-  }
 
   /** Token counting: whitespace tokens + a BPE-ish regex segmentation count
     * (letter runs / digit runs / single punctuation).
@@ -47,8 +54,7 @@ object TextOps {
   def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
-        .cast("long").as("n_ws_tokens"),
+      nWords.as("n_ws_tokens"),
       regexp_count(col("text"), lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"))
         .cast("long").as("n_bpe_tokens"))
 
@@ -74,19 +80,13 @@ object TextOps {
     */
   def qualityFilter(docs: DataFrame, minWords: Long = 5, maxWords: Long = 100000,
       minAvgWordLenX10: Long = 20, maxAvgWordLenX10: Long = 120,
-      minStopPerMille: Long = 5): DataFrame = {
-    def occurrences(word: String) =
-      ((length(col("padded")) - length(regexp_replace(col("padded"), s" $word ", "")))
-        / (word.length + 2))
+      minStopPerMille: Long = 5): DataFrame =
     docs
       .withColumn("padded", concat(lit(" "), col("text"), lit(" ")))
-      .withColumn("n_words",
-        (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long"))
+      .withColumn("n_words", nWords)
       .withColumn("avg_wl_x10", expr(
         "CAST(floor(10.0 * (length(text) - n_words + 1) / n_words) AS BIGINT)"))
-      .withColumn("stop_pm",
-        ((occurrences("the") + occurrences("a") + occurrences("data")) * 1000 / col("n_words"))
-          .cast("long"))
+      .withColumn("stop_pm", (stopWords * 1000 / col("n_words")).cast("long"))
       .withColumn("reason", expr(
         s"""CASE
            | WHEN n_words < $minWords THEN 'too_short'
@@ -97,7 +97,6 @@ object TextOps {
            | ELSE 'kept' END""".stripMargin))
       .select(col("doc_id"), col("n_words"), col("avg_wl_x10"), col("stop_pm"),
         (col("reason") === "kept").cast("long").as("kept"), col("reason"))
-  }
 
   /** Pattern REDACTION — the PII-scrub shape of a training-data pipeline:
     * every match of `pattern` is replaced with `replacement` (emails,
@@ -156,13 +155,10 @@ object TextOps {
   def winnow(docs: DataFrame, n: Int = 5, w: Int = 4): DataFrame = {
     require(n >= 1, s"shingle size must be >= 1: $n")
     require(w >= 1, s"winnow window must be >= 1: $w")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     val frame = byDoc.orderBy("pos")
       .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow, w - 1)
-    docs.select(col("doc_id"),
-        posexplode(call_function("shingle_hashes", split(col("text"), " "), lit(n)))
-          .as(Seq("pos", "h")))
+    shinglePositions(docs, n)
       // frame windows first: the whole-partition count then rides their
       // (doc_id, pos) sort (its [doc_id] requirement is a prefix) — one
       // exchange, ONE sort for both Window ops
@@ -173,6 +169,18 @@ object TextOps {
       .select(col("doc_id"), (-col("sel.np")).cast("long").as("fp_pos"),
         col("sel.h").as("fp_hash"))
       .distinct()
+  }
+
+  /** (doc_id, pos, h): one row per n-word shingle position, `h` its
+    * 64-bit content hash from the native [[graft.functions.ShingleHashes]]
+    * kernel, emitted shuffle-free — the unit [[winnow]],
+    * [[Dedup.dupSpans]] and [[Dedup.cutSpans]] select over.
+    */
+  private[ops] def shinglePositions(docs: DataFrame, n: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs.select(col("doc_id"),
+      posexplode(call_function("shingle_hashes", split(col("text"), " "), lit(n)))
+        .as(Seq("pos", "h")))
   }
 
   /** SQL-lambda mirror of the fingerprint kernel (equivalence-test form). */
@@ -217,17 +225,23 @@ object TextOps {
         sum(col("tf") * col("df")).as("tf_df_sum"))
   }
 
-  /** Distinct word n-gram array for `words` (pre-split); docs shorter than
-    * n collapse to their whole text as one gram — same degenerate-doc rule
-    * as [[Dedup]]'s trigram unit, generalized to any n.
+  /** The word n-grams of `words` (pre-split) in order, space-joined; a
+    * doc shorter than n words gets the SQL array `short` instead.
     */
-  private[graft] def gramsSql(n: Int): String = {
+  private def gramsOrSql(n: Int, short: String): String = {
     val parts = (1 to n).map(j => s"element_at(words, i + $j)").mkString(", ")
-    s"""array_distinct(CASE WHEN size(words) >= $n THEN
+    s"""CASE WHEN size(words) >= $n THEN
        |  transform(sequence(0, size(words) - $n),
        |    i -> concat_ws(' ', $parts))
-       |ELSE array(concat_ws(' ', words)) END)""".stripMargin
+       |ELSE $short END""".stripMargin
   }
+
+  /** Distinct word n-gram array for `words` (pre-split); docs shorter than
+    * n collapse to their whole text as one gram — the unit of
+    * [[Dedup]]'s trigram Jaccard and of [[contamination]].
+    */
+  private[graft] def gramsSql(n: Int): String =
+    s"array_distinct(${gramsOrSql(n, "array(concat_ws(' ', words))")})"
 
   /** Repetition signals (the Gopher-rules family): per-doc duplicate word
     * n-gram statistics — `n_grams` (total instances), `distinct_grams`,
@@ -248,18 +262,13 @@ object TextOps {
     */
   def repetition(docs: DataFrame, n: Int = 2): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1: $n")
-    val parts = (1 to n).map(j => s"element_at(words, i + $j)").mkString(", ")
     // a NULL text must drop, not read as "short" (legacy size(NULL) = -1
     // would route it to the zeros branch) — the oracle's len(words)
     // comparisons are NULL for such docs, so both engines drop them
     docs.filter(col("text").isNotNull)
       .withColumn("words", split(col("text"), " "))
       .select(col("doc_id"),
-        explode_outer(expr(
-          s"""CASE WHEN size(words) >= $n THEN
-             |  transform(sequence(0, size(words) - $n),
-             |    i -> concat_ws(' ', $parts))
-             |ELSE CAST(array() AS array<string>) END""".stripMargin))
+        explode_outer(expr(gramsOrSql(n, "CAST(array() AS array<string>)")))
           .as("gram"))
       // null gram ⟺ short doc (concat_ws never yields null), so the
       // conditional folds below reproduce the zeros rows exactly

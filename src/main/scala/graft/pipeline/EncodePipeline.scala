@@ -79,8 +79,6 @@ object EncodePipeline {
                                      // blobs: the lightweight codecs expose
                                      // cross-row structure zstd exploits
                                      // (0.71 B/tok vs 1.42 for zstd on raw)
-      strictResume: Boolean = true,       // fail-fast if a skipped part_key's
-                                          // doc count drifted from the manifest
       label: String = "",     // K4/K5 user chunk label (reference
                               // Partition.label / filename __{suffix},
                               // types/partitions.rs:114-115, files.rs:61-90):
@@ -190,7 +188,6 @@ object EncodePipeline {
         s""""target_partitions":$targetPartitions,""" +
         s""""salt_buckets":$resolvedSalts,"max_partitions_per_run":$maxPartitionsPerRun,""" +
         s""""part_prefix":"${esc(partPrefix)}","parquet_codec":"$parquetCodec",""" +
-        s""""strict_resume":$strictResume,""" +
         s""""overwrite":$overwrite,""" +
         s""""label":"${esc(label)}",""" +
         s""""sort_columns":[${sortColumns.map(c => "\"" + esc(c) + "\"").mkString(",")}],""" +
@@ -368,10 +365,10 @@ object EncodePipeline {
     // `partPrefix`, the same per-batch key scoping streaming uses.
     // (An UNscoped re-run over the grown snapshot cannot pick them up:
     // positional bin keys make the trailing committed bin re-plan with
-    // more docs, which the strict-resume drift guard rightly refuses —
-    // and with strictResume=false the anti-join would silently skip the
-    // tail docs that fall inside an already-committed bin. The pickup
-    // spec in PipelineSpec demonstrates the scoped route end to end.)
+    // more docs, which the resume drift guard rightly refuses — without
+    // it the anti-join would silently skip the tail docs that fall inside
+    // an already-committed bin. The pickup spec in PipelineSpec
+    // demonstrates the scoped route end to end.)
     val (tokens, nDeferred) =
       if (cfg.reorgBuffer <= 0) (tokens0, 0L)
       else {
@@ -506,7 +503,7 @@ object EncodePipeline {
       val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
       val nSkipped = nPlanned - nTodo // previously committed (≠ deferred below)
 
-      if (cfg.strictResume && nSkipped > 0) {
+      if (nSkipped > 0) {
         // positional bin keys are only stable for an identical input
         // snapshot: if the input grew, docs appended to a committed trailing
         // bin would be silently skipped forever. Fail fast on doc-count

@@ -179,10 +179,12 @@ class PipelineSpec extends AnyFunSuite {
     val cfg = cfgBase.copy(outDir = out, targetBinTokens = 1L << 30, saltBuckets = 2)
     EncodePipeline.run(spark, Tokens.synthetic(spark, 200), cfg)
     val dropped = Tokens.synthetic(spark, 200).filter(col("doc_id") =!= 0)
-    val dry = EncodePipeline.run(spark, dropped, cfg.copy(dryRun = true, strictResume = false))
-    assert(dry.skipped == dry.planned && dry.nDocs == 0, dry)
+    // a dry run plans the same resume, so it raises the same guard
+    val dryErr = intercept[IllegalStateException](
+      EncodePipeline.run(spark, dropped, cfg.copy(dryRun = true)))
     val e = intercept[IllegalStateException](EncodePipeline.run(spark, dropped, cfg))
     assert(e.getMessage.contains("resume guard"), e.getMessage)
+    assert(dryErr.getMessage == e.getMessage, dryErr.getMessage)
     assert(ManifestSink.committedRunIds(out).size == 1)
   }
 
@@ -552,7 +554,6 @@ class PipelineSpec extends AnyFunSuite {
       maxPartitionsPerRun = c.getAs[Long]("max_partitions_per_run").toInt,
       partPrefix = c.getAs[String]("part_prefix"),
       parquetCodec = c.getAs[String]("parquet_codec"),
-      strictResume = c.getAs[Boolean]("strict_resume"),
       reorgBuffer = c.getAs[Long]("reorg_buffer"))
     val again = EncodePipeline.run(spark, tokens, cfg2)
     assert(again.committed == 0 && again.skipped == again.planned)
