@@ -108,10 +108,11 @@ object Dedup {
     * callers filter, then `distinct()`.
     *
     * Single anchor⨝member join (plan-audited shape): an ANCHOR is every
-    * member of a small bucket but only the min of an oversized one. Both
-    * join sides are filters of the SAME windowed subtree and keep its
-    * `keys` partitioning — the join adds no exchange, and there is no
-    * union branch recomputing the bucket source.
+    * member of a small bucket but only the min of an oversized one, and
+    * ONE window over `buckets` sizes the buckets — no per-branch window,
+    * no union branch. The member side reads no bucket stats, so column
+    * pruning plans it straight from `buckets`' source: that source is
+    * evaluated once per join side.
     */
   private def cappedPairs(buckets: DataFrame, id: String, keys: Seq[String],
       maxBucket: Int, carried: String*): DataFrame = {

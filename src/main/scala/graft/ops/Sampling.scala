@@ -39,8 +39,8 @@ object Sampling {
     * Mirrored in `OpsQueries.shuffleKeyDuckSql` and the OpsSpec driver
     * replays — value-identical, touch all or none.
     */
-  private def shuffleKey(seed: Long, opName: String): Column = nonNegativeId(expr(
-    s"pmod(pmod(pmod(doc_id, 4294967296) + $seed, 4294967296) * 1103515245, 4294967296)"),
+  private def shuffleKey(seed: Long, opName: String): Column = nonNegativeId(
+    expr(s"pmod(pmod(pmod(doc_id, 4294967296) + $seed, 4294967296) * 1103515245, 4294967296)"),
     opName)
 
   /** `value` where doc_id ≥ 0, a run-time error naming `opName` elsewhere:
