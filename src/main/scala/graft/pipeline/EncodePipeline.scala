@@ -30,9 +30,11 @@ import org.apache.spark.storage.StorageLevel
   *    stay uniform regardless of skew;
   *  - resume/commit are metadata-only operations against a manifest dataset
   *    that Spark writes distributed (no driver-side collect of partitions);
-  *    the committed-key side of the resume anti-join broadcasts only below
-  *    a size threshold — beyond it (thousands of runs at 100 TB) it
-  *    degrades gracefully to a shuffle join.
+  *    a resume counts one per-key ledger (the plan's and the current
+  *    manifest's doc counts, one hashed full-outer join of slim key
+  *    tables), cached in one partition while the commit reports size it
+  *    as small — beyond that (thousands of runs at 100 TB) it keeps its
+  *    shuffle partitioning.
   *
   * Resume contract: part_keys are positional bins over a cumulative-sum
   * window, so they are only stable across runs if the input snapshot is
@@ -263,21 +265,27 @@ object EncodePipeline {
     if (cfg.label.nonEmpty) concat_ws("__", stub, lit(cfg.label)) else stub
   }
 
-  /** Resume anti-join with a size-guarded broadcast: the committed-key set
-    * grows without bound over a sink's lifetime (thousands of runs at
-    * 100 TB would blow the broadcast limit), so past `limit` rows the
-    * anti-join degrades to a shuffle join against the partition-pruned
-    * manifest. Exposed for plan-level tests (PlanSpec asserts both
-    * strategies).
+  /** The resume ledger: one row per part_key of the plan or of the
+    * CURRENT manifest, with the plan's doc count (`n_planned`) and the
+    * manifest's (`n_committed`), null on the side that lacks the key. One
+    * hashed full-outer join of two slim per-key tables: no token or blob
+    * column, never a sort-merge join. While the count-free
+    * [[ManifestSink.resumeKeyEstimate]] stays within `keyLimit` the ledger
+    * is one partition, so a count over its cache is one job without an
+    * exchange; past it the join keeps its shuffle partitioning. A fresh
+    * sink has no manifest: the ledger is the plan's counts, in their own
+    * partitioning. Exposed for PlanSpec, which lowers the limit.
     */
-  def resumeAntiJoin(plannedKeys: DataFrame, committedKeys: DataFrame,
-      nCommitted: Long, limit: Long): DataFrame = {
-    // the MERGE hint pins the large-side strategy: without it Spark's size
-    // estimate of the (slim) key table could re-introduce the broadcast
-    val side =
-      if (nCommitted <= limit) broadcast(committedKeys)
-      else committedKeys.hint("MERGE")
-    plannedKeys.join(side, Seq("part_key"), "left_anti")
+  private[graft] def resumeLedger(spark: SparkSession, root: String, plannedParts: DataFrame,
+      freshSink: Boolean, keyLimit: Long = ManifestSink.BroadcastKeyLimit): DataFrame = {
+    val planCounts = plannedParts.groupBy("part_key").agg(count(lit(1)).as("n_planned"))
+    if (freshSink) planCounts.withColumn("n_committed", lit(null).cast("long"))
+    else {
+      val committed = ManifestSink.currentManifest(spark, root)
+        .select(col("part_key"), col("n_docs").as("n_committed"))
+      val ledger = planCounts.join(committed.hint("SHUFFLE_HASH"), Seq("part_key"), "full_outer")
+      if (ManifestSink.resumeKeyEstimate(root) <= keyLimit) ledger.coalesce(1) else ledger
+    }
   }
 
   /** Manifest rows (in [[ManifestSink.ManifestSchemaCols]] order) of a
@@ -366,7 +374,7 @@ object EncodePipeline {
     // (An UNscoped re-run over the grown snapshot cannot pick them up:
     // positional bin keys make the trailing committed bin re-plan with
     // more docs, which the resume drift guard rightly refuses — without
-    // it the anti-join would silently skip the tail docs that fall inside
+    // it the resume would silently skip the tail docs that fall inside
     // an already-committed bin. The pickup spec in PipelineSpec
     // demonstrates the scoped route end to end.)
     val (tokens, nDeferred) =
@@ -409,10 +417,11 @@ object EncodePipeline {
     // every cache the run makes; the one finally below releases them on
     // every exit, so long-lived sessions strand no blocks
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = {
-      cached += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    def persisted(df: DataFrame, when: Boolean = true): DataFrame =
+      if (!when) df else {
+        cached += df
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+      }
     // The data and manifest writes run concurrently (see the write path
     // below). The first failure on either side cancels the other's jobs by
     // this run's tag, which leaves the caller's job group alone.
@@ -431,38 +440,35 @@ object EncodePipeline {
         manifestSide.join(100)
       }
     try {
-      // CURRENT view (latest run per part_key): on an append-only sink this
-      // is the committed manifest verbatim; after an overwrite it is the
-      // supersession view, so the drift guard below compares against the
-      // winning run's doc counts, not a double-counting sum over history.
-      // Persisted unless the sink is fresh (nothing to scan): the committed
-      // count, the anti-join and the drift guard share one scan. One row
-      // per part_key, so no distinct is needed. A fresh sink has nothing to
-      // count either, so it runs no job here.
-      val current = ManifestSink.currentManifest(spark, cfg.outDir)
+      // Every resume number is a filter of one persisted per-key ledger
+      // ([[resumeLedger]]): committed, planned, todo, the drift guard and
+      // the overwrite coverage guard. The first count builds it; on a sink
+      // the commit reports size as small it is one partition, so every
+      // later count is one job over its cache. Its manifest side is the
+      // CURRENT view (latest run per part_key): after an overwrite the
+      // drift guard compares against the winning run's doc counts, not a
+      // double-counting sum over history. A fresh sink has nothing to
+      // count, so it runs no job here.
       val freshSink = ManifestSink.committedRunIds(cfg.outDir).isEmpty
-      val committedMan = if (freshSink) current else persisted(current)
-      val committedKeysDf = committedMan.select("part_key")
-      val nCommitted = if (freshSink) 0L else committedKeysDf.count()
-
       // Per-doc partition assignments (slim metadata) are persisted so the
-      // plan/skip/limit accounting and the key join never re-derive the
-      // input; the heavy arrays are read exactly once per run, in the encode
-      // pass (the reference's plan-then-collect shape, freeze.rs:26-125).
-      // A first run on a fresh sink that writes every planned part needs
-      // no accounting up front: the plan feeds the encode join directly,
-      // and the run's totals give the planned count (every planned key
-      // holds at least one doc, so it equals the committed count).
+      // ledger and the key join never re-derive the input; the heavy arrays
+      // are read exactly once per run, in the encode pass (the reference's
+      // plan-then-collect shape, freeze.rs:26-125). A first run on a fresh
+      // sink that writes every planned part needs no accounting up front:
+      // the plan feeds the encode join directly, and the run's totals give
+      // the planned count (every planned key holds at least one doc, so it
+      // equals the committed count).
       val countPlan = !freshSink || cfg.dryRun || cfg.maxPartitionsPerRun != Int.MaxValue
-      val plannedParts =
-        if (countPlan) persisted(plan(tokens, cfg, salts, binTokens))
-        else plan(tokens, cfg, salts, binTokens)
-      val plannedKeys = plannedParts.select("part_key").distinct()
+      val plannedParts = persisted(plan(tokens, cfg, salts, binTokens), countPlan)
+      val ledger = persisted(resumeLedger(spark, cfg.outDir, plannedParts, freshSink), countPlan)
+      val committedKeysDf = ledger.filter(col("n_committed").isNotNull)
+      val nCommitted = if (freshSink) 0L else committedKeysDf.count()
+      val plannedKeys = ledger.filter(col("n_planned").isNotNull)
       val nPlanned = if (countPlan) plannedKeys.count() else 0L // summary uses the totals
       // resume: skip already-committed partitions (freeze.rs:96-109 analog);
       // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
       // the re-committed keys supersede via the reader's latest-run-per-key
-      // resolution, so no anti-join and no drift guard (re-encoding after an
+      // resolution, so no skip and no drift guard (re-encoding after an
       // input/config change is the point)
       if (cfg.overwrite && nCommitted > 0) {
         // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
@@ -477,13 +483,8 @@ object EncodePipeline {
         // to them — other prefixes are different input slices, not ghost
         // risks. An UNprefixed overwrite still guards every committed key
         // (loud on a mixed sink: re-run with the matching partPrefix).
-        val guardKeys =
-          if (cfg.partPrefix.nonEmpty)
-            committedKeysDf.filter(col("part_key").startsWith(cfg.partPrefix + "/"))
-          else committedKeysDf
-        val uncovered = guardKeys
-          .join(plannedKeys.hint("SHUFFLE_HASH"), Seq("part_key"), "left_anti")
-          .count()
+        val uncovered = committedKeysDf.filter(col("n_planned").isNull &&
+          (lit(cfg.partPrefix.isEmpty) || col("part_key").startsWith(cfg.partPrefix + "/"))).count()
         if (uncovered > 0)
           throw new IllegalStateException(
             s"overwrite coverage guard: $uncovered committed part_key(s) " +
@@ -495,10 +496,8 @@ object EncodePipeline {
               "sink (re-run with the matching partPrefix).")
       }
       var todoKeys =
-        if (cfg.overwrite) plannedKeys
-        else resumeAntiJoin(plannedKeys, committedKeysDf, nCommitted,
-          ManifestSink.BroadcastKeyLimit)
-      // fresh sink (nothing committed): the anti-join is an identity, so the
+        if (cfg.overwrite) plannedKeys else plannedKeys.filter(col("n_committed").isNull)
+      // fresh sink (nothing committed): every planned key is todo, so the
       // todo count equals the planned count — skip the extra job
       val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
       val nSkipped = nPlanned - nTodo // previously committed (≠ deferred below)
@@ -507,12 +506,9 @@ object EncodePipeline {
         // positional bin keys are only stable for an identical input
         // snapshot: if the input grew, docs appended to a committed trailing
         // bin would be silently skipped forever. Fail fast on doc-count
-        // drift for any key we are about to skip.
-        val plannedCounts = plannedParts.groupBy("part_key")
-          .agg(count(lit(1)).as("n_planned"))
-        val committedCounts = committedMan.select(col("part_key"), col("n_docs").as("n_committed"))
-        val drift = plannedCounts.join(committedCounts, Seq("part_key"))
-          .filter(col("n_planned") =!= col("n_committed")).count()
+        // drift for any key we are about to skip (a key on one side only
+        // compares null, so it never counts).
+        val drift = ledger.filter(col("n_planned") =!= col("n_committed")).count()
         if (drift > 0)
           throw new IllegalStateException(
             s"resume guard: $drift committed part_key(s) have a different doc " +
@@ -662,8 +658,8 @@ object EncodePipeline {
 
   /** Run to completion (multiple bounded runs if maxPartitionsPerRun set). */
   def runAll(spark: SparkSession, tokens: DataFrame, cfg: Config): Seq[RunSummary] = {
-    // a resume wave after a bounded overwrite wave would anti-join against
-    // ALL committed keys — including the stale ones the overwrite hadn't
+    // a resume wave after a bounded overwrite wave would skip ALL
+    // committed keys — including the stale ones the overwrite hadn't
     // reached yet — and silently leave them un-recomputed
     require(!cfg.overwrite,
       "overwrite is a single-run operation (all planned keys recomputed in " +

@@ -27,7 +27,7 @@ import scala.jdk.CollectionConverters._
   *  - readers join data against committed (part_key, run_id) pairs, so a
   *    crashed run's orphan files are never read and a re-run of the same
   *    partition cannot produce duplicates;
-  *  - resume = anti-join the new plan against committed part_keys.
+  *  - resume = skip the planned part_keys the current manifest holds.
   *
   * A run's lifecycle is [[begin]], then [[commit]] or [[abort]]; the marker
   * files, the geometry pin and their order are this object's alone.
@@ -139,8 +139,9 @@ object ManifestSink {
     */
   val IsinRunLimit: Int = 64
 
-  /** Above this many keys a key-table join (resume anti-join, todo
-    * semi-join, snapshot read) hashes a shuffle instead of broadcasting.
+  /** Above this many keys a key-table join (todo semi-join, snapshot
+    * read) hashes a shuffle instead of broadcasting, and a resume's
+    * per-key ledger keeps its shuffle partitioning instead of one partition.
     */
   val BroadcastKeyLimit: Long = 1L << 20
 
@@ -266,7 +267,7 @@ object ManifestSink {
     * re-encoded partitions appear exactly once, and an overwrite run's
     * rows shadow the runs it superseded.
     *
-    * Size-guarded like the resume anti-join (both directions of
+    * Size-guarded like the resume ledger (both directions of
     * freeze.rs:96-109's skip-existing semantics): the committed pair set
     * grows without bound over a sink's lifetime, so past
     * `broadcastKeyLimit` pairs the semi-join degrades from a broadcast to
@@ -307,13 +308,26 @@ object ManifestSink {
     if (counts.forall(_.isDefined)) counts.flatten.sum else Long.MaxValue
   }
 
+  private val PlannedField = """"planned":(\d+)""".r
+
+  /** Count-free size estimate of a resume's per-key ledger: the
+    * [[committedKeyBound]] plus the newest commit report's `"planned"`
+    * count (this run's key count when its input is that run's).
+    * Long.MaxValue when a report lacks either field.
+    */
+  def resumeKeyEstimate(root: String): Long = {
+    val planned = readCommitSummaries(root).lastOption
+      .flatMap(PlannedField.findFirstMatchIn(_)).fold(Long.MaxValue)(_.group(1).toLong)
+    (BigInt(planned) + committedKeyBound(root)).min(Long.MaxValue).toLong
+  }
+
   def readCommitSummaries(root: String): Seq[String] =
     committedRunIds(root).map(id => readUtf8(commitsDir(root).resolve(s"$id.json")))
 
   // ---- pinned plan geometry: part_keys are positional (source, salt,
   // bin) coordinates, so EVERY run against a sink must use the same salt
   // count and bin size — otherwise identical docs land under fresh keys
-  // and the resume anti-join can't see they were already committed
+  // and the resume can't see they were already committed
   // (silent duplication). The first run pins the geometry; later runs
   // validate against it (and auto-salt mode reuses the pin, which also
   // keeps auto salts stable if the input grows past a sizing boundary).

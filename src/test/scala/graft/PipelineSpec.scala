@@ -7,12 +7,12 @@ import graft.util.LocalFs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{LeafExecNode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -57,38 +57,45 @@ class PipelineSpec extends AnyFunSuite {
 
   /** The queries of one run: the executed plan and the command of its data
     * and manifest writes, keyed by the output dir name ("data",
-    * "manifest"), and the name of every action it ran.
+    * "manifest"), and the name and executed plan of every action it ran,
+    * in order.
     */
   private class Writes(val plans: Map[String, SparkPlan],
-      val cmds: Map[String, InsertIntoHadoopFsRelationCommand], val actions: Seq[String])
+      val cmds: Map[String, InsertIntoHadoopFsRelationCommand],
+      val actions: Seq[(String, SparkPlan)])
 
   private def writePlans(body: => Unit): Writes = {
-    val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
-    val cmds = new java.util.concurrent.ConcurrentHashMap[String, InsertIntoHadoopFsRelationCommand]
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        actions.add(funcName)
-        nodes(qe.executedPlan, _ => false).collect {
-          case w: DataWritingCommandExec => w.cmd
-        }.foreach {
-          case i: InsertIntoHadoopFsRelationCommand =>
-            cmds.put(i.outputPath.getName, i)
-            plans.put(i.outputPath.getName, qe.executedPlan)
-          case _ => ()
-        }
-      }
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe))
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // the listener is called from the listener bus, after the action
+    // returns; the bus keeps order, so a marker action before and after the
+    // body brackets exactly the body's actions
+    def marker(): QueryExecution = {
+      val m = spark.range(1).toDF()
+      m.collect()
+      m.queryExecution
+    }
     spark.listenerManager.register(listener)
-    try {
+    val run = try {
+      val start = marker()
       body
-      // the listener is called from the listener bus, after the run returns;
-      // the bus keeps order, so the writes come after every earlier action
+      val end = marker()
       val deadline = System.nanoTime() + 30000000000L
-      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (!seen.asScala.exists(_._2 eq end) && System.nanoTime() < deadline) Thread.sleep(20)
+      seen.asScala.toSeq.dropWhile(_._2 ne start).drop(1).takeWhile(_._2 ne end)
     } finally spark.listenerManager.unregister(listener)
-    new Writes(plans.asScala.toMap, cmds.asScala.toMap, actions.asScala.toSeq)
+    val writes = run.flatMap { case (_, qe) =>
+      nodes(qe.executedPlan, _ => false).collect {
+        case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) =>
+          i.outputPath.getName -> (i, qe.executedPlan)
+      }
+    }.toMap
+    new Writes(writes.map { case (k, v) => k -> v._2 }, writes.map { case (k, v) => k -> v._1 },
+      run.map { case (f, qe) => (f, qe.executedPlan) })
   }
 
   test("full run: roundtrip bit-identity, lineage, compression") {
@@ -135,6 +142,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(ManifestSink.readCommitted(spark, out).count() == 500)
   }
 
+  test("a resume's planned, skipped and committed match the plan and the current manifest") {
+    val out = freshDir()
+    val tokens = Tokens.synthetic(spark, 500)
+    val cfg = cfgBase.copy(outDir = out, maxPartitionsPerRun = 2,
+      targetBinTokens = 16384, saltBuckets = 2)
+    EncodePipeline.run(spark, tokens, cfg)
+    // (planned keys, planned keys the current manifest holds)
+    def expected(): (Long, Long) = {
+      val planned = EncodePipeline.plan(tokens, cfg).select("part_key").distinct()
+      val current = ManifestSink.currentManifest(spark, out).select("part_key")
+      (planned.count(), planned.join(current, Seq("part_key"), "left_semi").count())
+    }
+    val (p1, k1) = expected()
+    assert(k1 == 2 && p1 - k1 > 2, (p1, k1))
+    val bounded = EncodePipeline.run(spark, tokens, cfg)
+    assert((bounded.planned, bounded.skipped, bounded.committed) == (p1, k1, 2L))
+    val (p2, k2) = expected()
+    assert(p2 == p1 && k2 == k1 + 2, (p2, k2))
+    val rest = EncodePipeline.run(spark, tokens, cfg.copy(maxPartitionsPerRun = Int.MaxValue))
+    assert((rest.planned, rest.skipped, rest.committed) == (p2, k2, p2 - k2))
+    assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
+  }
+
   test("no-op resume commits an empty run and leaves data and manifest files untouched") {
     val out = freshDir()
     val tokens = Tokens.synthetic(spark, 200)
@@ -172,6 +202,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
   }
 
+  test("a no-op resume runs four counts and no write; the last three read only the cached ledger") {
+    val out = freshDir()
+    val tokens = Tokens.synthetic(spark, 300)
+    val cfg = cfgBase.copy(outDir = out)
+    EncodePipeline.run(spark, tokens, cfg)
+    var s: EncodePipeline.RunSummary = null
+    val resume = writePlans { s = EncodePipeline.run(spark, tokens, cfg) }
+    assert(s.committed == 0 && s.skipped == s.planned && s.planned > 0)
+    assert(resume.plans.isEmpty && resume.cmds.isEmpty, resume.plans.keySet)
+    // committed, planned, todo and the drift guard
+    assert(resume.actions.map(_._1) == Seq.fill(4)("count"), resume.actions.map(_._1))
+    resume.actions.drop(1).foreach { case (_, plan) =>
+      val all = nodes(plan, _ => false)
+      assert(!all.exists(_.isInstanceOf[Exchange]), plan)
+      val leaves = all.collect {
+        case l: LeafExecNode if !l.isInstanceOf[AdaptiveSparkPlanExec] &&
+          !l.isInstanceOf[QueryStageExec] => l
+      }
+      assert(leaves.nonEmpty && leaves.forall {
+        case m: InMemoryTableScanExec =>
+          Set("part_key", "n_planned", "n_committed") == m.relation.output.map(_.name).toSet
+        case _ => false
+      }, plan)
+    }
+  }
+
   test("the resume guard runs before the no-op exit: all keys committed, counts drifted") {
     val out = freshDir()
     // one bin per (source, salt): dropping a doc keeps the key set, so the
@@ -200,7 +256,30 @@ class PipelineSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       EncodePipeline.run(spark, tokens.filter(col("doc_id") =!= 0), cfg)
     }
+    // the overwrite coverage guard reads the ledger too: one source's keys
+    // leave every other source's committed keys uncovered
+    val e = intercept[IllegalStateException] {
+      EncodePipeline.run(spark, tokens.filter(col("source") === "web"), cfg.copy(overwrite = true))
+    }
+    assert(e.getMessage.contains("coverage guard"), e.getMessage)
     assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("each benchmark phase anchor sits on exactly one line of EncodePipeline.scala") {
+    def lines(path: String) = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(path)).asScala.toSeq
+    // perfbench's PhaseOf maps a job to a phase by the line of its action;
+    // its anchors are `"<phase>" -> "<string literal>"` pairs
+    val Anchor = """\s*"(\w+)" -> "((?:[^"\\]|\\.)*)",?\)?""".r
+    val anchors = lines("perfbench/src/graftbench/Trace.scala").collect {
+      case Anchor(phase, lit) => phase -> lit.replace("\\\"", "\"")
+    }
+    assert(anchors.map(_._1) == Seq("salt", "committed_read", "plan", "resume_join",
+      "drift_guard", "data_write", "manifest_write", "totals"), anchors)
+    val src = lines("src/main/scala/graft/pipeline/EncodePipeline.scala")
+    anchors.foreach { case (phase, a) =>
+      assert(src.count(_.contains(a)) == 1, s"$phase anchor `$a`")
+    }
   }
 
   test("orphans from uncommitted runs stay invisible") {
@@ -358,7 +437,7 @@ class PipelineSpec extends AnyFunSuite {
     var s: EncodePipeline.RunSummary = null
     val fresh = writePlans { s = EncodePipeline.run(spark, tokens, cfg) }
     assert(fresh.plans.keySet == Set("data", "manifest"), fresh.plans.keySet)
-    assert(!fresh.actions.contains("count"), fresh.actions)
+    assert(!fresh.actions.map(_._1).contains("count"), fresh.actions.map(_._1))
     val nKeys = EncodePipeline.plan(tokens, cfg).select("part_key").distinct().count()
     assert(s.planned == nKeys && s.committed == nKeys && s.skipped == 0 && s.nDocs == 400)
     assert(ManifestSink.readCommitSummaries(out).exists(_.contains(s"\"planned\":$nKeys,")))

@@ -43,26 +43,58 @@ class PlanSpec extends AnyFunSuite {
     assert(simple.contains("*(1) Project"), simple)
   }
 
-  test("resume anti-join: broadcast under the key limit, shuffle join past it") {
+  test("resume ledger: one hashed join of slim key tables, one partition under its guard") {
+    import graft.pipeline.EncodePipeline
+    import graft.sinks.ManifestSink
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
     val tokens = graft.sources.Tokens.synthetic(spark, 100)
     val out = java.nio.file.Files.createTempDirectory("graft-plan").toString
-    val cfg = graft.pipeline.EncodePipeline.Config(outDir = out, targetBinTokens = 4096)
-    graft.pipeline.EncodePipeline.run(spark, tokens, cfg)
-    val committed = graft.sinks.ManifestSink.committedManifest(spark, out)
-      .select("part_key").distinct()
-    val n = committed.count()
-    val planned = graft.pipeline.EncodePipeline.plan(tokens, cfg)
-    // small committed set → broadcast
-    val small = formatted(graft.pipeline.EncodePipeline.resumeAntiJoin(
-      planned, committed, n, limit = 1L << 20))
-    assert(small.contains("BroadcastHashJoin") || small.contains("BroadcastNestedLoopJoin"), small)
-    assert(small.contains("LeftAnti"), small)
-    // past the limit (simulated with limit=0) → no broadcast of the
-    // committed side; a shuffle-based anti-join instead
-    val big = formatted(graft.pipeline.EncodePipeline.resumeAntiJoin(
-      planned, committed, n, limit = 0))
-    assert(big.contains("LeftAnti"), big)
-    assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"), big)
+    val cfg = EncodePipeline.Config(outDir = out, targetBinTokens = 4096)
+    EncodePipeline.run(spark, tokens, cfg)
+    val planned = EncodePipeline.plan(tokens, cfg)
+    def ledger(limit: Long) = EncodePipeline.resumeLedger(spark, out, planned,
+      freshSink = false, keyLimit = limit)
+    def tree(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => tree(a.executedPlan)
+      case _ => p.children.flatMap(tree)
+    })
+    // the planned partition count (inside adaptive execution, the plan it
+    // starts from)
+    def partitions(df: org.apache.spark.sql.DataFrame) = (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).outputPartitioning.numPartitions
+    val small = ledger(ManifestSink.BroadcastKeyLimit)
+    val nodes = tree(small.queryExecution.executedPlan)
+    // the join is hashed on part_key, never sort-merge
+    val joins = nodes.collect { case j: ShuffledHashJoinExec => j }
+    assert(joins.size == 1, formatted(small))
+    assert(joins.head.leftKeys.flatMap(_.references.map(_.name)) == Seq("part_key"))
+    assert(!formatted(small).contains("SortMergeJoin"), formatted(small))
+    // slim: no operator reads or carries a token or blob column
+    val columns = nodes.flatMap(n => n.output ++ n.references).map(_.name).toSet
+    assert(!columns.contains("tokens") && !columns.contains("blob"), columns)
+    // the guard reads its estimate off the commit reports (no count job):
+    // committed keys plus the newest run's planned keys; at the estimate
+    // the ledger is one partition, one key under it the join keeps its
+    // shuffle partitioning
+    val nKeys = ManifestSink.currentManifest(spark, out).count()
+    val estimate = ManifestSink.resumeKeyEstimate(out)
+    assert(estimate == 2 * nKeys)
+    assert(partitions(small) == 1 && partitions(ledger(estimate)) == 1)
+    val big = ledger(estimate - 1)
+    assert(partitions(big) > 1, formatted(big))
+    assert(formatted(big).contains("ShuffledHashJoin") && !formatted(big).contains("SortMergeJoin"))
+    // both sides hold the same rows: every key planned and committed
+    Seq(small, big).foreach { l =>
+      assert(l.count() == nKeys)
+      assert(l.filter(col("n_planned") === col("n_committed")).count() == nKeys)
+    }
+    // a fresh sink has no reports: the plan's counts in their own partitioning
+    val fresh = EncodePipeline.resumeLedger(spark, "unused", planned, freshSink = true)
+    assert(partitions(fresh) > 1 && !formatted(fresh).contains("Join"), formatted(fresh))
   }
 
   test("snapshot reader: broadcast under the key limit, hashed shuffle past it, never SMJ") {
