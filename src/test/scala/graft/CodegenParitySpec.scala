@@ -97,7 +97,7 @@ class CodegenParitySpec extends AnyFunSuite {
     .withColumn("longs", org.apache.spark.sql.functions.expr("transform(longs, x -> coalesce(x, 0L))"))
 
   private lazy val data: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-parity").resolve("kc").toString
+    val dir = SparkTestSession.tempDir("graft-parity").resolve("kc").toString
     val nulls = Row.fromSeq(30L +: Seq.fill(schema.length - 1)(null))
     spark.createDataFrame(spark.sparkContext.parallelize((0 until 30).map(row) :+ nulls, 2), schema)
       .write.parquet(dir)

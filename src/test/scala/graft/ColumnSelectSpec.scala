@@ -69,7 +69,7 @@ class ColumnSelectSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     // private copy of the table: other suites cache the shared sf0.001
     // path, and a cache-matched plan has no parquet ReadSchema to assert on
-    val tmp = java.nio.file.Files.createTempDirectory("colsel").toString
+    val tmp = SparkTestSession.tempDir("colsel").toString
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .write.mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp)

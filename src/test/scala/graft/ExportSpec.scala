@@ -15,7 +15,7 @@ class ExportSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
 
   test("parquet/csv/json exports roundtrip the encoded table bit-identically") {
-    val sink = java.nio.file.Files.createTempDirectory("graft-export-src").toString
+    val sink = SparkTestSession.tempDir("graft-export-src").toString
     val tokens = Tokens.synthetic(spark, 200)
     EncodePipeline.run(spark, tokens,
       EncodePipeline.Config(outDir = sink, targetBinTokens = 8192))
@@ -24,7 +24,7 @@ class ExportSpec extends AnyFunSuite {
 
     // column-set selection at the export boundary (schemas.rs algebra on
     // the writer path): explicit list, include-append, exclude
-    val selDir = java.nio.file.Files.createTempDirectory("graft-export-sel").toString
+    val selDir = SparkTestSession.tempDir("graft-export-sel").toString
     Export.write(encoded, selDir, "parquet", "snappy",
       graft.ops.ColumnSelect.Spec(
         include = Some(Seq("codec")), exclude = Some(Seq("n_tok"))),
@@ -32,7 +32,7 @@ class ExportSpec extends AnyFunSuite {
     assert(spark.read.parquet(selDir).columns.toSeq == Seq("doc_id", "source", "codec"))
 
     for (format <- Export.Formats) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-export-$format").toString
+      val dir = SparkTestSession.tempDir(s"graft-export-$format").toString
       Export.write(encoded, dir, format)
       val back = Export.read(spark, dir, format, encoded.schema)
       assert(back.count() == 200, format)
@@ -51,13 +51,13 @@ class ExportSpec extends AnyFunSuite {
   test("K5 subdir routing (Dataset/Namespace/Custom) + per-run hex presentation") {
     import Export.SubDir
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("graft-route-src").toString
+    val sink = SparkTestSession.tempDir("graft-route-src").toString
     val tokens = Tokens.synthetic(spark, 120)
     EncodePipeline.run(spark, tokens,
       EncodePipeline.Config(outDir = sink, targetBinTokens = 8192))
     val encoded = ManifestSink.readCommitted(spark, sink)
       .select("doc_id", "source", "n_tok", "codec", "blob")
-    val root = java.nio.file.Files.createTempDirectory("graft-route").toString
+    val root = SparkTestSession.tempDir("graft-route").toString
 
     // SubDir::Datatype analog (default): route by dataset name
     val d1 = Export.writeRouted(encoded, root, "parquet", "encoded_tokens", "corpusA")

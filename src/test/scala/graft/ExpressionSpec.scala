@@ -82,7 +82,7 @@ class ExpressionSpec extends AnyFunSuite {
 
   test("encode/decode stay inside whole-stage codegen over a parquet scan") {
     GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wsc").toString
+    val dir = SparkTestSession.tempDir("graft-wsc").toString
     rows.toDF("name", "tokens")
       .withColumn("tokens", $"tokens".cast("array<int>"))
       .write.mode("overwrite").parquet(dir)

@@ -35,7 +35,7 @@ class LocalFsSpec extends AnyFunSuite {
     val hadoop = new RawLocalFileSystem
     hadoop.initialize(java.net.URI.create("file:///"), new Configuration())
 
-    val root = Files.createTempDirectory("graft-localfs")
+    val root = SparkTestSession.tempDir("graft-localfs")
     def pair(name: String, dir: Boolean): (JPath, JPath) = {
       def make(p: JPath) = if (dir) Files.createDirectory(p) else Files.createFile(p)
       (make(root.resolve(s"ours-$name")), make(root.resolve(s"hadoop-$name")))
@@ -80,7 +80,7 @@ class LocalFsSpec extends AnyFunSuite {
         }
       }
 
-      val out = Files.createTempDirectory("graft-sink")
+      val out = SparkTestSession.tempDir("graft-sink")
       val tokens = Tokens.synthetic(spark, 300)
       EncodePipeline.run(spark, tokens, EncodePipeline.Config(outDir = out.toString,
         targetBinTokens = 4096, saltBuckets = 4))
@@ -89,7 +89,7 @@ class LocalFsSpec extends AnyFunSuite {
 
       val encoded = ManifestSink.readCommitted(spark, out.toString)
       for (format <- Export.Formats) {
-        val dir = Files.createTempDirectory(s"graft-export-$format").resolve("out")
+        val dir = SparkTestSession.tempDir(s"graft-export-$format").resolve("out")
         Export.write(encoded, dir.toString, format)
         check(dir)
       }

@@ -4,6 +4,7 @@ import graft.pipeline.EncodePipeline
 import graft.sinks.ManifestSink
 import graft.sources.Tokens
 import graft.util.LocalFs
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -14,6 +15,7 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +33,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-sink").toString
+    SparkTestSession.tempDir("graft-sink").toString
 
   /** Drop a run's in-flight marker as if the run had ended elsewhere. */
   private def clearInflight(root: String, runId: String): Unit =
@@ -96,6 +98,53 @@ class PipelineSpec extends AnyFunSuite {
     }.toMap
     new Writes(writes.map { case (k, v) => k -> v._2 }, writes.map { case (k, v) => k -> v._1 },
       run.map { case (f, qe) => (f, qe.executedPlan) })
+  }
+
+  /** The call site Spark records for every root SQL execution and every
+    * stage of every job that `body` runs ("count at EncodePipeline.scala:465").
+    * A marker job before and after the body brackets exactly its events.
+    */
+  private def callSites(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val MarkerKey = "graft.test.marker"
+    val recording = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if recording.get && s.rootExecutionId.forall(_ == s.executionId) =>
+          sites.add(s.description)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(MarkerKey))) match {
+          case Some("start") => recording.set(true)
+          case Some(_) => recording.set(false); ended.countDown()
+          case None => if (recording.get) js.stageInfos.foreach(st => sites.add(st.name))
+        }
+    }
+    def marker(at: String): Unit = {
+      sc.setLocalProperty(MarkerKey, at)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(MarkerKey, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS), "no end marker")
+    } finally sc.removeSparkListener(listener)
+    sites.asScala.toSeq
+  }
+
+  /** Wait until the status store has heard every job end. */
+  private def awaitNoActiveJobs(): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, sc.statusTracker.getActiveJobIds.toSeq)
   }
 
   test("full run: roundtrip bit-identity, lineage, compression") {
@@ -280,6 +329,19 @@ class PipelineSpec extends AnyFunSuite {
     anchors.foreach { case (phase, a) =>
       assert(src.count(_.contains(a)) == 1, s"$phase anchor `$a`")
     }
+    // every execution and job of the benchmark's two runs (a fresh encode
+    // with the default config, then a no-op resume) that names this file
+    // names an anchor line, and every anchor line issues one of them
+    val anchorLines = anchors.map { case (_, a) => src.indexWhere(_.contains(a)) + 1 }.toSet
+    val cfg = EncodePipeline.Config(outDir = freshDir())
+    val tokens = Tokens.synthetic(spark, 300)
+    val sites = callSites {
+      EncodePipeline.run(spark, tokens, cfg)
+      EncodePipeline.run(spark, tokens, cfg)
+    }
+    val Site = """.* at EncodePipeline\.scala:(\d+)""".r
+    val named = sites.collect { case Site(line) => line.toInt }
+    assert(named.toSet == anchorLines, sites.distinct)
   }
 
   test("orphans from uncommitted runs stay invisible") {
@@ -383,10 +445,7 @@ class PipelineSpec extends AnyFunSuite {
     // the run waited for both of its concurrent writes: no job of it is
     // left running (the status store hears of job ends through the
     // listener bus), and it released every cache it made
-    val deadline = System.nanoTime() + 30000000000L
-    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    assert(sc.statusTracker.getActiveJobIds.isEmpty, sc.statusTracker.getActiveJobIds.toSeq)
+    awaitNoActiveJobs()
     assert(sc.getPersistentRDDs.size == cachesBefore)
     // nothing committed, orphans invisible
     assert(ManifestSink.readCommitted(spark, out).count() == 0)
@@ -395,6 +454,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(s.committed == s.planned && s.nDocs == 120)
     assert(s.priorFailedAttempts == 1)
     assert(EncodePipeline.verifyRoundtrip(spark, good, out) == 0)
+  }
+
+  test("a failed manifest write alone fails the run like any other failure; retry clean") {
+    val out = freshDir()
+    val tokens = Tokens.synthetic(spark, 150)
+    val sc = spark.sparkContext
+    val cachesBefore = sc.getPersistentRDDs.size
+    // a regular file where the manifest directory goes: the data side can
+    // write, the manifest side cannot
+    val squat = java.nio.file.Paths.get(ManifestSink.manifestDir(out))
+    java.nio.file.Files.write(squat, Array[Byte](1))
+    intercept[Exception](EncodePipeline.run(spark, tokens, cfgBase.copy(outDir = out)))
+    assert(ManifestSink.readErrorReports(out).size == 1)
+    assert(ManifestSink.readInflightMarkers(out).isEmpty && ManifestSink.committedRunIds(out).isEmpty)
+    awaitNoActiveJobs()
+    assert(sc.getPersistentRDDs.size == cachesBefore)
+    assert(ManifestSink.readCommitted(spark, out).count() == 0)
+    java.nio.file.Files.delete(squat)
+    val s = EncodePipeline.run(spark, tokens, cfgBase.copy(outDir = out))
+    assert(s.committed == s.planned && s.nDocs == 150 && s.priorFailedAttempts == 1)
+    assert(EncodePipeline.verifyRoundtrip(spark, tokens, out) == 0)
   }
 
   test("write plans: a fresh run skips the resume joins; the manifest shuffles only on enc_task") {

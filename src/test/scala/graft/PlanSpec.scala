@@ -50,7 +50,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
     val tokens = graft.sources.Tokens.synthetic(spark, 100)
-    val out = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val out = SparkTestSession.tempDir("graft-plan").toString
     val cfg = EncodePipeline.Config(outDir = out, targetBinTokens = 4096)
     EncodePipeline.run(spark, tokens, cfg)
     val planned = EncodePipeline.plan(tokens, cfg)
@@ -99,7 +99,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("snapshot reader: broadcast under the key limit, hashed shuffle past it, never SMJ") {
     val tokens = graft.sources.Tokens.synthetic(spark, 150)
-    val out = java.nio.file.Files.createTempDirectory("graft-plan-read").toString
+    val out = SparkTestSession.tempDir("graft-plan-read").toString
     graft.pipeline.EncodePipeline.run(spark, tokens,
       graft.pipeline.EncodePipeline.Config(outDir = out, targetBinTokens = 4096))
     // small committed-key set → broadcast semi-join

@@ -14,7 +14,7 @@ class SourcesSpec extends AnyFunSuite {
   test("documents round-trip value-exactly through json and csv sources") {
     val orig = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (format <- Seq("json", "csv")) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"docs-$format").toString
+      val tmp = SparkTestSession.tempDir(s"docs-$format").toString
       format match {
         case "json" => orig.write.mode("overwrite").json(tmp)
         case "csv" => orig.write.mode("overwrite")

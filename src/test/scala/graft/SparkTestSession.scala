@@ -5,6 +5,8 @@ import org.apache.logging.log4j.core.{Filter, LoggerContext}
 import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.SparkSession
 
+import java.nio.file.{Files, Path}
+
 /** One shared local SparkSession for the whole test run (guide: one session
   * per suite via lazy val; sharing across suites avoids repeated JVM-wide
   * Spark startup in `sbt -batch test`).
@@ -33,4 +35,23 @@ object SparkTestSession {
     ctx.updateLoggers()
     s
   }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh directory under the system temp dir. It is deleted, with
+    * everything in it, when the test JVM exits.
+    */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  sys.addShutdownHook(tempDirs.forEach { d =>
+    try {
+      val w = Files.walk(d)
+      try w.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally w.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
+  })
 }

@@ -12,7 +12,7 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-stream").toString
+    SparkTestSession.tempDir("graft-stream").toString
 
   test("streaming encode: micro-batches land in the manifest sink exactly once") {
     val in = freshDir(); val out = freshDir()

@@ -55,7 +55,7 @@ class TokensSpec extends AnyFunSuite {
   test("row-validity filter drops null-keyed rows at the source (F3)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("tokens-validity").toString
+    val tmp = SparkTestSession.tempDir("tokens-validity").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = true),
       StructField("text", StringType), StructField("lang", StringType),
