@@ -333,8 +333,15 @@ object EncodePipeline {
 
   /** Execute one run: encode + commit all not-yet-committed partitions
     * (bounded by cfg.maxPartitionsPerRun). Returns the run summary.
+    *
+    * The run is a chain of named steps, each passing its result to the
+    * next: defer the reorg tail, resolve or pin the geometry, account, then
+    * either the dry run's totals or encode, write and commit. Every Spark
+    * action of a run is called on the line that names its benchmark phase
+    * (PhaseOf in perfbench/src/graftbench/Trace.scala places a job by that
+    * line), never through a helper.
     */
-  def run(spark: SparkSession, tokens: DataFrame, cfg0: Config): RunSummary = {
+  def run(spark: SparkSession, tokens0: DataFrame, cfg0: Config): RunSummary = {
     val cfg = cfg0.validated
     GraftFunctions.register(spark)
     val t0 = System.nanoTime()
@@ -349,8 +356,43 @@ object EncodePipeline {
       ManifestSink.begin(cfg.outDir, runId,
         s"""{"run_id":"$runId","started_unix_ms":${System.currentTimeMillis},""" +
           s""""engine_version":"$Version","config":${cfg.reportJson(cfg.saltBuckets)}}""")
-    try runGuarded(spark, tokens, cfg, runId, t0)
-    catch {
+    // every cache the run makes; the finally below releases them on every
+    // exit (the write step has joined its manifest thread by then), so
+    // long-lived sessions strand no blocks
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      cached += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      val (tokens, nDeferred) = deferTail(tokens0, cfg)
+      val (salts, binTokens) = geometry(tokens, cfg)
+      val Accounting(countPlan, nPlanned, nTodo, todoParts) =
+        account(spark, tokens, cfg, salts, binTokens, persisted)
+      // totals are (parts, docs, tokens, raw bytes, encoded bytes)
+      def summary(t: Row): RunSummary = RunSummary(runId,
+        if (countPlan) nPlanned else t.getLong(0), nPlanned - nTodo, t.getLong(0), t.getLong(1),
+        t.getLong(2), t.getLong(3), t.getLong(4), (System.nanoTime() - t0) / 1000000,
+        ManifestSink.readErrorReports(cfg.outDir).size.toLong, nDeferred)
+      if (cfg.dryRun) {
+        // --dry (freeze.rs:43-46): return the full plan accounting — the
+        // same planned/skipped/deferred and todo doc/token totals the real
+        // run would report — computed from the slim plan metadata only. The
+        // heavy arrays are never read, encode never runs, the sink is never
+        // touched (schema preview is the static [[OutputSchema]]).
+        val todo = todoParts
+          .agg(count(lit(1)), coalesce(sum(col("n_tok").cast("long")), lit(0L))).collect()(0)
+        summary(Row(0L, todo.getLong(0), todo.getLong(1), todo.getLong(1) * 4, 0L))
+      } else {
+        // nothing left to do (every planned part committed, the drift guard
+        // passed): commit the empty run without encoding, writing or
+        // aggregating anything — the manifest alone decided it
+        val totals =
+          if (countPlan && nTodo == 0) Row(0L, 0L, 0L, 0L, 0L)
+          else write(spark, persisted(encode(tokens, todoParts, runId)), cfg, runId)
+        commit(cfg, runId, salts, binTokens, summary(totals))
+      }
+    } catch {
       case e: Throwable =>
         // durable error accounting (reports.rs analog): the failed attempt
         // is recorded; its data stays invisible (no commit marker). A dry
@@ -359,273 +401,247 @@ object EncodePipeline {
           ManifestSink.abort(cfg.outDir, runId,
             s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
         throw e
-    }
+    } finally cached.foreach(_.unpersist())
   }
 
-  private def runGuarded(spark: SparkSession, tokens0: DataFrame, cfg: Config,
-      runId: String, t0: Long): RunSummary = {
-    // F6 batch reorg guard: docs within `reorgBuffer` of the input head
-    // (max doc_id) are excluded from this run's plan and counted as
-    // deferred — the batch analog of the reference's
-    // drop-blocks-near-chain-tip (cli blocks.rs:366-390). They are NOT
-    // failures: once settled, the tail runs as a SCOPED follow-up —
-    // filter the input to doc_id > cutoff and run with a fresh
-    // `partPrefix`, the same per-batch key scoping streaming uses.
-    // (An UNscoped re-run over the grown snapshot cannot pick them up:
-    // positional bin keys make the trailing committed bin re-plan with
-    // more docs, which the resume drift guard rightly refuses — without
-    // it the resume would silently skip the tail docs that fall inside
-    // an already-committed bin. The pickup spec in PipelineSpec
-    // demonstrates the scoped route end to end.)
-    val (tokens, nDeferred) =
-      if (cfg.reorgBuffer <= 0) (tokens0, 0L)
-      else {
-        val headRow = tokens0.agg(max(col("doc_id"))).collect()(0)
-        if (headRow.isNullAt(0)) (tokens0, 0L)
-        else {
-          val cutoff = headRow.getLong(0) - cfg.reorgBuffer
-          (tokens0.filter(col("doc_id") <= cutoff),
-            tokens0.filter(col("doc_id") > cutoff).count())
-        }
+  /** F6 batch reorg guard: docs within `reorgBuffer` of the input head
+    * (max doc_id) are excluded from this run's plan and counted as
+    * deferred — the batch analog of the reference's
+    * drop-blocks-near-chain-tip (cli blocks.rs:366-390). They are NOT
+    * failures: once settled, the tail runs as a SCOPED follow-up — filter
+    * the input to doc_id > cutoff and run with a fresh `partPrefix`, the
+    * same per-batch key scoping streaming uses. (An UNscoped re-run over
+    * the grown snapshot cannot pick them up: positional bin keys make the
+    * trailing committed bin re-plan with more docs, which the resume drift
+    * guard rightly refuses — without it the resume would silently skip the
+    * tail docs that fall inside an already-committed bin. The pickup spec
+    * in PipelineSpec demonstrates the scoped route end to end.) Returns
+    * the input to plan and the deferred doc count.
+    */
+  private def deferTail(tokens: DataFrame, cfg: Config): (DataFrame, Long) =
+    Option.when(cfg.reorgBuffer > 0)(tokens.agg(max(col("doc_id"))).collect()(0))
+      .filterNot(_.isNullAt(0)) // an empty input has no head
+      .fold((tokens, 0L)) { head =>
+        val cutoff = head.getLong(0) - cfg.reorgBuffer
+        (tokens.filter(col("doc_id") <= cutoff), tokens.filter(col("doc_id") > cutoff).count())
       }
 
-    // part_keys are positional (source, salt, bin) coordinates: every run
-    // against this sink must use the same geometry or identical docs land
-    // under fresh keys and resume sees nothing to skip (silent dupes).
-    // The first SUCCESSFUL run pins it (ManifestSink.commit); later runs
-    // validate — and auto-salt mode reuses the pin, so input growth can't
-    // shift the salt count mid-sink. targetPartitions mode derives its bin
-    // size at sink creation; on an already-pinned sink the pin IS the
-    // geometry (resume identity), so only an EXPLICIT targetBinTokens
-    // conflict is an error.
-    val pinned = ManifestSink.pinnedGeometry(cfg.outDir, cfg.saltBuckets,
-      if (cfg.targetPartitions == 0) cfg.targetBinTokens else 0L)
-    val (salts, binTokens) = pinned.getOrElse {
-      val s = resolveSalts(tokens, cfg)
+  /** The run's (salt count, bin size). part_keys are positional (source,
+    * salt, bin) coordinates: every run against this sink must use the same
+    * geometry or identical docs land under fresh keys and resume sees
+    * nothing to skip (silent dupes). The first SUCCESSFUL run pins it
+    * (ManifestSink.commit); later runs validate — and auto-salt mode reuses
+    * the pin, so input growth can't shift the salt count mid-sink.
+    * targetPartitions mode derives its bin size at sink creation; on an
+    * already-pinned sink the pin IS the geometry (resume identity), so only
+    * an EXPLICIT targetBinTokens conflict is an error.
+    */
+  private def geometry(tokens: DataFrame, cfg: Config): (Int, Long) =
+    ManifestSink.pinnedGeometry(cfg.outDir, cfg.saltBuckets,
+      if (cfg.targetPartitions == 0) cfg.targetBinTokens else 0L).getOrElse(
       // --n-chunks (subchunks.rs:12-43): bin size from the input total,
       // ceil so the count never overshoots N by more than the group
       // rounding; the derived value is pinned at commit like any other
-      val b =
+      (resolveSalts(tokens, cfg),
         if (cfg.targetPartitions > 0) {
           val total = tokens.agg(coalesce(sum(col("n_tok").cast("long")), lit(0L)))
             .collect()(0).getLong(0)
           math.max(1L, (total + cfg.targetPartitions - 1) / cfg.targetPartitions)
-        } else cfg.targetBinTokens
-      (s, b)
+        } else cfg.targetBinTokens))
+
+  /** What a run's accounting decided. `countPlan` false: the plan was not
+    * counted (`nPlanned` = `nTodo` = 0) and the run's totals give its
+    * planned count. `todoParts` is the slim plan of the parts to encode.
+    */
+  private final case class Accounting(countPlan: Boolean, nPlanned: Long, nTodo: Long,
+      todoParts: DataFrame)
+
+  /** The resume accounting: the ledger, its counts, both guards and the
+    * selection of the parts to encode.
+    *
+    * Every resume number is a filter of one persisted per-key ledger
+    * ([[resumeLedger]]): committed, planned, todo, the drift guard and the
+    * overwrite coverage guard. The first count builds it; on a sink the
+    * commit reports size as small it is one partition, so every later
+    * count is one job over its cache. Its manifest side is the CURRENT view
+    * (latest run per part_key): after an overwrite the drift guard compares
+    * against the winning run's doc counts, not a double-counting sum over
+    * history. A fresh sink has nothing to count, so it runs no job here.
+    */
+  private def account(spark: SparkSession, tokens: DataFrame, cfg: Config, salts: Int,
+      binTokens: Long, persisted: DataFrame => DataFrame): Accounting = {
+    val freshSink = ManifestSink.committedRunIds(cfg.outDir).isEmpty
+    // Per-doc partition assignments (slim metadata) are persisted so the
+    // ledger and the key join never re-derive the input; the heavy arrays
+    // are read exactly once per run, in the encode pass (the reference's
+    // plan-then-collect shape, freeze.rs:26-125). A first run on a fresh
+    // sink that writes every planned part needs no accounting up front:
+    // the plan feeds the encode join directly, and the run's totals give
+    // the planned count (every planned key holds at least one doc, so it
+    // equals the committed count).
+    val bounded = cfg.maxPartitionsPerRun != Int.MaxValue
+    val countPlan = !freshSink || cfg.dryRun || bounded
+    def cache(df: DataFrame): DataFrame = if (countPlan) persisted(df) else df
+    val plannedParts = cache(plan(tokens, cfg, salts, binTokens))
+    val ledger = cache(resumeLedger(spark, cfg.outDir, plannedParts, freshSink))
+    val committedKeysDf = ledger.filter(col("n_committed").isNotNull)
+    val nCommitted = if (freshSink) 0L else committedKeysDf.count()
+    val plannedKeys = ledger.filter(col("n_planned").isNotNull)
+    val nPlanned = if (countPlan) plannedKeys.count() else 0L // summary uses the totals
+    // resume: skip already-committed partitions (freeze.rs:96-109 analog);
+    // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
+    // the re-committed keys supersede via the reader's latest-run-per-key
+    // resolution, so no skip and no drift guard (re-encoding after an
+    // input/config change is the point)
+    if (cfg.overwrite && nCommitted > 0) {
+      // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
+      // so a committed key absent from the new plan would silently stay
+      // live — ghost rows from deleted docs, duplicates from docs that
+      // shifted into earlier bins. The advertised use case (re-encode
+      // after a codec/config change over the SAME snapshot, or a grown
+      // snapshot) always plans a superset of the committed keys; a
+      // shrunk/reshaped input must go to a fresh outDir. On a
+      // prefix-scoped sink (streaming batches), an overwrite with a
+      // partPrefix only claims THAT prefix's keys, so the guard scopes
+      // to them — other prefixes are different input slices, not ghost
+      // risks. An UNprefixed overwrite still guards every committed key
+      // (loud on a mixed sink: re-run with the matching partPrefix).
+      val uncovered = committedKeysDf.filter(col("n_planned").isNull &&
+        (lit(cfg.partPrefix.isEmpty) || col("part_key").startsWith(cfg.partPrefix + "/"))).count()
+      if (uncovered > 0)
+        throw new IllegalStateException(
+          s"overwrite coverage guard: $uncovered committed part_key(s) " +
+            (if (cfg.partPrefix.nonEmpty) s"under prefix '${cfg.partPrefix}' " else "") +
+            "are absent from the new plan. Overwrite supersedes key by key, " +
+            "so those keys' old rows would silently stay visible next to " +
+            "the re-encoded corpus. Either the input shrank/re-binned " +
+            "(re-encode into a fresh outDir) or this is a prefix-scoped " +
+            "sink (re-run with the matching partPrefix).")
+    }
+    val todoKeys =
+      if (cfg.overwrite) plannedKeys else plannedKeys.filter(col("n_committed").isNull)
+    // fresh sink (nothing committed): every planned key is todo, so the
+    // todo count equals the planned count — skip the extra job
+    val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
+
+    if (nTodo < nPlanned) {
+      // positional bin keys are only stable for an identical input
+      // snapshot: if the input grew, docs appended to a committed trailing
+      // bin would be silently skipped forever. Fail fast on doc-count
+      // drift for any key we are about to skip (a key on one side only
+      // compares null, so it never counts).
+      val drift = ledger.filter(col("n_planned") =!= col("n_committed")).count()
+      if (drift > 0)
+        throw new IllegalStateException(
+          s"resume guard: $drift committed part_key(s) have a different doc " +
+            "count in the current input. Positional bin keys require an " +
+            "identical input snapshot; re-encode into a fresh outDir or " +
+            "route incremental input through partPrefix (streaming path).")
     }
 
-    // every cache the run makes; the one finally below releases them on
-    // every exit, so long-lived sessions strand no blocks
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persisted(df: DataFrame, when: Boolean = true): DataFrame =
-      if (!when) df else {
-        cached += df
-        df.persist(StorageLevel.MEMORY_AND_DISK)
+    // Every planned part is todo on a fresh sink, an overwrite, or a
+    // resume that skips nothing: the plan itself is then the todo table,
+    // and the semi-join (an identity there) is left out. (An uncounted run
+    // has nTodo == nPlanned == 0.)
+    val todoParts =
+      if (nTodo == nPlanned && !bounded) plannedParts
+      else {
+        val selected =
+          if (bounded) todoKeys.orderBy("part_key").limit(cfg.maxPartitionsPerRun) else todoKeys
+        val todoSide =
+          if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= ManifestSink.BroadcastKeyLimit)
+            broadcast(selected)
+          else selected
+        plannedParts.join(todoSide, Seq("part_key"), "left_semi")
       }
-    // The data and manifest writes run concurrently (see the write path
-    // below). The first failure on either side cancels the other's jobs by
-    // this run's tag, which leaves the caller's job group alone.
+    Accounting(countPlan, nPlanned, nTodo, todoParts)
+  }
+
+  /** The encoded frame of the todo parts. The run persists it: both sides
+    * of the write step read it.
+    *
+    * Shuffle economics (100 TB view): the raw arrays cross exactly ONE
+    * exchange (the doc_id join against the slim key table); encoding runs
+    * map-side in the same stage, so the repartition-by-partition-key that
+    * controls file layout moves only the compressed blobs (~2.5-5× less).
+    * SHUFFLE_HASH on the slim side: a sort-merge join would SORT the heavy
+    * array side (observed 4× pipeline regression when the planner flipped
+    * to SMJ); hashing the per-partition metadata keeps the arrays sort-free
+    * through their single exchange.
+    *
+    * enc_task/enc_ns are evaluated in the same map-side projection as the
+    * encode itself (below the exchange), so per-task first-row→last-row
+    * spans measure REAL encode wall time (round 1 wrote a driver-side
+    * constant here). blob_len is computed there too: the manifest
+    * aggregate ([[manifestRows]]) then reads an 8-byte column from the
+    * columnar cache instead of deserializing every blob's bytes a second
+    * time just to take length() (phase-profiled at ~30% of the warm
+    * pipeline wall before this). The column is cache-only — the data-write
+    * select never includes it, so the sink schema is unchanged.
+    */
+  private def encode(tokens: DataFrame, todoParts: DataFrame, runId: String): DataFrame =
+    tokens
+      .join(todoParts.select("doc_id", "salt", "bin", "part_key").hint("SHUFFLE_HASH"),
+        Seq("doc_id"))
+      .withColumn("blob", expr("encode_auto(tokens)"))
+      .withColumn("blob_len", length(col("blob")).cast("long"))
+      .withColumn("codec", expr("codec_of(blob)"))
+      .withColumn("enc_task", spark_partition_id())
+      .withColumn("enc_ns", expr("now_nanos()"))
+      .withColumn("run_id", lit(runId))
+      .drop("tokens")
+      .repartition(col("part_key"))
+
+  /** Writes the encoded frame's data and manifest concurrently and returns
+    * the run's totals, (parts, docs, tokens, raw bytes, encoded bytes).
+    *
+    * The manifest side (derivation, manifest write, totals) runs on its own
+    * driver thread while this one writes the data: both read the encoded
+    * cache, which Spark builds once for whichever asks first. The first
+    * failure on either side cancels the other's jobs by this write's tag,
+    * which leaves the caller's job group alone; the step waits for the
+    * manifest thread on every exit, then rethrows that first failure.
+    */
+  private def write(spark: SparkSession, encoded: DataFrame, cfg: Config,
+      runId: String): Row = {
     val sc = spark.sparkContext
     val writeTag = s"graft-encode-${java.util.UUID.randomUUID}"
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val failure = new java.util.concurrent.atomic.AtomicReference[Option[Throwable]](None)
     def fail(e: Throwable): Unit =
-      if (failure.compareAndSet(null, e))
+      if (failure.compareAndSet(None, Some(e)))
         sc.cancelJobsWithTag(writeTag, s"encode run $runId failed")
-    var manifestSide: Thread = null
+    val totals = new java.util.concurrent.CompletableFuture[Row]
+    sc.addJobTag(writeTag) // inherited by the manifest thread
+    val manifestSide = new Thread(() =>
+      try {
+        // per-partition lineage + metrics rows (reports.rs / summaries.rs
+        // analog)
+        manifestRows(encoded)
+          .write.mode("append").partitionBy("run_id")
+          .options(LocalFs.WriteOptions)
+          .parquet(ManifestSink.manifestDir(cfg.outDir))
+        // the totals read back the few small files just written (run ids
+        // are unique per attempt, so they hold this attempt's rows only):
+        // no cached copy of the manifest, one single-task job. None: the
+        // run had no rows (only an uncounted run gets here with an empty
+        // input).
+        totals.complete(ManifestSink.runManifest(spark, cfg.outDir, runId)
+          .fold(Row(0L, 0L, 0L, 0L, 0L))(_.coalesce(1)
+            .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
+              coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
+              coalesce(sum("encoded_bytes"), lit(0L))).collect()(0)))
+      } catch { case e: Throwable => fail(e) },
+      s"graft-manifest-$runId")
+    manifestSide.setDaemon(true)
     // a failed run keeps cancelling while it waits: a cancel that lands
     // between two of the manifest side's jobs misses the next one
     def awaitManifestSide(): Unit =
-      while (manifestSide != null && manifestSide.isAlive) {
-        if (failure.get != null) sc.cancelJobsWithTag(writeTag)
+      while (manifestSide.isAlive) {
+        if (failure.get.nonEmpty) sc.cancelJobsWithTag(writeTag)
         manifestSide.join(100)
       }
     try {
-      // Every resume number is a filter of one persisted per-key ledger
-      // ([[resumeLedger]]): committed, planned, todo, the drift guard and
-      // the overwrite coverage guard. The first count builds it; on a sink
-      // the commit reports size as small it is one partition, so every
-      // later count is one job over its cache. Its manifest side is the
-      // CURRENT view (latest run per part_key): after an overwrite the
-      // drift guard compares against the winning run's doc counts, not a
-      // double-counting sum over history. A fresh sink has nothing to
-      // count, so it runs no job here.
-      val freshSink = ManifestSink.committedRunIds(cfg.outDir).isEmpty
-      // Per-doc partition assignments (slim metadata) are persisted so the
-      // ledger and the key join never re-derive the input; the heavy arrays
-      // are read exactly once per run, in the encode pass (the reference's
-      // plan-then-collect shape, freeze.rs:26-125). A first run on a fresh
-      // sink that writes every planned part needs no accounting up front:
-      // the plan feeds the encode join directly, and the run's totals give
-      // the planned count (every planned key holds at least one doc, so it
-      // equals the committed count).
-      val countPlan = !freshSink || cfg.dryRun || cfg.maxPartitionsPerRun != Int.MaxValue
-      val plannedParts = persisted(plan(tokens, cfg, salts, binTokens), countPlan)
-      val ledger = persisted(resumeLedger(spark, cfg.outDir, plannedParts, freshSink), countPlan)
-      val committedKeysDf = ledger.filter(col("n_committed").isNotNull)
-      val nCommitted = if (freshSink) 0L else committedKeysDf.count()
-      val plannedKeys = ledger.filter(col("n_planned").isNotNull)
-      val nPlanned = if (countPlan) plannedKeys.count() else 0L // summary uses the totals
-      // resume: skip already-committed partitions (freeze.rs:96-109 analog);
-      // overwrite (freeze.rs:96-99 --overwrite) recomputes them all instead —
-      // the re-committed keys supersede via the reader's latest-run-per-key
-      // resolution, so no skip and no drift guard (re-encoding after an
-      // input/config change is the point)
-      if (cfg.overwrite && nCommitted > 0) {
-        // coverage guard (review-caught): overwrite supersedes KEY BY KEY,
-        // so a committed key absent from the new plan would silently stay
-        // live — ghost rows from deleted docs, duplicates from docs that
-        // shifted into earlier bins. The advertised use case (re-encode
-        // after a codec/config change over the SAME snapshot, or a grown
-        // snapshot) always plans a superset of the committed keys; a
-        // shrunk/reshaped input must go to a fresh outDir. On a
-        // prefix-scoped sink (streaming batches), an overwrite with a
-        // partPrefix only claims THAT prefix's keys, so the guard scopes
-        // to them — other prefixes are different input slices, not ghost
-        // risks. An UNprefixed overwrite still guards every committed key
-        // (loud on a mixed sink: re-run with the matching partPrefix).
-        val uncovered = committedKeysDf.filter(col("n_planned").isNull &&
-          (lit(cfg.partPrefix.isEmpty) || col("part_key").startsWith(cfg.partPrefix + "/"))).count()
-        if (uncovered > 0)
-          throw new IllegalStateException(
-            s"overwrite coverage guard: $uncovered committed part_key(s) " +
-              (if (cfg.partPrefix.nonEmpty) s"under prefix '${cfg.partPrefix}' " else "") +
-              "are absent from the new plan. Overwrite supersedes key by key, " +
-              "so those keys' old rows would silently stay visible next to " +
-              "the re-encoded corpus. Either the input shrank/re-binned " +
-              "(re-encode into a fresh outDir) or this is a prefix-scoped " +
-              "sink (re-run with the matching partPrefix).")
-      }
-      var todoKeys =
-        if (cfg.overwrite) plannedKeys else plannedKeys.filter(col("n_committed").isNull)
-      // fresh sink (nothing committed): every planned key is todo, so the
-      // todo count equals the planned count — skip the extra job
-      val nTodo = if (cfg.overwrite || nCommitted == 0) nPlanned else todoKeys.count()
-      val nSkipped = nPlanned - nTodo // previously committed (≠ deferred below)
-
-      if (nSkipped > 0) {
-        // positional bin keys are only stable for an identical input
-        // snapshot: if the input grew, docs appended to a committed trailing
-        // bin would be silently skipped forever. Fail fast on doc-count
-        // drift for any key we are about to skip (a key on one side only
-        // compares null, so it never counts).
-        val drift = ledger.filter(col("n_planned") =!= col("n_committed")).count()
-        if (drift > 0)
-          throw new IllegalStateException(
-            s"resume guard: $drift committed part_key(s) have a different doc " +
-              "count in the current input. Positional bin keys require an " +
-              "identical input snapshot; re-encode into a fresh outDir or " +
-              "route incremental input through partPrefix (streaming path).")
-      }
-
-      if (cfg.maxPartitionsPerRun != Int.MaxValue) {
-        todoKeys = todoKeys.orderBy("part_key").limit(cfg.maxPartitionsPerRun)
-      }
-
-      def summary(nParts: Long, nDocs: Long, nTokens: Long, rawBytes: Long,
-          encodedBytes: Long): RunSummary =
-        RunSummary(runId, if (countPlan) nPlanned else nParts, nSkipped, nParts,
-          nDocs, nTokens, rawBytes, encodedBytes, (System.nanoTime() - t0) / 1000000,
-          ManifestSink.readErrorReports(cfg.outDir).size.toLong, nDeferred)
-
-      if (cfg.dryRun) {
-        // --dry (freeze.rs:43-46): return the full plan accounting — the
-        // same planned/skipped/deferred and todo doc/token totals the real
-        // run would report — computed from the slim plan metadata only. The
-        // heavy arrays are never read, encode never runs, the sink is never
-        // touched (schema preview is the static [[OutputSchema]]).
-        val todoStats = plannedParts
-          .join(todoKeys, Seq("part_key"), "left_semi")
-          .agg(count(lit(1)), coalesce(sum(col("n_tok").cast("long")), lit(0L)))
-          .collect()(0)
-        return summary(0L, todoStats.getLong(0), todoStats.getLong(1),
-          todoStats.getLong(1) * 4, 0L)
-      }
-
-      // the commit tail of both exits below (geometry pin, atomic publish)
-      def commit(summary: RunSummary): RunSummary = {
-        ManifestSink.commit(cfg.outDir, runId, salts, binTokens,
-          summaryJson(summary, cfg, salts, binTokens))
-        summary
-      }
-
-      // nothing left to do (every planned part committed, the drift guard
-      // passed): commit the empty run without encoding, writing or
-      // aggregating anything — the manifest alone decided it
-      if (countPlan && nTodo == 0) return commit(summary(0L, 0L, 0L, 0L, 0L))
-
-      // Shuffle economics (100 TB view): the raw arrays cross exactly ONE
-      // exchange (the doc_id join against the slim key table); encoding runs
-      // map-side in the same stage, so the repartition-by-partition-key that
-      // controls file layout moves only the compressed blobs (~2.5-5× less).
-      // Every planned part is todo on a fresh sink, an overwrite, or a
-      // resume that skips nothing: the plan itself is then the key table,
-      // and the semi-join (an identity there) is left out. (An uncounted
-      // run has nTodo == nPlanned == 0.)
-      val todoParts =
-        if (nTodo == nPlanned && cfg.maxPartitionsPerRun == Int.MaxValue) plannedParts
-        else {
-          val todoSide =
-            if (math.min(nTodo, cfg.maxPartitionsPerRun.toLong) <= ManifestSink.BroadcastKeyLimit)
-              broadcast(todoKeys)
-            else todoKeys
-          plannedParts.join(todoSide, Seq("part_key"), "left_semi")
-        }
-      val docTodo = todoParts.select("doc_id", "salt", "bin", "part_key")
-      // SHUFFLE_HASH on the slim side: a sort-merge join would SORT the heavy
-      // array side (observed 4× pipeline regression when the planner flipped
-      // to SMJ); hashing the per-partition metadata keeps the arrays
-      // sort-free through their single exchange.
-      // enc_task/enc_ns are evaluated in the same map-side projection as the
-      // encode itself (below the exchange), so per-task first-row→last-row
-      // spans measure REAL encode wall time (round 1 wrote a driver-side
-      // constant here).
-      // blob_len is computed in the same map-side projection as the encode:
-      // the manifest aggregate ([[manifestRows]]) then reads an 8-byte column from
-      // the columnar cache instead of deserializing every blob's bytes a
-      // second time just to take length() (phase-profiled at ~30% of the
-      // warm pipeline wall before this). The column is cache-only — the
-      // data-write select never includes it, so the sink schema is
-      // unchanged.
-      val encoded = persisted(tokens
-        .join(docTodo.hint("SHUFFLE_HASH"), Seq("doc_id"))
-        .withColumn("blob", expr("encode_auto(tokens)"))
-        .withColumn("blob_len", length(col("blob")).cast("long"))
-        .withColumn("codec", expr("codec_of(blob)"))
-        .withColumn("enc_task", spark_partition_id())
-        .withColumn("enc_ns", expr("now_nanos()"))
-        .withColumn("run_id", lit(runId))
-        .drop("tokens")
-        .repartition(col("part_key")))
-
-      // The manifest side (derivation, manifest write, totals) runs on its
-      // own driver thread while this one writes the data: both read the
-      // encoded cache, which Spark builds once for whichever asks first.
-      // The run waits for both before its commit tail and cache release.
-      var totals: Row = null
-      sc.addJobTag(writeTag) // inherited by the manifest thread
-      manifestSide = new Thread(() =>
-        try {
-          // per-partition lineage + metrics rows (reports.rs / summaries.rs
-          // analog)
-          manifestRows(encoded)
-            .write.mode("append").partitionBy("run_id")
-            .options(LocalFs.WriteOptions)
-            .parquet(ManifestSink.manifestDir(cfg.outDir))
-          // the totals read back the few small files just written (run ids
-          // are unique per attempt, so they hold this attempt's rows only):
-          // no cached copy of the manifest, one single-task job. None: the
-          // run had no rows (only an uncounted run gets here with an empty
-          // input).
-          totals = ManifestSink.runManifest(spark, cfg.outDir, runId)
-            .fold(Row(0L, 0L, 0L, 0L, 0L))(_.coalesce(1)
-              .agg(count(lit(1)), coalesce(sum("n_docs"), lit(0L)),
-                coalesce(sum("n_tokens"), lit(0L)), coalesce(sum("raw_bytes"), lit(0L)),
-                coalesce(sum("encoded_bytes"), lit(0L))).collect()(0))
-        } catch { case e: Throwable => fail(e) },
-        s"graft-manifest-$runId")
-      manifestSide.setDaemon(true)
       manifestSide.start()
-
       try {
         encoded
           .withColumn("part_stub", partStub(cfg))
@@ -644,16 +660,32 @@ object EncodePipeline {
           .parquet(ManifestSink.dataDir(cfg.outDir))
       } catch { case e: Throwable => fail(e) }
       awaitManifestSide()
-      Option(failure.get).foreach(e => throw e)
-      commit(summary(totals.getLong(0), totals.getLong(1), totals.getLong(2),
-        totals.getLong(3), totals.getLong(4)))
     } finally {
       // (only an interrupted wait gets here with the manifest side alive;
-      // the caches it reads must outlive it)
+      // the cache it reads must outlive it)
       awaitManifestSide()
       sc.removeJobTag(writeTag)
-      cached.foreach(_.unpersist())
     }
+    failure.get.foreach(e => throw e)
+    totals.join()
+  }
+
+  /** The commit tail of every non-dry run: the geometry pin and the atomic
+    * publish of the commit report. The report holds the run accounting,
+    * the engine version and the validated config that produced it
+    * (reports.rs:9-23's cryo_version/cli_command/args parity) — a reader of
+    * `commits/<id>.json` can replay the run.
+    */
+  private def commit(cfg: Config, runId: String, salts: Int, binTokens: Long,
+      s: RunSummary): RunSummary = {
+    ManifestSink.commit(cfg.outDir, runId, salts, binTokens,
+      s"""{"run_id":"${s.runId}","planned":${s.planned},"skipped":${s.skipped},
+         |"committed":${s.committed},"n_docs":${s.nDocs},"n_tokens":${s.nTokens},
+         |"raw_bytes":${s.rawBytes},"encoded_bytes":${s.encodedBytes},
+         |"wall_ms":${s.wallMs},"prior_failed_attempts":${s.priorFailedAttempts},
+         |"deferred":${s.deferred},"engine_version":"$Version",
+         |"config":${cfg.reportJson(salts, binTokens)}}""".stripMargin.replace("\n", ""))
+    s
   }
 
   /** Run to completion (multiple bounded runs if maxPartitionsPerRun set). */
@@ -692,17 +724,4 @@ object EncodePipeline {
       .filter(not(col("tokens") <=> col("decoded")))
       .count()
   }
-
-  /** Commit-report JSON: run accounting + engine version + the validated
-    * config that produced it (reports.rs:9-23's cryo_version/cli_command/
-    * args parity) — a reader of `commits/<id>.json` can replay the run.
-    */
-  private def summaryJson(s: RunSummary, cfg: Config, resolvedSalts: Int,
-      resolvedBin: Long): String =
-    s"""{"run_id":"${s.runId}","planned":${s.planned},"skipped":${s.skipped},
-       |"committed":${s.committed},"n_docs":${s.nDocs},"n_tokens":${s.nTokens},
-       |"raw_bytes":${s.rawBytes},"encoded_bytes":${s.encodedBytes},
-       |"wall_ms":${s.wallMs},"prior_failed_attempts":${s.priorFailedAttempts},
-       |"deferred":${s.deferred},"engine_version":"$Version",
-       |"config":${cfg.reportJson(resolvedSalts, resolvedBin)}}""".stripMargin.replace("\n", "")
 }

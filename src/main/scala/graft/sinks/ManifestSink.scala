@@ -302,9 +302,11 @@ object ManifestSink {
     * sum of the `"committed"` counts bounds it (superseded keys only loosen
     * it). A report without the field makes the bound Long.MaxValue.
     */
-  def committedKeyBound(root: String): Long = {
-    val counts = readCommitSummaries(root)
-      .map(js => CommittedField.findFirstMatchIn(js).map(_.group(1).toLong))
+  def committedKeyBound(root: String): Long = keyBound(readCommitSummaries(root))
+
+  /** [[committedKeyBound]] over commit reports already read. */
+  private def keyBound(reports: Seq[String]): Long = {
+    val counts = reports.map(js => CommittedField.findFirstMatchIn(js).map(_.group(1).toLong))
     if (counts.forall(_.isDefined)) counts.flatten.sum else Long.MaxValue
   }
 
@@ -313,12 +315,14 @@ object ManifestSink {
   /** Count-free size estimate of a resume's per-key ledger: the
     * [[committedKeyBound]] plus the newest commit report's `"planned"`
     * count (this run's key count when its input is that run's).
-    * Long.MaxValue when a report lacks either field.
+    * Long.MaxValue when a report lacks either field. Reads the commit
+    * reports once.
     */
   def resumeKeyEstimate(root: String): Long = {
-    val planned = readCommitSummaries(root).lastOption
+    val reports = readCommitSummaries(root)
+    val planned = reports.lastOption
       .flatMap(PlannedField.findFirstMatchIn(_)).fold(Long.MaxValue)(_.group(1).toLong)
-    (BigInt(planned) + committedKeyBound(root)).min(Long.MaxValue).toLong
+    (BigInt(planned) + keyBound(reports)).min(Long.MaxValue).toLong
   }
 
   def readCommitSummaries(root: String): Seq[String] =

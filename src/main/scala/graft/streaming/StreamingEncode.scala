@@ -27,9 +27,10 @@ object StreamingEncode {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** Micro-batch encode: stream of token rows → EncodePipeline per batch.
-    * The manifest sink's anti-join-on-committed-partitions makes replayed
-    * batches idempotent (exactly-once per partition), the streaming analog
-    * of the reference's skip-existing resume (freeze.rs:96-109).
+    * A batch replayed after its run committed is a no-op resume: the run's
+    * resume ledger finds every one of its part_keys committed (exactly-once
+    * per partition), the streaming analog of the reference's skip-existing
+    * resume (freeze.rs:96-109).
     */
   def encodeStream(spark: SparkSession, inputDir: String,
       cfg: EncodePipeline.Config): DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -42,7 +43,7 @@ object StreamingEncode {
         // micro-batches run on a cloned session: register + run on it.
         // part_keys are scoped by batchId: the stream checkpoint pins
         // (batchId -> file set), so a replayed batch re-derives identical
-        // keys (idempotent via the manifest anti-join) while distinct
+        // keys (a no-op resume: the ledger finds them committed) while distinct
         // batches can never collide on positional bin keys.
         if (!batch.isEmpty) {
           EncodePipeline.run(batch.sparkSession, batch,
