@@ -1,6 +1,7 @@
 package graft
 
 import graft.codec._
+import graft.functions.GenTokens
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-file suite (FIXTURES.md §2 / SURVEY.md §5 plan #3): committed
@@ -63,6 +64,48 @@ class GoldenSpec extends AnyFunSuite {
     val current = currentRows
     assert(current.size == golden.size)
     current.zip(golden).foreach { case (c, g) => assert(c == g) }
+  }
+
+  /** Token arrays around FSST's 1 KiB training sample: every row profile
+    * at lengths on both sides of the selector's n >= 256 probe threshold
+    * and as giants, streams that end just short of, exactly at and just
+    * past 1 KiB, negative values and Int.MinValue (the 11-byte token), and
+    * streams far shorter than the sample.
+    */
+  private def sampleEdges: Seq[Array[Int]] = {
+    val shaped = for (p <- 0 until 6; n <- Seq(1, 93, 94, 255, 256, 257, 8192, 9000))
+      yield GenTokens.generate(600L + p, n)
+    val edges = Seq(
+      Array.tabulate(300)(i => 1000000 + (i * 7919) % 9000000), // 8 B/token: 1 KiB at #128
+      Array.tabulate(300)(i => -((i.toLong * 2654435761L) % Int.MaxValue).toInt),
+      Array.tabulate(257)(i => if (i % 50 == 7) Int.MinValue else -1000000000 - i * 7919),
+      Array.tabulate(256)(i => if (i % 2 == 0) Int.MinValue else Int.MaxValue - i),
+      Array.tabulate(94)(i => Int.MinValue + i * 3),            // 12 B/token
+      Array.fill(100)(Int.MinValue),
+      Array.empty[Int],
+      Array(0),
+      Array.tabulate(40)(i => i * 37 - 500),
+      Array.tabulate(256)(i => -(i % 7)))
+    shaped ++ edges
+  }
+
+  private def sha256(blobs: Seq[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    blobs.foreach(b => md.update(b))
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  // Computed at commit 0fe1c47, before the FSST kernel was rebuilt. The
+  // CSV above pins lengths; these pin the bytes, so a symbol-table order
+  // change that keeps every length still fails here.
+  private val AutoDigest = "a1eecb96a5e02cd090fb08519465408012a13b703e9fb6c41371773e0676249e"
+  private val FsstDigest = "e53cb66509fcc4478d195287c85866ef45897bd4e4367c4dc2c39cd645c68d1b"
+
+  test("encoded bytes of the fixture and the FSST sample edges match the pinned digests") {
+    val arrays = (0 until 60).map(fixture) ++ sampleEdges
+    arrays.foreach(xs => assert(Codecs.decode(FsstCodec.encode(xs)).sameElements(xs)))
+    assert(sha256(arrays.map(CodecSelector.encodeAuto)) == AutoDigest)
+    assert(sha256(arrays.map(FsstCodec.encode)) == FsstDigest)
   }
 
   test("golden fixture exercises every codec") {
