@@ -169,20 +169,21 @@ object DictCodec extends Codec {
     w.writeVarLong(xs.length.toLong)
     if (xs.isEmpty) return
     val index = new IntIntMap(64)
-    val dict = new scala.collection.mutable.ArrayBuffer[Int](64)
+    val dict = new Array[Int](xs.length) // first occurrences, unboxed
+    var nDict = 0
     val ids = new Array[Int](xs.length)
     var i = 0
     while (i < xs.length) {
       val v = xs(i)
       var id = index.getOrElse(v, -1)
-      if (id < 0) { id = dict.length; index.put(v, id); dict += v }
+      if (id < 0) { id = nDict; index.put(v, id); dict(nDict) = v; nDict += 1 }
       ids(i) = id
       i += 1
     }
-    w.writeVarLong(dict.length.toLong)
+    w.writeVarLong(nDict.toLong)
     var d = 0
-    while (d < dict.length) { w.writeZigZag(dict(d).toLong); d += 1 }
-    val width = Bytes.bitsFor((dict.length - 1).toLong)
+    while (d < nDict) { w.writeZigZag(dict(d).toLong); d += 1 }
+    val width = Bytes.bitsFor((nDict - 1).toLong)
     w.writeByte(width)
     val bw = new BitWriter(w)
     i = 0

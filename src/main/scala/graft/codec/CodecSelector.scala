@@ -37,7 +37,7 @@ object ColumnStats {
     var maxD = Long.MinValue
     var rleBytes = 0L
     var dictBytes = Bytes.zigZagLen(xs(0).toLong)
-    val seen = new IntHashSet(math.min(xs.length, 256))
+    val seen = new IntHashSet(math.min(xs.length, DistinctCap))
     seen.add(xs(0))
     var capped = false
     var runStart = 0
@@ -74,53 +74,78 @@ object ColumnStats {
   * plain/RLE/FOR-bitpack/delta/dict from [[ColumnStats]], plus a bounded
   * FSST probe when the cheap codecs leave headroom. Pure function of the
   * array → choice is deterministic across parallelism levels (SURVEY.md §7
-  * "Hard parts" #4).
+  * "Hard parts" #4). When FSST wins, the blob is written with the table
+  * its probe trained.
   */
 object CodecSelector extends Serializable {
 
-  /** Estimated total blob size (incl. 1-byte tag) per codec. */
-  def estimates(xs: Array[Int], st: ColumnStats): Seq[(Codec, Long)] = {
+  /** The integer codecs in selection order: on equal sizes the earlier
+    * one wins, and FSST (probed last) must be strictly smaller.
+    */
+  private val IntegerCodecs: Array[Codec] =
+    Array(PlainCodec, RleCodec, BitPackCodec, ForDeltaCodec, DictCodec)
+
+  /** Exact blob size (incl. the 1-byte tag) of an integer codec, or -1
+    * when it is not a candidate for this array.
+    */
+  private def exactSize(c: Codec, xs: Array[Int], st: ColumnStats): Long = {
     val n = st.n
     val nLen = Bytes.varLen(n.toLong).toLong
-    val plain = 1L + nLen + 4L * n
-    if (n == 0) return Seq(PlainCodec -> plain)
-    val rle = 1L + nLen + st.rleBytes
-    val packWidth = Bytes.bitsFor(st.max - st.min)
-    val pack = 1L + nLen + Bytes.zigZagLen(st.min) + 1L + (n.toLong * packWidth + 7) / 8
-    val deltaWidth = Bytes.bitsFor(st.maxDelta - st.minDelta)
-    val delta = 1L + nLen + Bytes.zigZagLen(xs(0).toLong) +
-      (if (n == 1) 0L
-       else Bytes.zigZagLen(st.minDelta) + 1L + ((n - 1).toLong * deltaWidth + 7) / 8)
-    val base = Seq[(Codec, Long)](
-      PlainCodec -> plain, RleCodec -> rle, BitPackCodec -> pack, ForDeltaCodec -> delta)
-    val withDict =
-      if (st.distinctCapped || st.nDistinct >= n) base
-      else {
-        val idxWidth = Bytes.bitsFor((st.nDistinct - 1).toLong)
-        val dict = 1L + nLen + Bytes.varLen(st.nDistinct.toLong) +
-          st.dictValueBytes + 1L + (n.toLong * idxWidth + 7) / 8
-        base :+ (DictCodec -> dict)
-      }
-    // FSST only pays off when the best integer codec still needs ≳2.5 B/token
-    // (decimal strings must compress below that) and the array is long
-    // enough to amortize a serialized symbol table; probe a bounded sample.
-    val bestSoFar = withDict.map(_._2).min
-    if (n >= 256 && bestSoFar > n.toLong * 5 / 2)
-      withDict :+ (FsstCodec -> FsstCodec.probeSize(xs))
-    else withDict
+    if (c eq PlainCodec) 1L + nLen + 4L * n
+    else if (n == 0) -1L
+    else if (c eq RleCodec) 1L + nLen + st.rleBytes
+    else if (c eq BitPackCodec)
+      1L + nLen + Bytes.zigZagLen(st.min) + 1L + (n.toLong * Bytes.bitsFor(st.max - st.min) + 7) / 8
+    else if (c eq ForDeltaCodec)
+      1L + nLen + Bytes.zigZagLen(xs(0).toLong) +
+        (if (n == 1) 0L
+         else Bytes.zigZagLen(st.minDelta) + 1L +
+           ((n - 1).toLong * Bytes.bitsFor(st.maxDelta - st.minDelta) + 7) / 8)
+    else if (st.distinctCapped || st.nDistinct >= n) -1L
+    else
+      1L + nLen + Bytes.varLen(st.nDistinct.toLong) + st.dictValueBytes + 1L +
+        (n.toLong * Bytes.bitsFor((st.nDistinct - 1).toLong) + 7) / 8
+  }
+
+  // FSST only pays off when the best integer codec still needs ≳2.5 B/token
+  // (decimal strings must compress below that) and the array is long
+  // enough to amortize a serialized symbol table; probe a bounded sample.
+  private def probesFsst(n: Int, bestInteger: Long): Boolean =
+    n >= 256 && bestInteger > n.toLong * 5 / 2
+
+  /** Estimated total blob size (incl. 1-byte tag) per candidate codec. */
+  def estimates(xs: Array[Int], st: ColumnStats): Seq[(Codec, Long)] = {
+    val ints = IntegerCodecs.toSeq.map(c => c -> exactSize(c, xs, st)).filter(_._2 >= 0)
+    if (probesFsst(st.n, ints.map(_._2).min)) ints :+ (FsstCodec -> FsstCodec.probe(xs).size)
+    else ints
+  }
+
+  /** The cheapest codec, and its FSST probe when FSST won (else null). */
+  private final class Choice(val codec: Codec, val fsst: FsstCodec.Probe)
+
+  private def select(xs: Array[Int], st: ColumnStats): Choice = {
+    var best: Codec = PlainCodec
+    var bestSize = Long.MaxValue
+    var i = 0
+    while (i < IntegerCodecs.length) {
+      val size = exactSize(IntegerCodecs(i), xs, st)
+      if (size >= 0 && size < bestSize) { best = IntegerCodecs(i); bestSize = size }
+      i += 1
+    }
+    if (probesFsst(st.n, bestSize)) {
+      val p = FsstCodec.probe(xs)
+      if (p.size < bestSize) return new Choice(FsstCodec, p)
+    }
+    new Choice(best, null)
   }
 
   def choose(xs: Array[Int]): Codec = choose(xs, ColumnStats.of(xs))
 
-  def choose(xs: Array[Int], st: ColumnStats): Codec = {
-    var best: Codec = PlainCodec
-    var bestSize = Long.MaxValue
-    estimates(xs, st).foreach { case (c, sz) =>
-      if (sz < bestSize) { best = c; bestSize = sz }
-    }
-    best
-  }
+  def choose(xs: Array[Int], st: ColumnStats): Codec = select(xs, st).codec
 
   /** Auto-encode: choose + encode. The blob's tag records the choice. */
-  def encodeAuto(xs: Array[Int]): Array[Byte] = choose(xs).encode(xs)
+  def encodeAuto(xs: Array[Int]): Array[Byte] = {
+    val c = select(xs, ColumnStats.of(xs))
+    if (c.fsst != null) FsstCodec.encodeWith(xs, c.fsst) else c.codec.encode(xs)
+  }
 }

@@ -92,13 +92,14 @@ final class IntIntMap(initialCapacity: Int) {
   }
 }
 
-/** Primitive long→int map (FSST symbol table lookups). */
+/** Primitive long→int map (FSST symbol table lookups). Keys must be
+  * non-zero: 0 marks an empty slot (a packed symbol's length byte is ≥ 1).
+  */
 final class LongIntMap(initialCapacity: Int) {
   private var cap = Integer.highestOneBit(math.max(16, initialCapacity * 2) - 1) << 1
   private var mask = cap - 1
   private var keys = new Array[Long](cap)
   private var vals = new Array[Int](cap)
-  private var used = new Array[Boolean](cap)
   private var n = 0
 
   def size: Int = n
@@ -108,7 +109,7 @@ final class LongIntMap(initialCapacity: Int) {
 
   def getOrElse(k: Long, default: Int): Int = {
     var i = slot(k)
-    while (used(i)) {
+    while (keys(i) != 0L) {
       if (keys(i) == k) return vals(i)
       i = (i + 1) & mask
     }
@@ -119,68 +120,75 @@ final class LongIntMap(initialCapacity: Int) {
 
   def put(k: Long, v: Int): Unit = {
     var i = slot(k)
-    while (used(i)) {
+    while (keys(i) != 0L) {
       if (keys(i) == k) { vals(i) = v; return }
       i = (i + 1) & mask
     }
-    keys(i) = k; vals(i) = v; used(i) = true
+    keys(i) = k; vals(i) = v
     n += 1
     if (n * 4 > cap * 3) grow()
   }
 
   private def grow(): Unit = {
-    val ok = keys; val ov = vals; val ou = used
+    val ok = keys; val ov = vals
     cap <<= 1; mask = cap - 1
     keys = new Array[Long](cap)
     vals = new Array[Int](cap)
-    used = new Array[Boolean](cap)
     n = 0
     var i = 0
     while (i < ok.length) {
-      if (ou(i)) put(ok(i), ov(i))
+      if (ok(i) != 0L) put(ok(i), ov(i))
       i += 1
     }
   }
 }
 
-/** Primitive long→long map with additive merge (FSST gain counting).
-  * Exposes the backing arrays for allocation-free iteration.
+/** Primitive long→long map with additive merge (FSST gain counting). Keys
+  * must be non-zero (0 marks an empty slot). Entries are read back in
+  * insertion order through `keyAt`/`valueAt`, and `clear` touches only the
+  * occupied slots, so one map serves every training round.
   */
 final class LongLongMap(initialCapacity: Int) {
   private var cap = Integer.highestOneBit(math.max(16, initialCapacity * 2) - 1) << 1
   private var mask = cap - 1
-  var keys = new Array[Long](cap)
-  var vals = new Array[Long](cap)
-  var used = new Array[Boolean](cap)
+  private var keys = new Array[Long](cap)
+  private var vals = new Array[Long](cap)
+  private var slots = new Array[Int](cap) // occupied slots, insertion order
   private var n = 0
 
   def size: Int = n
+  def keyAt(i: Int): Long = keys(slots(i))
+  def valueAt(i: Int): Long = vals(slots(i))
 
   @inline private def slot(k: Long): Int =
     ((k * -7046029254386353131L) >>> 40).toInt & mask
 
+  /** Empties the map, keeping its capacity. */
+  def clear(): Unit = {
+    var i = 0
+    while (i < n) { keys(slots(i)) = 0L; i += 1 }
+    n = 0
+  }
+
   def addTo(k: Long, v: Long): Unit = {
     var i = slot(k)
-    while (used(i)) {
+    while (keys(i) != 0L) {
       if (keys(i) == k) { vals(i) += v; return }
       i = (i + 1) & mask
     }
-    keys(i) = k; vals(i) = v; used(i) = true
+    keys(i) = k; vals(i) = v; slots(n) = i
     n += 1
     if (n * 4 > cap * 3) grow()
   }
 
   private def grow(): Unit = {
-    val ok = keys; val ov = vals; val ou = used
+    val ok = keys; val ov = vals; val os = slots; val on = n
     cap <<= 1; mask = cap - 1
     keys = new Array[Long](cap)
     vals = new Array[Long](cap)
-    used = new Array[Boolean](cap)
+    slots = new Array[Int](cap)
     n = 0
     var i = 0
-    while (i < ok.length) {
-      if (ou(i)) addTo(ok(i), ov(i))
-      i += 1
-    }
+    while (i < on) { addTo(ok(os(i)), ov(os(i))); i += 1 }
   }
 }

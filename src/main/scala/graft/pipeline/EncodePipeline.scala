@@ -380,7 +380,7 @@ object EncodePipeline {
         // run would report — computed from the slim plan metadata only. The
         // heavy arrays are never read, encode never runs, the sink is never
         // touched (schema preview is the static [[OutputSchema]]).
-        val todo = todoParts
+        val todo = todoParts()
           .agg(count(lit(1)), coalesce(sum(col("n_tok").cast("long")), lit(0L))).collect()(0)
         summary(Row(0L, todo.getLong(0), todo.getLong(1), todo.getLong(1) * 4, 0L))
       } else {
@@ -389,7 +389,7 @@ object EncodePipeline {
         // aggregating anything — the manifest alone decided it
         val totals =
           if (countPlan && nTodo == 0) Row(0L, 0L, 0L, 0L, 0L)
-          else write(spark, persisted(encode(tokens, todoParts, runId)), cfg, runId)
+          else write(spark, persisted(encode(tokens, todoParts(), runId)), cfg, runId)
         commit(cfg, runId, salts, binTokens, summary(totals))
       }
     } catch {
@@ -451,10 +451,12 @@ object EncodePipeline {
 
   /** What a run's accounting decided. `countPlan` false: the plan was not
     * counted (`nPlanned` = `nTodo` = 0) and the run's totals give its
-    * planned count. `todoParts` is the slim plan of the parts to encode.
+    * planned count. `todoParts` builds the slim plan of the parts to encode;
+    * only the dry run and the encode call it, so a no-op resume never
+    * analyzes that frame.
     */
   private final case class Accounting(countPlan: Boolean, nPlanned: Long, nTodo: Long,
-      todoParts: DataFrame)
+      todoParts: () => DataFrame)
 
   /** The resume accounting: the ledger, its counts, both guards and the
     * selection of the parts to encode.
@@ -543,7 +545,7 @@ object EncodePipeline {
     // resume that skips nothing: the plan itself is then the todo table,
     // and the semi-join (an identity there) is left out. (An uncounted run
     // has nTodo == nPlanned == 0.)
-    val todoParts =
+    val todoParts = () =>
       if (nTodo == nPlanned && !bounded) plannedParts
       else {
         val selected =

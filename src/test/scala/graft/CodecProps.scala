@@ -1,6 +1,7 @@
 package graft
 
 import graft.codec._
+import graft.functions.GenTokens
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Property suite (SURVEY.md §5 plan #2): ∀ token arrays — empty, single,
@@ -33,6 +34,29 @@ object CodecProps extends Properties("codec") {
       val b1 = CodecSelector.encodeAuto(xs)
       val b2 = CodecSelector.encodeAuto(xs)
       java.util.Arrays.equals(b1, b2) && Codecs.decode(b1).sameElements(xs)
+    }
+
+  /** Rows of all six `Tokens` profiles (doc_id % 6), long enough to cross
+    * the selector's FSST probe threshold and its 1 KiB training sample, plus
+    * adversarial shapes: Int.MinValue and mixed-sign wide values.
+    */
+  private val selectorArrays: Gen[Array[Int]] = Gen.oneOf(
+    for {
+      d <- Gen.chooseNum(0L, 100000000L)
+      n <- Gen.frequency(3 -> Gen.chooseNum(200, 1200), 1 -> Gen.chooseNum(0, 9000))
+    } yield GenTokens.generate(d, n),
+    Gen.chooseNum(0, 600).map(n =>
+      Array.tabulate(n)(i => if (i % 3 == 0) Int.MinValue else Int.MaxValue - i * 7919)),
+    Gen.containerOfN[Array, Int](300, Gen.chooseNum(-1000000000, 1000000000)),
+    tokenArrays)
+
+  // the selector hands its FSST probe's table to the encode: the blob must
+  // be exactly the one the chosen codec writes on its own
+  property("auto blob = the chosen codec's own blob, and roundtrips") =
+    Prop.forAll(selectorArrays) { xs =>
+      val blob = CodecSelector.encodeAuto(xs)
+      java.util.Arrays.equals(blob, CodecSelector.choose(xs).encode(xs)) &&
+        Codecs.decode(blob).sameElements(xs)
     }
 
   property("stats match brute-force facts") = Prop.forAll(tokenArrays) { xs =>
