@@ -87,12 +87,10 @@ final class ByteReader(val buf: Array[Byte], var pos: Int) {
 }
 
 object Bytes {
-  /** Encoded length of an unsigned LEB128 varint. */
-  def varLen(v0: Long): Int = {
-    var v = v0; var n = 1
-    while ((v & ~0x7fL) != 0L) { n += 1; v >>>= 7 }
-    n
-  }
+  /** Encoded length of an unsigned LEB128 varint: one byte per started
+    * 7-bit group of the significant bits (0 takes one byte).
+    */
+  def varLen(v: Long): Int = (63 - java.lang.Long.numberOfLeadingZeros(v | 1L)) / 7 + 1
   def zigZagLen(v: Long): Int = varLen((v << 1) ^ (v >> 63))
 
   /** Bits needed to represent an unsigned long range value (0 for 0). */

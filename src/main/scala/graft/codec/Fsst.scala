@@ -233,7 +233,7 @@ object FsstCodec extends Codec {
       var i = 0
       while (i < limit) {
         val w = window(buf, i, limit)
-        val m = set.longest(w, math.min(MaxSymLen, limit - i))
+        val m = if (n == 0) -1 else set.longest(w, math.min(MaxSymLen, limit - i))
         val off = i
         if (m < 0) {
           gains(n + (w.toInt & 0xff)) += 1

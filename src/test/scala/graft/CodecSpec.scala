@@ -113,6 +113,11 @@ class CodecSpec extends AnyFunSuite {
       val w2 = new ByteWriter(); w2.writeZigZag(v)
       assert(w2.size == Bytes.zigZagLen(v))
     }
+    // varLen at every 7-bit group boundary, both sides
+    (0 until 64).flatMap(s => Seq(1L << s, (1L << s) - 1)).foreach { v =>
+      val w3 = new ByteWriter(); w3.writeVarLong(v)
+      assert(w3.size == Bytes.varLen(v), s"v=$v")
+    }
   }
 
 }
